@@ -162,8 +162,11 @@ case class TopKByScore(
 }
 
 /** Capped distinct-long-id accumulator: exact distinct set while it holds
-  * ≤ cap ids, a single overflow bit (and NO retained ids) beyond — state
-  * is ≤ 8·(cap+1) bytes regardless of how hot the group is. */
+  * ≤ cap ids, a single overflow bit (and NO retained ids) beyond. The
+  * SERIALIZED state is ≤ 4 + 8·cap bytes regardless of how hot the group
+  * is; in memory the set is a `java.util.HashSet` of boxed longs — tens
+  * of bytes per id plus table overhead — still bounded by `cap`, but not
+  * by that byte count. */
 final class CappedSetState(val cap: Int) {
   var overflow = false
   var set = new java.util.HashSet[java.lang.Long]()

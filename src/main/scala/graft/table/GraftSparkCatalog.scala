@@ -1000,13 +1000,14 @@ final class GraftV2Table(
     // refuse with direction instead (the library scan path dispatches
     // per file). Checked on whatever list is actually planned — a
     // pruned-away avro file is never read, so never a hazard.
-    def assemble(files: Seq[DataFileEntry]): Seq[String] = {
-      val ps = files.map(f => abs(f.path))
-      require(ps.forall(_.endsWith(".parquet")),
+    // The planned entries become the delegate's file index as they are
+    // (path + recorded size) — nothing is listed or stat'd.
+    def assemble(files: Seq[DataFileEntry]): Seq[org.apache.hadoop.fs.FileStatus] = {
+      require(files.forall(_.path.endsWith(".parquet")),
         s"${t.dir} holds non-parquet data files — read it via " +
           "GraftTable.scan/GraftCatalog (per-file format dispatch), not " +
           "the DSv2 catalog")
-      ps
+      files.map(f => ManifestFileIndex.status(t.dir, f))
     }
     val opts = new util.HashMap[String, String](options.asCaseSensitiveMap())
     // identity directory keys need path recovery; transform-derived keys
@@ -1120,7 +1121,7 @@ final class GraftV2Table(
         val kept = keptFor(filters)
         filters.filter(c => kept.forall(t.provenAll(c)))
       },
-      metadataColScan = Some((req, paths) => {
+      metadataColScan = Some((req, files) => {
         // per-file lineage constants for `_row_id`/`_last_updated_…`:
         // band base + committing snapshot by basename — scoped to the
         // PRUNED paths this scan actually reads, not the whole manifest:
@@ -1129,14 +1130,14 @@ final class GraftV2Table(
         // O(table) driver structure serialized per stage for a scan that
         // kept three files
         def bn(p: String): String = p.substring(p.lastIndexOf('/') + 1)
-        val wanted = paths.map(bn).toSet
+        val wanted = files.map(_.getPath.getName).toSet
         val scoped = entries.filter(f => wanted.contains(bn(f.path)))
         val ridByBn = scoped
           .flatMap(f => f.firstRowId.map(bn(f.path) -> _)).toMap
         val seqByBn = scoped
           .flatMap(f => t.fileSnapId(f.path).map(bn(f.path) -> _)).toMap
         new GraftFileposScan(tableName, t.schema, req,
-          new util.HashMap[String, String](opts), paths,
+          new util.HashMap[String, String](opts), files,
           ridByBn, seqByBn)
       }),
       // manifest-exact scan statistics for CBO: rowCount/sizeInBytes
@@ -1204,7 +1205,7 @@ final class GraftFileposScan(
     tableSchema: StructType,
     required: StructType,
     options: util.Map[String, String],
-    paths: Seq[String],
+    files: Seq[org.apache.hadoop.fs.FileStatus],
     ridByBn: Map[String, Long] = Map.empty,
     seqByBn: Map[String, Long] = Map.empty)
     extends org.apache.spark.sql.connector.read.V1Scan {
@@ -1220,7 +1221,7 @@ final class GraftFileposScan(
       override def buildScan(): org.apache.spark.rdd.RDD[
           org.apache.spark.sql.Row] = {
         val spark = context.sparkSession
-        if (paths.isEmpty)
+        if (files.isEmpty)
           return spark.sparkContext.emptyRDD[org.apache.spark.sql.Row]
         import org.apache.spark.sql.functions.{coalesce, col, substring_index}
         val b = org.apache.spark.sql.classic.GraftBridge
@@ -1235,8 +1236,11 @@ final class GraftFileposScan(
               GraftTable.LineageRidCol, org.apache.spark.sql.types.LongType),
             org.apache.spark.sql.types.StructField(
               GraftTable.LineageSeqCol, org.apache.spark.sql.types.LongType)))
-        val df = spark.read.schema(readSchema)
-          .options(options.asScala.toMap).parquet(paths: _*)
+        val df = ManifestFileIndex.read(spark,
+          new ManifestFileIndex(spark, files, options.asScala.toMap,
+            Some(readSchema)),
+          readSchema, new org.apache.spark.sql.execution.datasources
+            .parquet.ParquetFileFormat)
         lazy val bnCol = substring_index(col("_metadata.file_path"), "/", -1)
         val cols = required.fields.toSeq.map(_.name match {
           case "_file" => col("_metadata.file_path").as("_file")
@@ -1426,14 +1430,17 @@ final class GraftCdcV2Table(
     // seed needs `basePath` path recovery (the same discipline the base
     // table's DSv2 scan uses) — the plain delegate serves the spilled
     // tail batches, whose files materialize every column physically
-    val mkSeedDelegate: Option[(Seq[String], org.apache.spark.sql.types.StructType) =>
+    val mkSeedDelegate: Option[(Seq[org.apache.hadoop.fs.FileStatus],
+        org.apache.spark.sql.types.StructType) =>
         org.apache.spark.sql.connector.read.Scan] =
       if (!t.partitionFields.exists(_.isIdentity)) None
-      else Some { (paths, required) =>
+      else Some { (files, required) =>
         val o = new util.HashMap[String, String](options.asCaseSensitiveMap())
         o.put("basePath", s"${t.dir}/data")
+        val index = new ManifestFileIndex(spark, files, o.asScala.toMap,
+          Some(cdcSchema))
         val b = org.apache.spark.sql.classic.GraftBridge
-          .parquetTable(spark, tableName, paths, cdcSchema, o)
+          .parquetTable(spark, tableName, index, cdcSchema)
           .newScanBuilder(new CaseInsensitiveStringMap(o))
         // honor the plain delegate's required-column set, so a pruned
         // streaming read prunes the seed scan too
@@ -1448,21 +1455,24 @@ final class GraftCdcV2Table(
     // the `_gf_rid`/`_gf_seq` carry cells; parquet serves
     // requested-but-absent columns as NULL) — basePath recovery rides
     // along for identity layouts, same as the plain seed delegate
-    val mkLineageSeed: Option[(Seq[String], org.apache.spark.sql.types.StructType) =>
+    val mkLineageSeed: Option[(Seq[org.apache.hadoop.fs.FileStatus],
+        org.apache.spark.sql.types.StructType) =>
         org.apache.spark.sql.connector.read.Scan] =
       if (!withLineage) None
-      else Some { (paths, readSchema) =>
+      else Some { (files, readSchema) =>
         val o = new util.HashMap[String, String](options.asCaseSensitiveMap())
         if (t.partitionFields.exists(_.isIdentity))
           o.put("basePath", s"${t.dir}/data")
+        val index = new ManifestFileIndex(spark, files, o.asScala.toMap,
+          Some(readSchema))
         org.apache.spark.sql.classic.GraftBridge
-          .parquetTable(spark, tableName, paths, readSchema, o)
+          .parquetTable(spark, tableName, index, readSchema)
           .newScanBuilder(new CaseInsensitiveStringMap(o))
           .build()
       }
     val streamBuilder = new org.apache.spark.sql.classic.GraftPruningScanBuilder(
       spark, tableName, cdcSchema, opts,
-      allPaths = Nil, // streaming rows exist only per micro-batch
+      allFiles = Nil, // streaming rows exist only per micro-batch
       prune = _ => Nil,
       microBatch = Some((mkDelegate, ckpt) =>
         new org.apache.spark.sql.classic.GraftCdcMicroBatchStream(

@@ -4,6 +4,8 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.datasources.orc.OrcFileFormat
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types._
 
@@ -25,7 +27,8 @@ import org.apache.spark.sql.types._
   * }}}
   *
   * Design stance for 100 TB: metadata is O(files), data access is always a
-  * pruned `spark.read.parquet(files*)` — Spark's vectorized reader,
+  * pruned file list served by a [[ManifestFileIndex]] (the manifest IS
+  * the listing; nothing is re-listed or stat'd) — Spark's vectorized reader,
   * whole-stage codegen and FilePartition bin-packing do the heavy lifting
   * (the reference's `planTasks` bin-packing analog,
   * IcebergInputFormat.java:76-118, is Spark's `maxPartitionBytes` packing).
@@ -4921,11 +4924,11 @@ final class GraftTable private (
       (cols.toSeq.sorted.mkString(","), root,
         m.map(x => x._1 + x._3.getOrElse("")).mkString(",")) }
       .map { case ((specCols, root, phys), fs) =>
-        val paths = fs.map(f => Paths.get(dir, f.path).normalize().toString)
-        val avroPaths = paths.filter(_.endsWith(".avro"))
-        val orcPaths = paths.filter(_.endsWith(".orc"))
-        val parqPaths = paths.filterNot(p =>
-          p.endsWith(".avro") || p.endsWith(".orc"))
+        val avroPaths = fs.collect { case f if f.path.endsWith(".avro") =>
+          Paths.get(dir, f.path).normalize().toString }
+        val orcFiles = fs.filter(_.path.endsWith(".orc"))
+        val parqFiles = fs.filterNot(f =>
+          f.path.endsWith(".avro") || f.path.endsWith(".orc"))
         // a column this group's files PREDATE (add-with-default era) is
         // left out of the read schema entirely — its physical values
         // don't exist — and its projection is the stored literal
@@ -4980,30 +4983,46 @@ final class GraftTable private (
           } else Seq( // no row index: materialized cells only
             col(LineageRidCol).as(RowIdCol),
             col(LineageSeqCol).as(LastUpdatedCol))
+        // basePath recovery is needed only for IDENTITY directory keys
+        // (the value exists nowhere else); transform-derived keys
+        // (bucket/days/truncate fields, never in the schema) keep their
+        // source column in the footers, and leaf files without basePath
+        // skip directory discovery entirely
+        val opts: Map[String, String] =
+          if (specCols.exists(physSchema.fieldNames.contains))
+            Map("basePath" -> root)
+          else Map.empty
+        // late-filter pruning: a group whose files hold every column
+        // under its logical name and type reads the table's own column
+        // names, so filters Catalyst pushes into the scan after this
+        // DataFrame was built (`read().filter(k)`) drive the same
+        // manifest walk `scan(filter)` runs up front. Renamed, widened
+        // and defaulted eras would see physical names/types the table's
+        // stats do not speak — their groups never prune this way.
+        val logicalNames =
+          phys.zip(schema.fields).forall { case ((p, t, d), lf) =>
+            p == lf.name && t == lf.dataType && d.isEmpty }
+        def index(group: Seq[DataFileEntry]): ManifestFileIndex = {
+          val statuses = group.map(f => ManifestFileIndex.status(dir, f))
+          new ManifestFileIndex(spark, statuses, opts, Some(readSchema),
+            if (logicalNames) lateKeep(group, statuses)
+            else ManifestFileIndex.keepAll)
+        }
         val branches = Seq(
-          Option.when(parqPaths.nonEmpty) {
-            val r = spark.read.schema(readSchema)
-            // basePath recovery is needed only for IDENTITY directory keys
-            // (the value exists nowhere else); transform-derived keys
-            // (bucket/days/truncate fields, never in the schema) keep their
-            // source column in the footers, and leaf-file paths without
-            // basePath skip directory discovery entirely
-            if (specCols.exists(physSchema.fieldNames.contains))
-              r.option("basePath", root)
-            val df = r.parquet(parqPaths: _*)
+          Option.when(parqFiles.nonEmpty) {
+            val df = ManifestFileIndex.read(spark, index(parqFiles),
+              readSchema, new ParquetFileFormat)
             df.select(base ++ metaCols(real = true) ++
               lineageCols(real = true): _*)
           },
-          Option.when(orcPaths.nonEmpty) {
+          Option.when(orcFiles.nonEmpty) {
             // built-in vectorized ORC source; identity directory keys
             // recover exactly like the parquet branch. No parquet row
             // index exists here — positional MoR refuses ORC targets, so
             // the meta columns are never consumed (null placeholders
             // keep the union positional)
-            val r = spark.read.schema(readSchema)
-            if (specCols.exists(physSchema.fieldNames.contains))
-              r.option("basePath", root)
-            val df = r.orc(orcPaths: _*)
+            val df = ManifestFileIndex.read(spark, index(orcFiles),
+              readSchema, new OrcFileFormat)
             df.select(base ++ metaCols(real = false) ++
               lineageCols(real = false): _*)
           },
@@ -5018,6 +5037,28 @@ final class GraftTable private (
           }).flatten
         branches.reduce(_ union _)
       }.reduce(_ union _)
+  }
+
+  /** [[ManifestFileIndex]] `keep` for a group of files read under the
+    * table's logical column names: the data filters Spark pushed into the
+    * scan that reference only table columns (not `_metadata`, not the
+    * lineage carry cells) run through [[pruneKeep]], matched back to
+    * their entries by qualified path. */
+  private def lateKeep(
+      files: Seq[DataFileEntry],
+      statuses: Seq[org.apache.hadoop.fs.FileStatus])
+      : Seq[org.apache.spark.sql.catalyst.expressions.Expression] =>
+        org.apache.hadoop.fs.FileStatus => Boolean = { filters =>
+    val names = schema.fieldNames.toSet
+    filters
+      .filter(e => e.deterministic && e.references.forall(a => names(a.name)))
+      .reduceOption(org.apache.spark.sql.catalyst.expressions.And) match {
+      case None => _ => true
+      case Some(p) =>
+        val k = pruneKeep(p)
+        val byPath = statuses.map(_.getPath).zip(files).toMap
+        st => byPath.get(st.getPath).forall(k)
+    }
   }
 
   /** Schema as read (user schema + virtual snapshot column, like
@@ -5037,7 +5078,14 @@ final class GraftTable private (
   }
 
   /** Full-table read at a snapshot (empty-table scan S11: a table with no
-    * snapshots yields an empty DataFrame with the right schema). */
+    * snapshots yields an empty DataFrame with the right schema).
+    *
+    * Building the DataFrame lists and stats no data file: the scan reads
+    * the manifest's files through a [[ManifestFileIndex]]. A filter
+    * applied LATER (`read(spark).filter(k)`, or a SQL `WHERE` over it)
+    * still prunes files: Spark pushes it into the scan at physical
+    * planning and the index runs the same manifest walk
+    * (`pruneKeep`) that `scan(spark, Some(k))` runs up front. */
   def read(spark: SparkSession, snapshotId: Option[Long] = None): DataFrame =
     scan(spark, filter = None, projection = Nil, snapshotId = snapshotId)
 
@@ -5176,7 +5224,8 @@ final class GraftTable private (
     log.snapshots.filter(_.committedAt <= timestampMillis).lastOption
 
   /** Read the table as of a wall-clock time; empty before the first
-    * commit. */
+    * commit. Like [[read]], a later `.filter(k)` prunes the pinned
+    * snapshot's files at physical planning. */
   def readAsOf(spark: SparkSession, timestampMillis: Long): DataFrame =
     snapshotAsOfTime(timestampMillis) match {
       case Some(s) => read(spark, Some(s.snapshotId))

@@ -1,5 +1,7 @@
 package org.apache.spark.sql.classic
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
 
@@ -25,22 +27,32 @@ object GraftBridge {
       : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
     df.asInstanceOf[Dataset[_]].queryExecution.analyzed
 
-  /** Spark's own vectorized-parquet DSv2 table over an explicit file list
-    * with a fixed schema — the scan engine behind [[graft.table
-    * .GraftSparkCatalog]]. Constructed here because the FileTable family
+  /** `StructType.asNullable` (nested fields too) — what a file-source
+    * relation declares its data schema as; private to Spark. */
+  def asNullable(schema: org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.types.StructType = schema.asNullable
+
+  /** Spark's own vectorized-parquet DSv2 table over the files (and read
+    * options) of a [[graft.table.ManifestFileIndex]] with a fixed schema —
+    * the scan engine behind [[graft.table.GraftSparkCatalog]]. The table's
+    * `fileIndex` is the manifest index, so building the scan never lists
+    * or stats the files. Constructed here because the FileTable family
     * is package-private to org.apache.spark.sql. */
   def parquetTable(
       spark: org.apache.spark.sql.SparkSession,
       name: String,
-      paths: Seq[String],
-      schema: org.apache.spark.sql.types.StructType,
-      options: java.util.Map[String, String])
+      index: graft.table.ManifestFileIndex,
+      schema: org.apache.spark.sql.types.StructType)
       : org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable =
-    org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable(
+    new org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable(
       name,
       spark.asInstanceOf[SparkSession],
-      new org.apache.spark.sql.util.CaseInsensitiveStringMap(options),
-      paths,
+      new org.apache.spark.sql.util.CaseInsensitiveStringMap(index.options.asJava),
+      Nil,
       Some(schema),
-      classOf[org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat])
+      classOf[org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat]) {
+      override lazy val fileIndex
+          : org.apache.spark.sql.execution.datasources.PartitioningAwareFileIndex =
+        index
+    }
 }

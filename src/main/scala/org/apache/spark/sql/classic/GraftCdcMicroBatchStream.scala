@@ -4,6 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.fs.FileStatus
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, Literal, UnsafeProjection}
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory, Scan}
@@ -14,7 +15,7 @@ import org.apache.spark.sql.types.{LongType, StringType, StructType}
 import org.apache.spark.sql.vectorized.{ColumnarBatch, ColumnVector}
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.table.{DataFileEntry, GraftTable, SnapshotDiffs}
+import graft.table.{DataFileEntry, GraftTable, ManifestFileIndex, SnapshotDiffs}
 
 /** CDC stream offset: the snapshot-id cursor, plus — ONLY while the
   * offset-0 seed is being served in paced, file-granular steps — the
@@ -280,7 +281,7 @@ final class GraftCdcMicroBatchStream(
     startAfter: Long,
     checkpointLocation: String,
     declaredSchema: StructType,
-    mkDelegate: Seq[String] => Scan,
+    mkDelegate: Seq[FileStatus] => Scan,
     maxFilesPerTrigger: Option[Int] = None,
     maxRowsPerTrigger: Option[Long] = None,
     maxBytesPerTrigger: Option[Long] = None,
@@ -290,7 +291,7 @@ final class GraftCdcMicroBatchStream(
     // physically and keep the plain delegate). Takes the REQUIRED
     // schema too, so a column-pruned streaming read prunes the seed
     // scan exactly like the plain delegate would.
-    mkSeedDelegate: Option[(Seq[String], StructType) => Scan] = None,
+    mkSeedDelegate: Option[(Seq[FileStatus], StructType) => Scan] = None,
     // ROW-LINEAGE stream (the source table carries graft.row-lineage):
     // every batch additionally emits `_row_id`/`_last_updated_…` —
     // spill batches materialize them as physical columns via
@@ -300,7 +301,7 @@ final class GraftCdcMicroBatchStream(
     // `_gf_rid`/`_gf_seq` carry cells, NULL where a file never carried
     // them).
     lineage: Boolean = false,
-    mkLineageSeed: Option[(Seq[String], StructType) => Scan] = None)
+    mkLineageSeed: Option[(Seq[FileStatus], StructType) => Scan] = None)
     extends MicroBatchStream with SupportsAdmissionControl
     with SupportsTriggerAvailableNow {
 
@@ -547,10 +548,9 @@ final class GraftCdcMicroBatchStream(
     val cleanParts: Array[InputPartition] =
       if (cleanFiles.isEmpty) Array.empty
       else {
-        val paths = cleanFiles.map(f =>
-          Paths.get(dir, f.path).normalize().toString)
-        val scan = mkSeedDelegate.map(_(paths, output))
-          .getOrElse(mkDelegate(paths))
+        val statuses = cleanFiles.map(f => ManifestFileIndex.status(dir, f))
+        val scan = mkSeedDelegate.map(_(statuses, output))
+          .getOrElse(mkDelegate(statuses))
         val (srcOrd, identityLayout) = layout(scan)
         val batch = scan.toBatch
         val inner = batch.planInputPartitions()
@@ -571,8 +571,9 @@ final class GraftCdcMicroBatchStream(
     // back into ONE partition in file order so the count stays global.
     val dvParts: Seq[InputPartition] = dvFiles.map { f =>
       val path = Paths.get(dir, f.path).normalize().toString
-      val scan = mkSeedDelegate.map(_(Seq(path), output))
-        .getOrElse(mkDelegate(Seq(path)))
+      val st = ManifestFileIndex.status(dir, f)
+      val scan = mkSeedDelegate.map(_(Seq(st), output))
+        .getOrElse(mkDelegate(Seq(st)))
       val (srcOrd, _) = layout(scan)
       val batch = scan.toBatch
       val parts = batch.planInputPartitions()
@@ -627,7 +628,7 @@ final class GraftCdcMicroBatchStream(
         graft.table.GraftTable.LineageSeqCol, LongType, nullable = true)))
     files.map { f =>
       val path = Paths.get(dir, f.path).normalize().toString
-      val scan = mk(Seq(path), readSchema)
+      val scan = mk(Seq(ManifestFileIndex.status(dir, f)), readSchema)
       val rs = scan.readSchema()
       val srcOrd = output.fields.toSeq.zipWithIndex.map { case (fld, i) =>
         if (i == ctOut || i == vcOut || i == ridOut || i == seqOut) -1
@@ -708,12 +709,15 @@ final class GraftCdcMicroBatchStream(
         case None => spark.conf.unset(tsKey)
       }
     }
-    val paths = scala.util.Using.resource(Files.list(spill)) { s =>
-      s.iterator().asScala.map(_.toString)
-        .filter(_.endsWith(".parquet")).toSeq.sorted
+    // the spill is this stream's own output, not manifest-listed: its
+    // files are sized from the directory listing the stream does anyway
+    val spilled = scala.util.Using.resource(Files.list(spill)) { s =>
+      s.iterator().asScala
+        .filter(_.toString.endsWith(".parquet")).toSeq.sortBy(_.toString)
     }
-    if (paths.isEmpty) Array.empty
-    else mkDelegate(paths).toBatch.planInputPartitions()
+    if (spilled.isEmpty) Array.empty
+    else mkDelegate(spilled.map(p => ManifestFileIndex.status(p, Files.size(p))))
+      .toBatch.planInputPartitions()
   }
 
   override def createReaderFactory(): PartitionReaderFactory =

@@ -78,7 +78,7 @@ private[classic] object GraftReadLimits {
 final class GraftMicroBatchStream(
     dir: String,
     startAfter: Long,
-    mkDelegate: Seq[String] => Scan,
+    mkDelegate: Seq[org.apache.hadoop.fs.FileStatus] => Scan,
     // rename/widening-era check, fresh-table-aware (the visibility of
     // the era machinery is table-package-scoped; the catalog closes
     // over it here)
@@ -229,9 +229,8 @@ final class GraftMicroBatchStream(
     }
     if (appended.isEmpty) Array.empty
     else {
-      val paths = appended.map(f =>
-        java.nio.file.Paths.get(dir, f.path).normalize().toString)
-      mkDelegate(paths).toBatch.planInputPartitions()
+      mkDelegate(appended.map(f => graft.table.ManifestFileIndex.status(dir, f)))
+        .toBatch.planInputPartitions()
     }
   }
 

@@ -1,5 +1,8 @@
 package org.apache.spark.sql.classic
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.FileStatus
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.connector.expressions.aggregate.Aggregation
 import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, SupportsPushDownAggregates, SupportsPushDownRequiredColumns, SupportsPushDownVariantExtractions, VariantExtraction}
@@ -12,7 +15,8 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * delegating to Spark's parquet source. Spark hands this builder the
   * resolved Catalyst data filters (the `SupportsPushDownCatalystFilters`
   * path every `FileScanBuilder` rides); `prune` maps them to the kept
-  * file list — min/max stats, manifest blooms, AND the hidden-partition
+  * file list (manifest entries as `FileStatus`es — nothing is listed or
+  * stat'd) — min/max stats, manifest blooms, AND the hidden-partition
   * transform conjuncts, the same `GraftTable.pruneKeep` the library scan
   * path uses — so a DSv2 `WHERE id = 7` on a bucketed table plans 1/N of
   * the files instead of all of them. Everything stays residual at this
@@ -34,15 +38,15 @@ final class GraftPruningScanBuilder(
     tableName: String,
     schema: StructType,
     options: java.util.Map[String, String],
-    allPaths: => Seq[String], // by-name: a filtered scan never assembles it
-    prune: Seq[Expression] => Seq[String],
+    allFiles: => Seq[FileStatus], // by-name: a filtered scan never assembles it
+    prune: Seq[Expression] => Seq[FileStatus],
     keyGrouped: Option[(
         Array[org.apache.spark.sql.connector.expressions.Expression],
         String => Option[Int])] = None,
     aggPush: (Aggregation, Seq[Expression]) => Option[Scan] = (_, _) => None,
-    microBatch: Option[(Seq[String] => Scan, String) => MicroBatchStream] = None,
+    microBatch: Option[(Seq[FileStatus] => Scan, String) => MicroBatchStream] = None,
     claimFilters: Seq[Expression] => Seq[Expression] = _ => Nil,
-    metadataColScan: Option[(StructType, Seq[String]) => Scan] = None,
+    metadataColScan: Option[(StructType, Seq[FileStatus]) => Scan] = None,
     scanStats: Seq[Expression] => Option[
       org.apache.spark.sql.connector.read.Statistics] = _ => None)
   extends ScanBuilder
@@ -144,10 +148,10 @@ final class GraftPruningScanBuilder(
         !schema.fieldNames.contains(n))) {
       val mk = metadataColScan.getOrElse(throw new IllegalStateException(
         s"$tableName scan requires metadata columns it does not serve"))
-      return mk(required, if (pushed.isEmpty) allPaths else prune(pushed))
+      return mk(required, if (pushed.isEmpty) allFiles else prune(pushed))
     }
     // rebuildable delegate: the runtime-filter wrapper re-invokes this
-    // with a narrower path list when a DPP predicate lands, re-applying
+    // with a narrower file list when a DPP predicate lands, re-applying
     // the SAME pushed filters / required columns to the new scan.
     // ONLY the residual filters reach the parquet source: a CLAIMED
     // filter's column may be pruned out of the read schema (nothing
@@ -155,9 +159,11 @@ final class GraftPruningScanBuilder(
     // unread column silently drops every row; its row-group skipping
     // would be a no-op anyway — every kept file all-matches by the
     // claim proof.
-    def mkDelegate(paths: Seq[String]): Scan = {
+    def mkDelegate(files: Seq[FileStatus]): Scan = {
+      val index = new graft.table.ManifestFileIndex(
+        spark, files, options.asScala.toMap, Some(schema))
       val b = GraftBridge
-        .parquetTable(spark, tableName, paths, schema, options)
+        .parquetTable(spark, tableName, index, schema)
         .newScanBuilder(new CaseInsensitiveStringMap(options))
       b match {
         case f: SupportsPushDownCatalystFilters => f.pushFilters(residual)
@@ -176,23 +182,23 @@ final class GraftPruningScanBuilder(
       }
       b.build()
     }
-    val paths = if (pushed.isEmpty) allPaths else prune(pushed)
+    val files = if (pushed.isEmpty) allFiles else prune(pushed)
     keyGrouped match {
       // a pruned-to-empty scan keeps the plain shape (a zero-partition
       // KeyGroupedPartitioning has nothing to report). Key-grouped scans
       // never take the runtime-filter wrapper: their partitions must
       // stay bucket-aligned with the join's other side.
-      case Some((keys, bucketOf)) if paths.nonEmpty =>
-        new GraftKeyGroupedScan(mkDelegate(paths), keys, bucketOf)
-      case Some(_) => mkDelegate(paths)
+      case Some((keys, bucketOf)) if files.nonEmpty =>
+        new GraftKeyGroupedScan(mkDelegate(files), keys, bucketOf)
+      case Some(_) => mkDelegate(files)
       case None =>
-        new GraftRuntimeFilterScan(mkDelegate, paths, pushed, prune, schema,
+        new GraftRuntimeFilterScan(mkDelegate, files, pushed, prune, schema,
           microBatch.map(mk => (ckpt: String) => mk(mkDelegate, ckpt)),
           variantPushed = variantEx.nonEmpty,
           // same pruned file list, metadata-column-capable scan — the
           // repair path for the upstream rewrite dropping metadata attrs
           metadataRepair = metadataColScan.map(mk =>
-            (req: StructType) => mk(req, paths)),
+            (req: StructType) => mk(req, files)),
           // manifest-exact statistics for the statically-kept file set
           // (rowCount + NDV colStats) — CBO-grade where the delegate
           // only guesses from bytes

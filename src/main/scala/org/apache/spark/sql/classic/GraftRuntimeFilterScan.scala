@@ -1,5 +1,6 @@
 package org.apache.spark.sql.classic
 
+import org.apache.hadoop.fs.FileStatus
 import org.apache.spark.sql.catalyst.expressions.{AttributeReference, EqualTo, Expression, In, Literal}
 import org.apache.spark.sql.connector.expressions.{FieldReference, LiteralValue, NamedReference, Expression => V2Expression}
 import org.apache.spark.sql.connector.expressions.filter.Predicate
@@ -45,10 +46,10 @@ import org.apache.spark.sql.types.{AtomicType, StructType}
   * the delegate parquet machinery is internal to org.apache.spark.sql.
   */
 final class GraftRuntimeFilterScan(
-    mkDelegate: Seq[String] => Scan,
-    initialPaths: Seq[String],
+    mkDelegate: Seq[FileStatus] => Scan,
+    initialFiles: Seq[FileStatus],
     staticPushed: Seq[Expression],
-    prune: Seq[Expression] => Seq[String],
+    prune: Seq[Expression] => Seq[FileStatus],
     tableSchema: StructType,
     microBatch: Option[String => org.apache.spark.sql.connector.read.streaming.MicroBatchStream] = None,
     val variantPushed: Boolean = false,
@@ -77,17 +78,17 @@ final class GraftRuntimeFilterScan(
       .getOrElse(super.toMicroBatchStream(checkpointLocation))
   }
 
-  @volatile private var keptPaths: Seq[String] = initialPaths
-  @volatile private var inner: Scan = mkDelegate(initialPaths)
+  @volatile private var keptFiles: Seq[FileStatus] = initialFiles
+  @volatile private var inner: Scan = mkDelegate(initialFiles)
 
   /** Visible to tests/diagnostics: how many files the scan currently
     * plans over (shrinks when a runtime filter lands). */
-  def plannedFileCount: Int = keptPaths.size
+  def plannedFileCount: Int = keptFiles.size
 
   override def readSchema(): StructType = inner.readSchema()
   override def toBatch: Batch = inner.toBatch
   override def description(): String =
-    s"graft runtime-filterable (${keptPaths.size} files) over " +
+    s"graft runtime-filterable (${keptFiles.size} files) over " +
       inner.description()
 
   /** Forward the parquet delegate's size/row estimates — hiding them
@@ -101,7 +102,7 @@ final class GraftRuntimeFilterScan(
     // set, so once a runtime (DPP) filter has narrowed the scan the
     // rebuilt delegate's estimate is the honest one again.
     val static =
-      if (keptPaths.size == initialPaths.size) graftStats() else None
+      if (keptFiles.size == initialFiles.size) graftStats() else None
     static.getOrElse(inner match {
       case s: SupportsReportStatistics => s.estimateStatistics()
       case _ => new Statistics {
@@ -134,10 +135,10 @@ final class GraftRuntimeFilterScan(
       // the walk is over the full manifest; intersecting with the
       // statically kept list keeps "runtime filters only ever narrow"
       // true by construction even if a stats alias drifts between walks
-      val keep = kept.toSet
-      val next = keptPaths.filter(keep)
-      if (next.size != keptPaths.size) {
-        keptPaths = next
+      val keep = kept.map(_.getPath).toSet
+      val next = keptFiles.filter(f => keep(f.getPath))
+      if (next.size != keptFiles.size) {
+        keptFiles = next
         inner = mkDelegate(next)
       }
     }

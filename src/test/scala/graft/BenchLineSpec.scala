@@ -10,10 +10,25 @@ class BenchLineSpec extends AnyFunSuite {
 
   private val allQueries = SparkEntry.queries.keys.toSeq.sorted.map(_ -> 0.123)
 
+  /** `Bench.scala` found from where this spec's classes were loaded
+    * (walking up to the checkout that holds the source), so the guard
+    * does not depend on the test JVM's working directory. */
+  private def benchSource: java.nio.file.Path = {
+    val rel = java.nio.file.Paths.get("src", "main", "scala", "graft", "Bench.scala")
+    val classes = java.nio.file.Paths.get(
+      classOf[BenchLineSpec].getProtectionDomain.getCodeSource.getLocation.toURI)
+    Iterator.iterate(classes)(_.getParent).takeWhile(_ != null)
+      .map(_.resolve(rel)).find(java.nio.file.Files.isRegularFile(_))
+      .getOrElse(fail(s"no $rel above $classes"))
+  }
+
   test("stdout summary line parses as JSON and stays under the tail budget") {
     val headline = allQueries.take(10)
     val line = Bench.summaryLine(12.345, headline, allQueries, "/tmp/sf")
     assert(!line.contains("\n"))
+    // sbt forwards the forked main's stdout unprefixed (run /
+    // outputStrategy): the last stdout line is the JSON itself
+    assert(line.startsWith("{"), s"summary does not start with '{': $line")
     assert(line.length < 1500, s"line too long for the driver tail: ${line.length}")
     val parsed = graft.util.Json.parseObject(line)
     assert(parsed("metric") == "total")
@@ -35,8 +50,7 @@ class BenchLineSpec extends AnyFunSuite {
     // summary and the tail fails to parse (BENCH_r16/r17 parsed:null).
     // Guard at the source level: the only print of `fullJson` is the
     // bench_full.json file write.
-    val src = java.nio.file.Files.readString(
-      java.nio.file.Paths.get("src/main/scala/graft/Bench.scala"))
+    val src = java.nio.file.Files.readString(benchSource)
     assert(!src.contains("System.err.println(fullJson"),
       "full map echoed to stderr — driver tail parse breaks")
     assert(!src.contains("println(fullJson"),

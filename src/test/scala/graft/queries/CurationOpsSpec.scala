@@ -29,6 +29,35 @@ class CurationOpsSpec extends SparkSpecBase {
     assert(out.map(_.toSeq).toSeq == again.map(_.toSeq).toSeq)
   }
 
+  test("d08, d10 and g01 leave no persisted RDD behind once consumed") {
+    val sc = spark.sparkContext
+    // the graph loops' edge, degree and label caches must be released by
+    // the time the result is read — Bench/Verify's clearCache between
+    // queries only clears Dataset caches, never RDD persists
+    def leftBy(run: => Unit): Set[Int] = {
+      val before = sc.getPersistentRDDs.keySet
+      run
+      sc.getPersistentRDDs.keySet.toSet -- before
+    }
+    Seq("d08_dup_clusters", "d10_canonical_per_cluster", "g01_graph_rank")
+      .foreach { q =>
+        val left = leftBy(Dedup.queries(q)(spark, sfDir).collect())
+        assert(left.isEmpty, s"$q left persisted RDDs $left")
+      }
+    // the distributed (multi-partition) label loop too: 60k directed
+    // edges size its partitioner past one partition
+    val pairs = (0L until 30000L).map(i => (2 * i, 2 * i + 1))
+      .toDF("doc_a", "doc_b")
+    var labels = Map.empty[Long, Long]
+    val left = leftBy {
+      labels = Dedup.dupClusters(pairs).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    }
+    assert(left.isEmpty, s"distributed dupClusters left persisted RDDs $left")
+    assert(labels.size == 60000 &&
+      labels.forall { case (v, l) => l == (v & ~1L) })
+  }
+
   test("s15 MMR: distinct picks, relevance-first opening, non-increasing scores") {
     val rows = Similarity.queries("s15_mmr_rerank")(spark, sfDir)
       .orderBy("rank").collect()

@@ -34,10 +34,11 @@ class CdcSeedPacingPropertySpec extends SparkSpecBase {
     StructField("_change_type", StringType) :+
     StructField("snapshot__id", LongType))
 
-  private def mkDelegate(paths: Seq[String]) = {
+  private def mkDelegate(files: Seq[org.apache.hadoop.fs.FileStatus]) = {
     val o = new java.util.HashMap[String, String]()
+    val index = new ManifestFileIndex(spark, files, Map.empty, Some(cdcSchema))
     org.apache.spark.sql.classic.GraftBridge
-      .parquetTable(spark, "pace", paths, cdcSchema, o)
+      .parquetTable(spark, "pace", index, cdcSchema)
       .newScanBuilder(
         new org.apache.spark.sql.util.CaseInsensitiveStringMap(o))
       .build()

@@ -366,10 +366,11 @@ class CdcStreamSpec extends SparkSpecBase {
     val cdcSchema = StructType(schema.fields.toSeq :+
       StructField("_change_type", StringType) :+
       StructField("snapshot__id", LongType))
-    def mkDelegate(paths: Seq[String]) = {
+    def mkDelegate(files: Seq[org.apache.hadoop.fs.FileStatus]) = {
       val o = new java.util.HashMap[String, String]()
+      val index = new ManifestFileIndex(spark, files, Map.empty, Some(cdcSchema))
       org.apache.spark.sql.classic.GraftBridge
-        .parquetTable(spark, "c16", paths, cdcSchema, o)
+        .parquetTable(spark, "c16", index, cdcSchema)
         .newScanBuilder(
           new org.apache.spark.sql.util.CaseInsensitiveStringMap(o))
         .build()
