@@ -3,11 +3,8 @@ package graft.table
 import java.io.ByteArrayOutputStream
 import java.util.Base64
 
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
 import org.apache.parquet.column.values.bloomfilter.{BlockSplitBloomFilter, BloomFilter}
 import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.api.Binary
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -57,39 +54,35 @@ object FileBloom {
     case _ => false
   }
 
-  /** Read + OR-merge the per-row-group bloom filters of `columns` from a
-    * written file's metadata. A column missing a filter in ANY row group
-    * (writer fell back, e.g. fully dictionary-encoded chunk) yields no
-    * entry — callers then simply never skip on it. */
-  def harvest(
-      absPath: String,
-      conf: Configuration,
+  /** OR-merge the per-row-group bloom filters of `columns` from an open
+    * reader's file (the footer read of [[ParquetStats.forFile]]). A
+    * column missing a filter in ANY row group (writer fell back, e.g.
+    * fully dictionary-encoded chunk) yields no entry — callers then
+    * simply never skip on it. */
+  private[table] def harvest(
+      reader: ParquetFileReader,
       columns: Set[String]): Map[String, String] = {
     if (columns.isEmpty) return Map.empty
-    val reader = ParquetFileReader.open(
-      HadoopInputFile.fromPath(new Path(absPath), conf))
-    try {
-      val blocks = reader.getFooter.getBlocks.asScala.toSeq
-      columns.flatMap { c =>
-        val perGroup: Seq[Option[BloomFilter]] = blocks.map { b =>
-          b.getColumns.asScala
-            .find(ch => ch.getPath.toDotString == c)
-            .flatMap(ch => Option(reader.readBloomFilter(ch)))
-        }
-        if (perGroup.isEmpty || perGroup.exists(_.isEmpty)) None
+    val blocks = reader.getFooter.getBlocks.asScala.toSeq
+    columns.flatMap { c =>
+      val perGroup: Seq[Option[BloomFilter]] = blocks.map { b =>
+        b.getColumns.asScala
+          .find(ch => ch.getPath.toDotString == c)
+          .flatMap(ch => Option(reader.readBloomFilter(ch)))
+      }
+      if (perGroup.isEmpty || perGroup.exists(_.isEmpty)) None
+      else {
+        val filters = perGroup.flatten
+        val head = filters.head
+        if (filters.tail.exists(f => !head.canMergeFrom(f))) None
         else {
-          val filters = perGroup.flatten
-          val head = filters.head
-          if (filters.tail.exists(f => !head.canMergeFrom(f))) None
-          else {
-            filters.tail.foreach(head.merge)
-            val bos = new ByteArrayOutputStream(head.getBitsetSize)
-            head.writeTo(bos)
-            Some(c -> Base64.getEncoder.encodeToString(bos.toByteArray))
-          }
+          filters.tail.foreach(head.merge)
+          val bos = new ByteArrayOutputStream(head.getBitsetSize)
+          head.writeTo(bos)
+          Some(c -> Base64.getEncoder.encodeToString(bos.toByteArray))
         }
-      }.toMap
-    } finally reader.close()
+      }
+    }.toMap
   }
 
   /** May `value` (a Catalyst literal value for a column of type `dt`) be

@@ -578,15 +578,17 @@ object GraftProcedures {
     // discovery-only columns are the Hive-layout partition columns (in
     // discovery order, with Spark's inferred types)
     val full = spark.read.parquet(srcDir).schema
-    val footer = spark.read.parquet(files.head).schema
+    // footers convert directly: no Spark job per file
+    val conf = spark.sessionState.newHadoopConf()
+    val footer = ParquetStats.footerSchema(files.head, conf, spark)
     val partCols = full.fieldNames.filterNot(footer.fieldNames.contains).toSeq
     // FOOTER UNIFORMITY before any metadata lands: importFiles would
     // refuse a straggler footer per file, but by then create() has
     // committed metadata.json — validate the whole set up front so a
     // mixed-schema directory refuses with the directory untouched
     val expect = footer.fields.map(f => f.name -> f.dataType).sortBy(_._1).toSeq
-    files.foreach { f =>
-      val fs = spark.read.parquet(f).schema
+    files.tail.foreach { f =>
+      val fs = ParquetStats.footerSchema(f, conf, spark)
       require(fs.fields.map(x => x.name -> x.dataType).sortBy(_._1).toSeq
           == expect,
         s"$f footer schema differs from ${files.head} — a graft table " +

@@ -1598,12 +1598,14 @@ final class GraftTable private (
       Files.createDirectories(dstDir)
       val dst = dstDir.resolve(name)
       Files.move(src, dst, StandardCopyOption.REPLACE_EXISTING)
-      val (rows, stats) = fmt match {
-        case "parquet" => ParquetStats.forFile(dst.toString, conf)
+      val (rows, stats, blooms) = fmt match {
+        case "parquet" =>
+          val m = ParquetStats.forFile(dst.toString, conf, bloomColumns)
+          (m.rowCount, m.stats, m.blooms)
         case "orc" => (GraftTable.orcRowCount(dst.toString, conf),
-          Map.empty[String, ColumnStats])
+          Map.empty[String, ColumnStats], Map.empty[String, String])
         case _ => (graft.sources.AvroSource.countRecords(dst.toString, conf),
-          Map.empty[String, ColumnStats])
+          Map.empty[String, ColumnStats], Map.empty[String, String])
       }
       // partition columns are absent from the file footers; synthesize
       // exact min=max=value stats so the same sound min/max pruning
@@ -1616,9 +1618,6 @@ final class GraftTable private (
         val dt = pf.map(_.derivedType).getOrElse(schema(c).dataType)
         pf.map(_.statName).getOrElse(c) -> PartitionValues.stats(v, dt, rows)
       }
-      val blooms =
-        if (fmt == "parquet") FileBloom.harvest(dst.toString, conf, bloomColumns)
-        else Map.empty[String, String]
       val rel = (partDirs :+ name).mkString("/")
       // lineage-carry columns are physical but never schema: their
       // footer stats stay out of the manifest (pruning/envelopes only
@@ -5721,8 +5720,10 @@ final class GraftTable private (
     * commit, so it survives interleaved non-stream commits AND snapshot
     * expiration; rollback adopts the TARGET's map, so replaying a rolled-
     * back batch re-ingests instead of being dropped as a re-delivery. */
-  def streamCursors: Map[String, Long] =
-    log.current.flatMap(_.summary.get(SummaryStreamCursors)) match {
+  def streamCursors: Map[String, Long] = cursorsOf(log)
+
+  private def cursorsOf(lg: SnapshotLog): Map[String, Long] =
+    lg.current.flatMap(_.summary.get(SummaryStreamCursors)) match {
       case None => Map.empty
       case Some(json) => graft.util.Json.parseObject(json)
         .map { case (k, v) => k -> v.asInstanceOf[Long] }
@@ -5819,6 +5820,12 @@ final class GraftTable private (
     if (relPaths.isEmpty) return None
     var current: Seq[java.nio.file.Path] =
       relPaths.map(r => Paths.get(dir, r))
+    // each footer is read once, by the first attempt that commits (a
+    // retry only renames the same bytes), with the session's conf
+    lazy val metas = {
+      val conf = SparkSession.active.sessionState.newHadoopConf()
+      current.map(p => ParquetStats.forFile(p.toString, conf, bloomColumns))
+    }
     // commit() is handed newFiles = Nil: its failure paths DELETE the
     // files it is given, but these files hold the only copy of the
     // epoch's rows — a lost commit race must retry with the files
@@ -5826,40 +5833,40 @@ final class GraftTable private (
     // commit-loss cleanup commit() would have done is taken over here:
     // any terminal failure deletes the staged/renamed files.
     try withCommitRetry() {
-      val cursors = streamCursors
+      // ONE log read per attempt: the cursors and the commit's base come
+      // from the same log (commit() re-reads it once more, post-claim)
+      val lg = log
+      val cursors = cursorsOf(lg)
       if (cursors.get(sinkId).exists(_ >= batchId)) {
         current.foreach(Files.deleteIfExists)
         None
       } else {
-        val lg = log
         val snapId = lg.nextId
         val token = java.util.UUID.randomUUID().toString.take(8)
-        val conf = new org.apache.hadoop.conf.Configuration()
-        val bloomCols = bloomColumns
-        val entries = current.zipWithIndex.map { case (src, i) =>
-          // partitioned epochs keep the batch layout: the writer task
-          // placed the file under its <field>=<value>/ segments; derive
-          // the partition values and synthesized stats from the path
-          // exactly as the batch write does
-          val segs = Paths.get(dir, "data").relativize(src)
-            .iterator().asScala.map(_.toString).toSeq.dropRight(1)
-          val partition: Map[String, Option[String]] = segs.map { seg =>
-            val (c, raw) = seg.splitAt(seg.indexOf('='))
-            c -> PartitionValues.decode(raw.drop(1))
-          }.toMap
-          val name = f"part-$snapId%05d-$token-$i%05d.parquet"
-          val dst = src.getParent.resolve(name)
-          Files.move(src, dst, StandardCopyOption.REPLACE_EXISTING)
-          val (rows, stats) = ParquetStats.forFile(dst.toString, conf)
-          val partStats = partition.map { case (c, v) =>
-            val pf = partitionFields.find(_.fieldName == c)
-            val dt = pf.map(_.derivedType).getOrElse(schema(c).dataType)
-            pf.map(_.statName).getOrElse(c) ->
-              PartitionValues.stats(v, dt, rows)
-          }
-          val blooms = FileBloom.harvest(dst.toString, conf, bloomCols)
-          DataFileEntry((Seq("data") ++ segs :+ name).mkString("/"),
-            rows, Files.size(dst), stats ++ partStats, partition, blooms)
+        val entries = current.zip(metas).zipWithIndex.map {
+          case ((src, meta), i) =>
+            // partitioned epochs keep the batch layout: the writer task
+            // placed the file under its <field>=<value>/ segments; derive
+            // the partition values and synthesized stats from the path
+            // exactly as the batch write does
+            val segs = Paths.get(dir, "data").relativize(src)
+              .iterator().asScala.map(_.toString).toSeq.dropRight(1)
+            val partition: Map[String, Option[String]] = segs.map { seg =>
+              val (c, raw) = seg.splitAt(seg.indexOf('='))
+              c -> PartitionValues.decode(raw.drop(1))
+            }.toMap
+            val name = f"part-$snapId%05d-$token-$i%05d.parquet"
+            val dst = src.getParent.resolve(name)
+            Files.move(src, dst, StandardCopyOption.REPLACE_EXISTING)
+            val partStats = partition.map { case (c, v) =>
+              val pf = partitionFields.find(_.fieldName == c)
+              val dt = pf.map(_.derivedType).getOrElse(schema(c).dataType)
+              pf.map(_.statName).getOrElse(c) ->
+                PartitionValues.stats(v, dt, meta.rowCount)
+            }
+            DataFileEntry((Seq("data") ++ segs :+ name).mkString("/"),
+              meta.rowCount, Files.size(dst), meta.stats ++ partStats,
+              partition, meta.blooms)
         }
         // a lost commit race retries with a NEW snapshot id — the next
         // attempt must move from THIS attempt's canonical names
@@ -5962,10 +5969,16 @@ final class GraftTable private (
       }
     val expectedFooter =
       schema.fieldNames.filterNot(expectedKeys.contains).sorted.toSeq
-    // per-file footer schema check (strict — no union/merge leniency)
-    absPaths.foreach { p =>
+    // per-file footer schema check (strict — no union/merge leniency),
+    // on the footer's own schema conversion (no Spark job per file). It
+    // is the ONE footer read per file: its stats and blooms ride into
+    // every commit attempt, which only renames the same bytes.
+    val conf = spark.sessionState.newHadoopConf()
+    val metas = absPaths.map { p =>
       partitionOf(p): Unit
-      val fs = spark.read.parquet(p).schema
+      val meta = ParquetStats.forFile(p, conf, bloomColumns)
+      val fs = org.apache.spark.sql.classic.GraftBridge
+        .parquetFooterSchema(spark, p, meta.fileMetaData)
       require(fs.fieldNames.sorted.toSeq == expectedFooter,
         s"$p columns [${fs.fieldNames.sorted.mkString(",")}] must match " +
           s"table schema [${expectedFooter.mkString(",")}]" +
@@ -5976,6 +5989,7 @@ final class GraftTable private (
           s"$p column '${f.name}' is ${f.dataType.sql}, table expects " +
             s"${schema(f.name).dataType.sql} — rewrite via append()")
       }
+      meta
     }
     var current: Seq[(java.nio.file.Path, Map[String, Option[String]])] = Nil
     try {
@@ -6013,21 +6027,18 @@ final class GraftTable private (
         val lg = log
         val snapId = lg.nextId
         val token = java.util.UUID.randomUUID().toString.take(8)
-        val conf = spark.sessionState.newHadoopConf()
-        val bloomCols = bloomColumns
-        val entries = current.zipWithIndex.map { case ((src, part), i) =>
-          val name = f"part-$snapId%05d-$token-$i%05d.parquet"
-          val dst = src.getParent.resolve(name)
-          Files.move(src, dst, StandardCopyOption.REPLACE_EXISTING)
-          val (rows, stats) = ParquetStats.forFile(dst.toString, conf)
-          val partStats = part.map { case (c, v) =>
-            c -> PartitionValues.stats(v, schema(c).dataType, rows)
-          }
-          val blooms = FileBloom.harvest(dst.toString, conf, bloomCols)
-          val rel = Paths.get(dir).relativize(dst).iterator().asScala
-            .map(_.toString).mkString("/")
-          DataFileEntry(rel, rows, Files.size(dst),
-            stats ++ partStats, part, blooms)
+        val entries = current.zip(metas).zipWithIndex.map {
+          case (((src, part), meta), i) =>
+            val name = f"part-$snapId%05d-$token-$i%05d.parquet"
+            val dst = src.getParent.resolve(name)
+            Files.move(src, dst, StandardCopyOption.REPLACE_EXISTING)
+            val partStats = part.map { case (c, v) =>
+              c -> PartitionValues.stats(v, schema(c).dataType, meta.rowCount)
+            }
+            val rel = Paths.get(dir).relativize(dst).iterator().asScala
+              .map(_.toString).mkString("/")
+            DataFileEntry(rel, meta.rowCount, Files.size(dst),
+              meta.stats ++ partStats, part, meta.blooms)
         }
         // a lost race retries with a NEW snapshot id — the next attempt
         // must move from THIS attempt's canonical names

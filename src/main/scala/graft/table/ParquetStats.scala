@@ -2,12 +2,17 @@ package graft.table
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.{FileMetaData, ParquetMetadata}
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.api.Binary
 import org.apache.parquet.schema.LogicalTypeAnnotation
 import org.apache.parquet.schema.LogicalTypeAnnotation.{TimestampLogicalTypeAnnotation, TimeUnit}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.classic.GraftBridge
+import org.apache.spark.sql.types.StructType
 import scala.jdk.CollectionConverters._
 
 /** Extracts per-column min/max/null-count from parquet footers — no data
@@ -21,142 +26,187 @@ import scala.jdk.CollectionConverters._
   */
 object ParquetStats {
 
-  def forFile(absPath: String, conf: Configuration): (Long, Map[String, ColumnStats]) = {
-    val reader = ParquetFileReader.open(
-      HadoopInputFile.fromPath(new Path(absPath), conf))
+  /** Everything a manifest entry takes from one parquet file: its row
+    * count, footer stats, merged bloom bitsets ([[FileBloom.harvest]])
+    * and the footer's file-level metadata (schema and key/value pairs,
+    * which import converts to a Spark schema; the row-group list is not
+    * kept). */
+  final case class FileMeta(
+      rowCount: Long,
+      stats: Map[String, ColumnStats],
+      blooms: Map[String, String],
+      fileMetaData: FileMetaData)
+
+  /** Open `absPath` ONCE and read its row count, stats and the blooms of
+    * `bloomColumns`. The reader's options wrap the CALLER's `conf`: the
+    * one-argument `ParquetFileReader.open(InputFile)` builds a fresh
+    * Hadoop `Configuration`, which re-parses the `*-default.xml`
+    * resources on every call — ~10 ms per footer, most of a
+    * metadata-only commit. */
+  def forFile(
+      absPath: String,
+      conf: Configuration,
+      bloomColumns: Set[String]): FileMeta = {
+    val reader = open(absPath, conf)
     try {
       val footer = reader.getFooter
-      val schema = footer.getFileMetaData.getSchema
-      val blocks = footer.getBlocks.asScala.toSeq
-      val rowCount = blocks.map(_.getRowCount).sum
+      val (rows, stats) = statsOf(footer)
+      FileMeta(rows, stats, FileBloom.harvest(reader, bloomColumns),
+        footer.getFileMetaData)
+    } finally reader.close()
+  }
 
-      // SHREDDED-VARIANT candidates: for each VARIANT-annotated top
-      // group, the typed_value leaf paths worth manifest stats and the
-      // fallback `value` paths that must be entirely null for those
-      // stats to describe every row (see [[VariantPruning]]). Empty for
-      // schemas without variant columns — zero overhead there.
-      val variantPlan = variantCandidates(schema)
-      val watched: Set[Seq[String]] =
-        variantPlan.flatMap(c => c.leaf +: c.fallbacks).toSet
+  /** The Spark schema of one file's footer
+    * ([[GraftBridge.parquetFooterSchema]]), for a file whose stats are
+    * not needed. */
+  def footerSchema(
+      absPath: String,
+      conf: Configuration,
+      spark: SparkSession): StructType = {
+    val reader = open(absPath, conf)
+    try GraftBridge.parquetFooterSchema(
+      spark, absPath, reader.getFooter.getFileMetaData)
+    finally reader.close()
+  }
 
-      // aggregate across row groups per column path:
-      // (min, max, nulls, values, minMaxUsable, nullsKnown)
-      val agg = scala.collection.mutable.Map[
-        String, (Option[Any], Option[Any], Long, Long, Boolean, Boolean)]()
-      val vAgg = scala.collection.mutable.Map[
-        Seq[String], (Option[Any], Option[Any], Long, Long, Boolean, Boolean)]()
-      for (block <- blocks; chunk <- block.getColumns.asScala) {
-        val parts = chunk.getPath.toArray.toSeq
-        if (parts.size > 1 && watched.contains(parts)) {
-          val st = chunk.getStatistics
-          val values = chunk.getValueCount
-          val prev = vAgg.getOrElse(parts, (None, None, 0L, 0L, true, true))
-          if (st == null || st.isEmpty || !st.hasNonNullValue) {
-            val nullsKnown = st != null && !st.isEmpty
-            vAgg(parts) = (prev._1, prev._2,
-              prev._3 + (if (nullsKnown) st.getNumNulls else 0L),
-              prev._4 + values, false, prev._6 && nullsKnown)
-          } else {
-            val tpe = chunk.getPrimitiveType
-            val mn = convert(st.genericGetMin, tpe)
-            val mx = convert(st.genericGetMax, tpe)
-            val newMin = minOf(prev._1, mn)
-            val newMax = maxOf(prev._2, mx)
-            val comparable =
-              (prev._1.isEmpty || mn.isEmpty || newMin.isDefined) &&
-                (prev._2.isEmpty || mx.isEmpty || newMax.isDefined)
-            vAgg(parts) = (newMin, newMax, prev._3 + st.getNumNulls,
-              prev._4 + values, prev._5 && comparable, prev._6)
-          }
-        }
-        val path = chunk.getPath.toDotString
-        // only top-level primitives (no '.' in path)
-        if (!path.contains('.')) {
-          val st = chunk.getStatistics
-          val values = chunk.getValueCount
-          val prev = agg.getOrElse(path, (None, None, 0L, 0L, true, true))
-          if (st == null || st.isEmpty || !st.hasNonNullValue) {
-            // stats unusable for min/max; null count only if the chunk
-            // actually recorded one — an absent count must poison the
-            // whole file's null count (unknown ≠ zero, or IS NULL
-            // pruning would drop files that hold nulls)
-            val nullsKnown = st != null && !st.isEmpty
-            agg(path) = (prev._1, prev._2,
-              prev._3 + (if (nullsKnown) st.getNumNulls else 0L),
-              prev._4 + values, false, prev._6 && nullsKnown)
-          } else {
-            val tpe = chunk.getPrimitiveType
-            val mn = convert(st.genericGetMin, tpe)
-            val mx = convert(st.genericGetMax, tpe)
-            val newMin = minOf(prev._1, mn)
-            val newMax = maxOf(prev._2, mx)
-            // incomparable values (float/double NaN-safety: compare
-            // refuses) poison the WHOLE column's min/max — without the
-            // sticky flag a later row group's lone bound would resurrect
-            // a wrong (last-group-only) min/max into the manifest
-            val comparable =
-              (prev._1.isEmpty || mn.isEmpty || newMin.isDefined) &&
-                (prev._2.isEmpty || mx.isEmpty || newMax.isDefined)
-            agg(path) = (newMin, newMax, prev._3 + st.getNumNulls,
-              prev._4 + values, prev._5 && comparable, prev._6)
-          }
+  private def open(absPath: String, conf: Configuration): ParquetFileReader =
+    ParquetFileReader.open(
+      HadoopInputFile.fromPath(new Path(absPath), conf),
+      HadoopReadOptions.builder(conf).build())
+
+  /** Row count and per-column stats of a read footer (no I/O). */
+  private[table] def statsOf(
+      footer: ParquetMetadata): (Long, Map[String, ColumnStats]) = {
+    val schema = footer.getFileMetaData.getSchema
+    val blocks = footer.getBlocks.asScala.toSeq
+    val rowCount = blocks.map(_.getRowCount).sum
+
+    // SHREDDED-VARIANT candidates: for each VARIANT-annotated top
+    // group, the typed_value leaf paths worth manifest stats and the
+    // fallback `value` paths that must be entirely null for those
+    // stats to describe every row (see [[VariantPruning]]). Empty for
+    // schemas without variant columns — zero overhead there.
+    val variantPlan = variantCandidates(schema)
+    val watched: Set[Seq[String]] =
+      variantPlan.flatMap(c => c.leaf +: c.fallbacks).toSet
+
+    // aggregate across row groups per column path:
+    // (min, max, nulls, values, minMaxUsable, nullsKnown)
+    val agg = scala.collection.mutable.Map[
+      String, (Option[Any], Option[Any], Long, Long, Boolean, Boolean)]()
+    val vAgg = scala.collection.mutable.Map[
+      Seq[String], (Option[Any], Option[Any], Long, Long, Boolean, Boolean)]()
+    for (block <- blocks; chunk <- block.getColumns.asScala) {
+      val parts = chunk.getPath.toArray.toSeq
+      if (parts.size > 1 && watched.contains(parts)) {
+        val st = chunk.getStatistics
+        val values = chunk.getValueCount
+        val prev = vAgg.getOrElse(parts, (None, None, 0L, 0L, true, true))
+        if (st == null || st.isEmpty || !st.hasNonNullValue) {
+          val nullsKnown = st != null && !st.isEmpty
+          vAgg(parts) = (prev._1, prev._2,
+            prev._3 + (if (nullsKnown) st.getNumNulls else 0L),
+            prev._4 + values, false, prev._6 && nullsKnown)
+        } else {
+          val tpe = chunk.getPrimitiveType
+          val mn = convert(st.genericGetMin, tpe)
+          val mx = convert(st.genericGetMax, tpe)
+          val newMin = minOf(prev._1, mn)
+          val newMax = maxOf(prev._2, mx)
+          val comparable =
+            (prev._1.isEmpty || mn.isEmpty || newMin.isDefined) &&
+              (prev._2.isEmpty || mx.isEmpty || newMax.isDefined)
+          vAgg(parts) = (newMin, newMax, prev._3 + st.getNumNulls,
+            prev._4 + values, prev._5 && comparable, prev._6)
         }
       }
-      val stats = agg.toMap.map {
-        case (c, (mn, mx, nulls, values, usable, nullsKnown)) =>
-          // STRING bounds are capped before they enter the manifest
-          // (long-text corpora would otherwise carry multi-KB bounds per
-          // file per column in every segment): min truncates DOWN, max
-          // rounds UP — strictly conservative for every pruning consumer
+      val path = chunk.getPath.toDotString
+      // only top-level primitives (no '.' in path)
+      if (!path.contains('.')) {
+        val st = chunk.getStatistics
+        val values = chunk.getValueCount
+        val prev = agg.getOrElse(path, (None, None, 0L, 0L, true, true))
+        if (st == null || st.isEmpty || !st.hasNonNullValue) {
+          // stats unusable for min/max; null count only if the chunk
+          // actually recorded one — an absent count must poison the
+          // whole file's null count (unknown ≠ zero, or IS NULL
+          // pruning would drop files that hold nulls)
+          val nullsKnown = st != null && !st.isEmpty
+          agg(path) = (prev._1, prev._2,
+            prev._3 + (if (nullsKnown) st.getNumNulls else 0L),
+            prev._4 + values, false, prev._6 && nullsKnown)
+        } else {
+          val tpe = chunk.getPrimitiveType
+          val mn = convert(st.genericGetMin, tpe)
+          val mx = convert(st.genericGetMax, tpe)
+          val newMin = minOf(prev._1, mn)
+          val newMax = maxOf(prev._2, mx)
+          // incomparable values (float/double NaN-safety: compare
+          // refuses) poison the WHOLE column's min/max — without the
+          // sticky flag a later row group's lone bound would resurrect
+          // a wrong (last-group-only) min/max into the manifest
+          val comparable =
+            (prev._1.isEmpty || mn.isEmpty || newMin.isDefined) &&
+              (prev._2.isEmpty || mx.isEmpty || newMax.isDefined)
+          agg(path) = (newMin, newMax, prev._3 + st.getNumNulls,
+            prev._4 + values, prev._5 && comparable, prev._6)
+        }
+      }
+    }
+    val stats = agg.toMap.map {
+      case (c, (mn, mx, nulls, values, usable, nullsKnown)) =>
+        // STRING bounds are capped before they enter the manifest
+        // (long-text corpora would otherwise carry multi-KB bounds per
+        // file per column in every segment): min truncates DOWN, max
+        // rounds UP — strictly conservative for every pruning consumer
+        def cap(v: Any, isMax: Boolean): Option[Any] = v match {
+          case s: String =>
+            if (isMax)
+              ColumnStats.truncateMaxString(
+                s, ColumnStats.StringBoundCapBytes)
+            else Some(ColumnStats.truncateMinString(
+              s, ColumnStats.StringBoundCapBytes))
+          case other => Some(other)
+        }
+        c -> ColumnStats(
+          if (usable) mn.flatMap(cap(_, isMax = false))
+            .map(ColumnStats.render) else None,
+          if (usable) mx.flatMap(cap(_, isMax = true))
+            .map(ColumnStats.render) else None,
+          if (nullsKnown) Some(nulls) else None,
+          Some(values))
+    }
+    // emit a variant pseudo-column stat ONLY when every fallback on
+    // its path is PROVABLY all-null (known null counts equal to the
+    // value counts) — one fallback row, or one unknown, discards the
+    // key and the file stays conservatively kept on variant probes
+    val vStats: Map[String, ColumnStats] = variantPlan.flatMap { c =>
+      val fallbacksAllNull = c.fallbacks.forall { fp =>
+        vAgg.get(fp).exists { case (_, _, nulls, values, _, known) =>
+          known && nulls == values }
+      }
+      vAgg.get(c.leaf) match {
+        case Some((mn, mx, nulls, values, usable, known))
+            if fallbacksAllNull && known =>
           def cap(v: Any, isMax: Boolean): Option[Any] = v match {
             case s: String =>
-              if (isMax)
-                ColumnStats.truncateMaxString(
-                  s, ColumnStats.StringBoundCapBytes)
+              if (isMax) ColumnStats.truncateMaxString(
+                s, ColumnStats.StringBoundCapBytes)
               else Some(ColumnStats.truncateMinString(
                 s, ColumnStats.StringBoundCapBytes))
             case other => Some(other)
           }
-          c -> ColumnStats(
+          Some(c.statKey -> ColumnStats(
             if (usable) mn.flatMap(cap(_, isMax = false))
               .map(ColumnStats.render) else None,
             if (usable) mx.flatMap(cap(_, isMax = true))
               .map(ColumnStats.render) else None,
-            if (nullsKnown) Some(nulls) else None,
-            Some(values))
+            Some(nulls),
+            Some(values)))
+        case _ => None
       }
-      // emit a variant pseudo-column stat ONLY when every fallback on
-      // its path is PROVABLY all-null (known null counts equal to the
-      // value counts) — one fallback row, or one unknown, discards the
-      // key and the file stays conservatively kept on variant probes
-      val vStats: Map[String, ColumnStats] = variantPlan.flatMap { c =>
-        val fallbacksAllNull = c.fallbacks.forall { fp =>
-          vAgg.get(fp).exists { case (_, _, nulls, values, _, known) =>
-            known && nulls == values }
-        }
-        vAgg.get(c.leaf) match {
-          case Some((mn, mx, nulls, values, usable, known))
-              if fallbacksAllNull && known =>
-            def cap(v: Any, isMax: Boolean): Option[Any] = v match {
-              case s: String =>
-                if (isMax) ColumnStats.truncateMaxString(
-                  s, ColumnStats.StringBoundCapBytes)
-                else Some(ColumnStats.truncateMinString(
-                  s, ColumnStats.StringBoundCapBytes))
-              case other => Some(other)
-            }
-            Some(c.statKey -> ColumnStats(
-              if (usable) mn.flatMap(cap(_, isMax = false))
-                .map(ColumnStats.render) else None,
-              if (usable) mx.flatMap(cap(_, isMax = true))
-                .map(ColumnStats.render) else None,
-              Some(nulls),
-              Some(values)))
-          case _ => None
-        }
-      }.toMap
-      (rowCount, stats ++ vStats)
-    } finally reader.close()
+    }.toMap
+    (rowCount, stats ++ vStats)
   }
 
   /** One prunable shredded-variant path: the typed leaf's chunk path,

@@ -32,6 +32,27 @@ object GraftBridge {
   def asNullable(schema: org.apache.spark.sql.types.StructType)
       : org.apache.spark.sql.types.StructType = schema.asNullable
 
+  /** The schema `spark.read.parquet(path).schema` infers for one file,
+    * converted from its already-read footer metadata by the conversion
+    * `ParquetFileFormat.readSchema` applies (that method is private to
+    * its package) and made nullable like every file source's — without
+    * Spark's schema-inference job. */
+  def parquetFooterSchema(
+      spark: org.apache.spark.sql.SparkSession,
+      path: String,
+      meta: org.apache.parquet.hadoop.metadata.FileMetaData)
+      : org.apache.spark.sql.types.StructType =
+    org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+      .readSchemaFromFooter(
+        new org.apache.parquet.hadoop.Footer(
+          new org.apache.hadoop.fs.Path(path),
+          new org.apache.parquet.hadoop.metadata.ParquetMetadata(
+            meta, java.util.Collections.emptyList())),
+        new org.apache.spark.sql.execution.datasources.parquet
+          .ParquetToSparkSchemaConverter(
+            spark.asInstanceOf[SparkSession].sessionState.conf))
+      .asNullable
+
   /** Spark's own vectorized-parquet DSv2 table over the files (and read
     * options) of a [[graft.table.ManifestFileIndex]] with a fixed schema —
     * the scan engine behind [[graft.table.GraftSparkCatalog]]. The table's

@@ -166,6 +166,20 @@ private final class GraftStreamDataWriter(
   private var open: Open = null
   private var closedRels: List[String] = Nil
 
+  // one writer conf and task context for every file this writer opens:
+  // a fresh Configuration re-parses Hadoop's XML defaults
+  private lazy val taskCtx: TaskAttemptContextImpl = {
+    val conf = new Configuration()
+    writerConf.foreach { case (k, v) => conf.set(k, v) }
+    ParquetWriteSupport.setSchema(dataSchema, conf)
+    conf.set("parquet.write.support.class",
+      classOf[ParquetWriteSupport].getName)
+    val attempt = new TaskAttemptID(
+      new TaskID(new JobID(s"graft-stream-$epochId", partitionId),
+        TaskType.MAP, partitionId), 0)
+    new TaskAttemptContextImpl(conf, attempt)
+  }
+
   /** Batch-layout directory segments for one row: Hive-escaped
     * `<field>=<value>` per partition field ([[PartitionValues.decode]]'s
     * exact inverse; dates render ISO like Spark's own partition paths). */
@@ -195,17 +209,8 @@ private final class GraftStreamDataWriter(
       java.util.UUID.randomUUID().toString.take(8) + ".parquet"
     val rel = if (segs.isEmpty) s"data/$name" else s"data/$segs/$name"
     Files.createDirectories(Paths.get(dir, rel).getParent)
-    val conf = new Configuration()
-    writerConf.foreach { case (k, v) => conf.set(k, v) }
-    ParquetWriteSupport.setSchema(dataSchema, conf)
-    conf.set("parquet.write.support.class",
-      classOf[ParquetWriteSupport].getName)
-    val attempt = new TaskAttemptID(
-      new TaskID(new JobID(s"graft-stream-$epochId", partitionId),
-        TaskType.MAP, partitionId), 0)
-    val ctx = new TaskAttemptContextImpl(conf, attempt)
     open = new Open(segs, rel,
-      new ParquetOutputWriter(Paths.get(dir, rel).toString, ctx))
+      new ParquetOutputWriter(Paths.get(dir, rel).toString, taskCtx))
     open
   }
 

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -19,6 +20,33 @@ trait SparkSpecBase extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   def sf(name: String) = s"/root/testdata/sf0.001/$name.parquet"
+
+  /** Jobs Spark started while `body` ran. The marker job's start event
+    * arrives after every earlier job's (one ordered listener queue), so
+    * once it is seen the count is complete. */
+  def jobsDuring(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val started = new java.util.concurrent.atomic.AtomicInteger(0)
+    @volatile var markerSeen = false
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(p =>
+            p.getProperty("spark.jobGroup.id") == "jobs-during-marker"))
+          markerSeen = true
+        else started.incrementAndGet()
+    }
+    sc.addSparkListener(l)
+    try {
+      body
+      sc.setJobGroup("jobs-during-marker", "marker")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!markerSeen && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(markerSeen, "listener never saw the marker job")
+      started.get()
+    } finally sc.removeSparkListener(l)
+  }
 }
 
 object SparkSpecBase {

@@ -1,9 +1,7 @@
 package graft.table
 
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
@@ -40,33 +38,6 @@ class ManifestFileIndexSpec extends SparkSpecBase with AdaptiveSparkPlanHelper {
     collect(df.queryExecution.executedPlan) {
       case s: FileSourceScanExec => s.metrics("numFiles").value
     }.sum
-  }
-
-  /** Jobs Spark started while `body` ran. The marker job's start event
-    * arrives after every earlier job's (one ordered listener queue), so
-    * once it is seen the count is complete. */
-  private def jobsDuring(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val started = new AtomicInteger(0)
-    @volatile var markerSeen = false
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(p =>
-            p.getProperty("spark.jobGroup.id") == "manifest-index-marker"))
-          markerSeen = true
-        else started.incrementAndGet()
-    }
-    sc.addSparkListener(l)
-    try {
-      body
-      sc.setJobGroup("manifest-index-marker", "marker")
-      try sc.parallelize(Seq(1), 1).count()
-      finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!markerSeen && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(markerSeen, "listener never saw the marker job")
-      started.get()
-    } finally sc.removeSparkListener(l)
   }
 
   private def dataFiles(t: GraftTable): Seq[java.nio.file.Path] =
