@@ -18,7 +18,7 @@ object Pipeline extends QueryPack {
     *
     *   1. append the raw corpus (snapshot 1);
     *   2. quality gate as a positional PREDICATE delete — sub-quality
-    *      rows die as (file, pos) entries, no data file copied
+    *      rows die as deletion-vector positions, no data file copied
     *      (snapshot 2);
     *   3. exact-dup LOSERS (keep-first by normalized-text fingerprint,
     *      computed over the surviving corpus) deleted BY KEY through the

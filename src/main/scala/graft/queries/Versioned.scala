@@ -18,30 +18,38 @@ import graft.table.{GraftCatalog, GraftTable}
   */
 object Versioned extends QueryPack {
 
-  /** Load-or-rebuild guard shared by every tmpdir fixture: reuse only a
-    * table with the EXPECTED snapshot count whose data files all still
-    * exist (a tmp cleaner can reap aged data files while the newer log
-    * JSON survives — a count-only check would then crash mid-scan);
-    * anything else is torn down and rebuilt. One definition, so fixture
-    * hygiene can't drift per site (v06 had already dropped validation). */
+  /** Load-or-rebuild guard shared by every tmpdir fixture: reuse only an
+    * [[intactFixture]]; anything else is torn down and rebuilt. One
+    * definition, so fixture hygiene can't drift per site. */
   private[queries] def cachedFixture(
       sfDir: String, name: String, expectedSnapshots: Int)(
       build: String => GraftTable): GraftTable = synchronized {
     val key = sfDir.replaceAll("[^A-Za-z0-9.]", "_")
     val dir = s"${sys.props("java.io.tmpdir")}/graft_fixtures/$key/$name"
-    if (GraftTable.exists(dir)) {
-      val tb = GraftTable.load(dir)
+    intactFixture(dir, expectedSnapshots).getOrElse {
+      GraftTable.deleteRecursively(Paths.get(dir))
+      build(dir)
+    }
+  }
+
+  /** The table at `dir` when a cached fixture there is reusable: this
+    * code loads it (a table in an older metadata format refuses), it has
+    * the EXPECTED snapshot count, and its data files all still exist (a
+    * tmp cleaner can reap aged data files while the newer log JSON
+    * survives — a count-only check would then crash mid-scan). */
+  private def intactFixture(
+      dir: String, expectedSnapshots: Int): Option[GraftTable] =
+    if (!GraftTable.exists(dir)) None
+    else {
+      val tb =
+        try GraftTable.load(dir)
+        catch { case _: IllegalStateException => return None }
       val intact = tb.log.snapshots.size == expectedSnapshots &&
         tb.log.current.forall(sn =>
           graft.table.Manifest.read(s"$dir/${sn.manifestList}").files
             .forall(f => Files.exists(Paths.get(s"$dir/${f.path}"))))
-      if (intact) return tb
-      GraftTable.deleteRecursively(Paths.get(dir))
-    } else if (Files.exists(Paths.get(dir))) {
-      GraftTable.deleteRecursively(Paths.get(dir))
+      if (intact) Some(tb) else None
     }
-    build(dir)
-  }
 
   /** Build (or reuse) the two-snapshot fixture for `sfDir`; returns table. */
   private def fixture(spark: SparkSession, sfDir: String): GraftTable =
@@ -508,16 +516,10 @@ object Versioned extends QueryPack {
       val wh = s"${sys.props("java.io.tmpdir")}/graft_fixtures/$key/txnwh"
       val cDir = s"$wh/db/corpus_tx"
       val iDir = s"$wh/db/index_tx"
-      if (GraftTable.exists(cDir) && GraftTable.exists(iDir)) {
-        val c = GraftTable.load(cDir)
-        val i = GraftTable.load(iDir)
-        val intact = c.log.snapshots.size == 2 && i.log.snapshots.size == 2 &&
-          Seq(c, i).forall(tb => tb.log.current.forall(sn =>
-            graft.table.Manifest.read(s"${tb.dir}/${sn.manifestList}").files
-              .forall(f => Files.exists(Paths.get(s"${tb.dir}/${f.path}")))))
-        if (intact) return (c, i)
+      (intactFixture(cDir, 2), intactFixture(iDir, 2)) match {
+        case (Some(c), Some(i)) => return (c, i)
+        case _ => GraftTable.deleteRecursively(Paths.get(wh))
       }
-      GraftTable.deleteRecursively(Paths.get(wh))
       val nation = t(spark, sfDir, "nation")
       val cat = new GraftCatalog(wh)
       val corpus = cat.createTable("db.corpus_tx", nation.schema)
@@ -1679,59 +1681,30 @@ object Versioned extends QueryPack {
 
     // merge/upsert: nations 0-2 renamed via a source batch, nations 90-91
     // inserted — one atomic "merge" snapshot
-    "v16_graft_merge" -> ((s, d) => {
-      val tbl = synchronized {
-        val key = d.replaceAll("[^A-Za-z0-9.]", "_")
-        val dir = s"${sys.props("java.io.tmpdir")}/graft_fixtures/$key/nation_mrg"
-        val existing =
-          if (GraftTable.exists(dir)) {
-            val tb = GraftTable.load(dir)
-            if (tb.log.snapshots.size == 2) Some(tb) else None
-          } else None
-        existing.getOrElse {
-          if (Files.exists(Paths.get(dir)))
-            GraftTable.deleteRecursively(Paths.get(dir))
-          val nation = t(s, d, "nation")
-          val tb = GraftTable.create(dir, nation.schema)
-          tb.append(nation, committedAt = Some(1000L))
-          val keyType = nation.schema("n_nationkey").dataType
-          val source = nation.filter(col("n_nationkey") <= 2)
-            .withColumn("n_name", concat(lit("M-"), col("n_name")))
-            .unionByName(nation.filter(col("n_nationkey") <= 1)
-              .withColumn("n_nationkey",
-                (col("n_nationkey") + 90).cast(keyType))
-              .withColumn("n_name", lit("NEWLAND")))
-          tb.merge(s, source, "n_nationkey", Some(2000L))
-          tb
-        }
-      }
-      tbl.read(s)
-    }),
+    "v16_graft_merge" -> ((s, d) => cachedFixture(d, "nation_mrg", 2) { dir =>
+      val nation = t(s, d, "nation")
+      val tb = GraftTable.create(dir, nation.schema)
+      tb.append(nation, committedAt = Some(1000L))
+      val keyType = nation.schema("n_nationkey").dataType
+      val source = nation.filter(col("n_nationkey") <= 2)
+        .withColumn("n_name", concat(lit("M-"), col("n_name")))
+        .unionByName(nation.filter(col("n_nationkey") <= 1)
+          .withColumn("n_nationkey", (col("n_nationkey") + 90).cast(keyType))
+          .withColumn("n_name", lit("NEWLAND")))
+      tb.merge(s, source, "n_nationkey", Some(2000L))
+      tb
+    }.read(s)),
 
     // copy-on-write update: region-1 nations get their comment redacted
     // in snapshot 2; every other row carries over byte-identical
-    "v15_graft_update" -> ((s, d) => {
-      val tbl = synchronized {
-        val key = d.replaceAll("[^A-Za-z0-9.]", "_")
-        val dir = s"${sys.props("java.io.tmpdir")}/graft_fixtures/$key/nation_upd"
-        val existing =
-          if (GraftTable.exists(dir)) {
-            val tb = GraftTable.load(dir)
-            if (tb.log.snapshots.size == 2) Some(tb) else None
-          } else None
-        existing.getOrElse {
-          if (Files.exists(Paths.get(dir)))
-            GraftTable.deleteRecursively(Paths.get(dir))
-          val nation = t(s, d, "nation")
-          val tb = GraftTable.create(dir, nation.schema)
-          tb.append(nation, committedAt = Some(1000L))
-          tb.update(s, col("n_regionkey") === 1,
-            Map("n_name" -> concat(lit("X-"), col("n_name"))), Some(2000L))
-          tb
-        }
-      }
-      tbl.read(s)
-    }),
+    "v15_graft_update" -> ((s, d) => cachedFixture(d, "nation_upd", 2) { dir =>
+      val nation = t(s, d, "nation")
+      val tb = GraftTable.create(dir, nation.schema)
+      tb.append(nation, committedAt = Some(1000L))
+      tb.update(s, col("n_regionkey") === 1,
+        Map("n_name" -> concat(lit("X-"), col("n_name"))), Some(2000L))
+      tb
+    }.read(s)),
 
     // copy-on-write delete: one snapshot of nation, then regions 2 and 4
     // deleted — the scan sees only the remaining rows (tagged with the
@@ -1758,10 +1731,10 @@ object Versioned extends QueryPack {
       morFixture(s, d).read(s)
         .select("n_nationkey", "n_name", "n_regionkey")),
 
-    // POSITIONAL merge-on-read delete: row-level (file, pos) delete
-    // entries — predicate form, key form, and a later re-append that
-    // must survive both (positions pin exact files). The scan anti-joins
-    // only the targeted files against the delete parquets.
+    // POSITIONAL merge-on-read delete: row-level deletion vectors —
+    // predicate form, key form, and a later re-append that must survive
+    // both (positions pin exact files). The scan filters only the
+    // targeted files through their vectors.
     "v28_graft_positional_delete" -> ((s, d) =>
       posFixture(s, d).read(s)
         .select("n_nationkey", "n_name", "n_regionkey")),
@@ -2147,27 +2120,9 @@ object Versioned extends QueryPack {
         Some(col("snapshot__id") === 1L && col("r_regionkey") < 2))),
 
     // S11: a table with no snapshots scans as zero rows, full schema
-    "v06_graft_empty" -> ((s, d) => {
-      val dir = s"${sys.props("java.io.tmpdir")}/graft_fixtures/" +
-        s"${d.replaceAll("[^A-Za-z0-9.]", "_")}/region_empty"
-      // reuse-validate like every other fixture: leftover state with
-      // snapshots would return rows the zero-row oracle cannot match
-      val tbl = synchronized {
-        if (GraftTable.exists(dir)) {
-          val existing = GraftTable.load(dir)
-          if (existing.log.snapshots.isEmpty) existing
-          else {
-            GraftTable.deleteRecursively(Paths.get(dir))
-            GraftTable.create(dir, t(s, d, "region").schema)
-          }
-        } else {
-          if (Files.exists(Paths.get(dir)))
-            GraftTable.deleteRecursively(Paths.get(dir))
-          GraftTable.create(dir, t(s, d, "region").schema)
-        }
-      }
-      tbl.read(s)
-    }),
+    "v06_graft_empty" -> ((s, d) =>
+      cachedFixture(d, "region_empty", 0)(
+        GraftTable.create(_, t(s, d, "region").schema)).read(s)),
 
     // incremental read (change feed): rows added between snapshots 1 and 2
     // of the fixture = exactly one copy of region, tagged with snapshot 2
@@ -2206,32 +2161,15 @@ object Versioned extends QueryPack {
     // MIXED-FORMAT versioned table: snapshot 1's data files are parquet,
     // snapshot 2's are avro — one scan dispatches per file like
     // IcebergReaderFactory.java:48-75 and unions the readers' output.
-    "v18_avro_table" -> ((s, d) => {
-      val tbl = synchronized {
-        val key = d.replaceAll("[^A-Za-z0-9.]", "_")
-        val dir = s"${sys.props("java.io.tmpdir")}/graft_fixtures/$key/region_av"
-        val existing =
-          if (GraftTable.exists(dir)) {
-            val t0 = GraftTable.load(dir)
-            if (t0.log.snapshots.size == 2) Some(t0)
-            else { GraftTable.deleteRecursively(Paths.get(dir)); None }
-          } else {
-            if (Files.exists(Paths.get(dir)))
-              GraftTable.deleteRecursively(Paths.get(dir))
-            None
-          }
-        existing.getOrElse {
-          val region = t(s, d, "region")
-          val t1 = GraftTable.create(dir, region.schema)
-          t1.append(region, committedAt = Some(1000L))
-          t1.appendAvro(
-            region.withColumn("r_regionkey", col("r_regionkey") + 10),
-            committedAt = Some(2000L))
-          t1
-        }
-      }
-      tbl.read(s)
-    })
+    "v18_avro_table" -> ((s, d) => cachedFixture(d, "region_av", 2) { dir =>
+      val region = t(s, d, "region")
+      val t1 = GraftTable.create(dir, region.schema)
+      t1.append(region, committedAt = Some(1000L))
+      t1.appendAvro(
+        region.withColumn("r_regionkey", col("r_regionkey") + 10),
+        committedAt = Some(2000L))
+      t1
+    }.read(s))
   )
 
   val oracleSql: Map[String, String] = Map(

@@ -132,8 +132,7 @@ final case class DvIndex(byBasename: Map[String, String]) extends Serializable {
 
 /** `dv_contains(file, pos)` — is row `pos` of data file `file` (basename)
   * recorded deleted in the snapshot's deletion vectors? The read path's
-  * in-reader replacement for the old `(file, pos)` anti-join: a plain
-  * codegen'd boolean per row (binary search of a lazily-loaded sorted
+  * in-reader positional filter: a plain codegen'd boolean per row (binary search of a lazily-loaded sorted
   * array), so a merge-on-read scan keeps its single WholeStageCodegen
   * span with NO join in the plan. */
 @ExpressionDescription(usage = "internal: deletion-vector row filter")

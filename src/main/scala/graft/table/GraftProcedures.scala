@@ -242,25 +242,15 @@ object GraftProcedures {
   private def rewritePositionDeleteFiles(wh: String): UnboundProcedure =
     new Proc(
       "rewrite_position_delete_files",
-      "Fold the pending positional-delete state into its canonical " +
-        "form — one consolidated entry, one deletion vector per " +
-        "affected data file — WITHOUT rewriting any data file: legacy " +
-        "(file,pos)-parquet entries convert to in-reader vectors, ghost " +
-        "rows for long-gone targets drop, a stacked entry list " +
-        "collapses. Returns the folding snapshot id, or no rows when " +
-        "the state is already canonical (nothing committed).",
+      "Iceberg-parity no-op: every positional commit already leaves the " +
+        "canonical form (one consolidated entry, one deletion vector per " +
+        "affected data file), so there is nothing to fold. Resolves the " +
+        "table and returns no rows; nothing is committed.",
       Array(in("table", StringType)),
       StructType(Seq(
         StructField("snapshot_id", LongType, nullable = false),
         StructField("position_delete_files", LongType, nullable = false))),
-      row => {
-        val t = tableOf(wh, row)
-        val spark = org.apache.spark.sql.SparkSession.active
-        t.rewritePositionDeletes(spark).map { s =>
-          Seq[Any](s.snapshotId,
-            t.positionalDeletes.map(_.dvs.size).sum.toLong)
-        }.toSeq
-      })
+      row => { tableOf(wh, row); Nil })
 
 
   private def rewriteDeleteFiles(wh: String): UnboundProcedure =

@@ -81,21 +81,9 @@ final class GraftTable private (
     GraftTable.streamCompactEvery(newProps)
     GraftTable.streamCompactBytes(newProps)
     GraftTable.dmlIsolationOf(newProps): Unit
-    val meta = Map(
-      "format_version" -> 1L,
-      "schema" -> newSchema.json,
-      "partition_columns" -> newSpec,
-      "properties" -> newProps,
-      "dropped_columns" -> newDropped,
-      "column_renames" -> newRenames.map(r =>
-        Map("at" -> r.at, "from" -> r.from, "to" -> r.to, "seq" -> r.seq)),
-      "column_widenings" -> newWidenings.map(w =>
-        Map("at" -> w.at, "col" -> w.col,
-          "from" -> w.from.json, "to" -> w.to.json, "seq" -> w.seq)),
-      "column_defaults" -> newDefaults.map(d =>
-        Map("at" -> d.at, "col" -> d.col, "sql" -> d.sql, "seq" -> d.seq)))
     graft.util.Json.writeFileAtomic(s"$dir/metadata.json",
-      graft.util.Json.write(meta))
+      metadataJson(newSchema, newProps, newSpec, newDropped, newRenames,
+        newWidenings, newDefaults))
     new GraftTable(dir, newSchema, newProps, newSpec, newDropped,
       newRenames, newWidenings, newDefaults)
   }
@@ -262,17 +250,15 @@ final class GraftTable private (
         m("files").asInstanceOf[Seq[Any]].map(_.toString),
         m("targets").asInstanceOf[Map[String, Any]]
           .map { case (k, v) => k -> v.asInstanceOf[Long] },
-        m.get("dvs").map(_.asInstanceOf[Map[String, Any]]
-          .map { case (k, v) => k -> v.toString }).getOrElse(Map.empty))
+        m("dvs").asInstanceOf[Map[String, Any]]
+          .map { case (k, v) => k -> v.toString })
     }
 
   private def positionalJson(entries: Seq[PositionalDeletes]): String =
     graft.util.Json.write(entries.map { e =>
-      val base = Map[String, Any]("files" -> e.files,
-        "targets" -> e.targets.map { case (k, v) => k -> (v: Any) })
-      // "dvs" only when present — legacy (file,pos)-parquet entries keep
-      // their exact historical JSON shape
-      if (e.dvs.isEmpty) base else base + ("dvs" -> e.dvs)
+      Map[String, Any]("files" -> e.files,
+        "targets" -> e.targets.map { case (k, v) => k -> (v: Any) },
+        "dvs" -> e.dvs)
     })
 
   /** Pending positional delete entries of the CURRENT snapshot. */
@@ -297,18 +283,15 @@ final class GraftTable private (
             m("cols").asInstanceOf[Seq[Any]].map(_.toString),
             m("snap").asInstanceOf[Long],
             m.get("dead").collect { case d: Long => d },
-            m.get("covs").map(_.asInstanceOf[Seq[Any]]
-              .map(_.asInstanceOf[Long])).getOrElse(Nil))
+            m("covs").asInstanceOf[Seq[Any]].map(_.asInstanceOf[Long]))
         }
     }
 
   private def equalityJson(entries: Seq[EqualityDeletes]): String =
     graft.util.Json.write(entries.map { e =>
-      val base = Map[String, Any](
-        "files" -> e.files, "cols" -> e.cols, "snap" -> e.covered)
-      val withDead = e.dead.fold(base)(d => base + ("dead" -> d))
-      if (e.coveredSnaps.isEmpty) withDead
-      else withDead + ("covs" -> e.coveredSnaps)
+      val base = Map[String, Any]("files" -> e.files, "cols" -> e.cols,
+        "snap" -> e.covered, "covs" -> e.covs)
+      e.dead.fold(base)(d => base + ("dead" -> d))
     })
 
   /** Pending equality-delete entries of the CURRENT snapshot. */
@@ -366,17 +349,16 @@ final class GraftTable private (
 
   /** Strip `gone` data-file paths from positional entries (the files were
     * dropped or rewritten — their deletions are materialized); entries
-    * with no remaining targets disappear (their delete parquets stay on
-    * disk until [[expireSnapshots]] reclaims them). */
+    * with no remaining targets disappear (their deletion vectors stay on
+    * disk until [[expireSnapshots]] reclaims them). Only ever shrinks
+    * the list, so the at-most-one-entry invariant holds. */
   private def stripPositional(
       entries: Seq[PositionalDeletes],
       gone: Set[String]): Seq[PositionalDeletes] =
     entries
       .map { e =>
         // a removed target's per-file deletion vector leaves with it
-        // (the file becomes unreferenced → expire/orphan reclaims it);
-        // legacy shared parquets stay — their rows for gone files are
-        // harmless (those files no longer exist to join against)
+        // (the file becomes unreferenced → expire/orphan reclaims it)
         val goneDvs = e.dvs.collect { case (p, dv) if gone(p) => dv }.toSet
         e.copy(
           targets = e.targets.filterNot { case (p, _) => gone(p) },
@@ -397,10 +379,9 @@ final class GraftTable private (
     * RETENTION ANCHORS: [[expireSnapshots]] will not expire them. */
   def refs: Map[String, Long] = refsRaw.map { case (k, v) => k -> refSnap(v) }
 
-  /** Raw refs.json entries: legacy plain snapshot ids AND extended
-    * `{snapshot, created_ms, max_ref_age_ms}` objects (per-ref
-    * retention, Iceberg branch/tag retention parity) both stay
-    * readable and round-trip unchanged through unrelated updates. */
+  /** Raw refs.json entries: `{snapshot, created_ms[, max_ref_age_ms]}`
+    * objects (per-ref retention, Iceberg branch/tag retention parity)
+    * that round-trip unchanged through unrelated updates. */
   private def refsRaw: Map[String, Any] = {
     val p = Paths.get(refsPath)
     if (!Files.exists(p)) Map.empty
@@ -408,14 +389,13 @@ final class GraftTable private (
   }
 
   private def refSnap(v: Any): Long = v match {
-    case l: Long => l
     case m: Map[_, _] =>
       m.asInstanceOf[Map[String, Any]]("snapshot").asInstanceOf[Long]
     case other => throw new IllegalStateException(s"malformed ref: $other")
   }
 
   /** Tags carrying a retention policy: name → (created_ms,
-    * max_ref_age_ms). Legacy plain refs have no policy → never aged. */
+    * max_ref_age_ms). Tags without `max_ref_age_ms` are never aged. */
   private def refAges: Map[String, (Long, Long)] = refsRaw.collect {
     case (k, m: Map[_, _]) =>
       val mm = m.asInstanceOf[Map[String, Any]]
@@ -445,13 +425,10 @@ final class GraftTable private (
       // pruned log here instead of anchoring a snapshot that just vanished
       require(log.byId(snapshotId).isDefined,
         s"no snapshot $snapshotId in $dir")
-      val entry: Any = maxRefAgeMs match {
-        case Some(age) => Map(
-          "snapshot" -> snapshotId,
-          "created_ms" -> createdAtMs.getOrElse(System.currentTimeMillis()),
-          "max_ref_age_ms" -> age)
-        case None => snapshotId
-      }
+      val base = Map[String, Any](
+        "snapshot" -> snapshotId,
+        "created_ms" -> createdAtMs.getOrElse(System.currentTimeMillis()))
+      val entry = maxRefAgeMs.fold(base)(age => base + ("max_ref_age_ms" -> age))
       graft.util.Json.writeFileAtomic(refsPath,
         graft.util.Json.write(refsRaw + (name -> entry)))
     }
@@ -780,8 +757,7 @@ final class GraftTable private (
     val augSchema = StructType(
       PartitionField.augmentedSchema(schema, partitionFields).fields ++
         vFields)
-    f => Pruning.mayMatchFile(aug, aliasLegacyStats(stripStaleBlooms(f)),
-      augSchema)
+    f => Pruning.mayMatchFile(aug, stripStaleBlooms(f), augSchema)
   }
 
   /** Per-file proof that EVERY row satisfies `resolved` ([[countWhere]]'s
@@ -796,43 +772,14 @@ final class GraftTable private (
       : DataFileEntry => Boolean = {
     val proof = PartitionField.proofAugment(resolved, partitionFields)
     val augSchema = PartitionField.augmentedSchema(schema, partitionFields)
-    f => Pruning.mustMatchAll(proof, aliasLegacyStats(stripStaleBlooms(f)),
-      augSchema)
+    f => Pruning.mustMatchAll(proof, stripStaleBlooms(f), augSchema)
   }
-
-  /** Era-gated compatibility alias for derived-stat keys. Probes use the
-    * PARAMETER-QUALIFIED [[PartitionField.statName]] (`tok_bucket_16`);
-    * files written before qualification hold the synthesized stats under
-    * the bare directory key (`tok_bucket`). On a table whose spec has
-    * NEVER evolved ([[GraftTable.PropSpecEvolved]] unset) exactly one
-    * parameterization can ever have written that key, so serving the
-    * bare value under the qualified name is sound and keeps legacy
-    * tables pruning. The moment the spec evolves the bare key is
-    * ambiguous across moduli/widths and the alias shuts off — those
-    * legacy files are conservatively kept instead (the exact unsound
-    * cross-era skip the qualification exists to prevent). */
-  private lazy val legacyStatAliases: Map[String, String] =
-    if (properties.contains(GraftTable.PropSpecEvolved)) Map.empty
-    else partitionFields.iterator
-      .filter(f => f.statName != f.fieldName)
-      .map(f => f.fieldName -> f.statName).toMap
-
-  private def aliasLegacyStats(
-      stats: Map[String, ColumnStats]): Map[String, ColumnStats] =
-    if (legacyStatAliases.isEmpty) stats
-    else stats ++ legacyStatAliases.collect {
-      case (bare, q) if stats.contains(bare) && !stats.contains(q) =>
-        q -> stats(bare)
-    }
-
-  private def aliasLegacyStats(f: DataFileEntry): DataFileEntry =
-    if (legacyStatAliases.isEmpty) f else f.copy(stats = aliasLegacyStats(f.stats))
 
   /** Whole-SEGMENT may-match on the manifest-list envelope — the level
     * above [[pruneKeep]]: a segment whose merged min/max rule the
     * predicate out is skipped without being parsed (no blooms at this
-    * level; a missing envelope keeps the segment — legacy lists and
-    * schema-less writers stay correct, just unaccelerated). */
+    * level; a missing envelope keeps the segment — schema-less writers
+    * stay correct, just unaccelerated). */
   private def segKeep(
       resolved: org.apache.spark.sql.catalyst.expressions.Expression)
       : ManifestSegment => Boolean = {
@@ -841,8 +788,7 @@ final class GraftTable private (
     val augSchema = StructType(
       PartitionField.augmentedSchema(schema, partitionFields).fields ++
         vFields)
-    seg => seg.envelope.forall(env =>
-      Pruning.mayMatch(aug, aliasLegacyStats(env), augSchema))
+    seg => seg.envelope.forall(env => Pruning.mayMatch(aug, env, augSchema))
   }
 
   /** Predicate-pruned file list with segment-envelope skipping — the
@@ -1175,8 +1121,8 @@ final class GraftTable private (
     // the touched set. When a NON-identity transform's spec has EVOLVED
     // the bare fieldName is ambiguous across parameterizations
     // (bucket(4) and bucket(8) both write `c_bucket=`) — degrade those
-    // candidates to row-checked rewrites, the same conservatism as the
-    // era-gated stat aliasing. Identity tuples are never ambiguous.
+    // candidates to row-checked rewrites. Identity tuples are never
+    // ambiguous.
     val tupleExactOk = partitionFields.forall(_.isIdentity) ||
       !properties.contains(GraftTable.PropSpecEvolved)
     val (dropped0, rewrites0) = candidates.partition(f =>
@@ -1685,7 +1631,7 @@ final class GraftTable private (
       throw new java.util.ConcurrentModificationException(
         s"snapshot log advanced to ${lg2.nextId} during commit of $snapId on $dir")
     }
-    // Positional anti-joins key on basename: writePositions proves
+    // Positional vectors key on basename: writeDeletionVectors proves
     // uniqueness against the manifest AT ENTRY CREATION, but a later
     // append could (with token-randomized names, astronomically unlikely)
     // reuse a pending target's basename and silently lose the wrong
@@ -2615,10 +2561,9 @@ final class GraftTable private (
     * each row tagged with the snapshot its commit covered
     * ([[GraftTable.EqCovCol]] — per-row scoping, so folding never widens
     * an old commit's reach to newer files). Reads then pay ONE anti-join
-    * per key-column set regardless of stacking depth; legacy untagged
-    * entries fold with their wholesale covered snapshot as the constant
-    * tag. O(total pending keys) I/O per commit — key relations are
-    * metadata-class, never data-class. Prior entries' files stay on disk
+    * per key-column set regardless of stacking depth. O(total pending
+    * keys) I/O per commit — key relations are metadata-class, never
+    * data-class. Prior entries' files stay on disk
     * for the ancestor snapshots that reference them (expire reclaims).
     * Returns (published rels, consolidated covering snapshots,
     * same-cols prior entries, other-cols prior entries). */
@@ -2817,13 +2762,13 @@ final class GraftTable private (
     }
   }
 
-  /** POSITIONAL merge-on-read DELETE (Iceberg v2 position-delete files):
-    * record WHICH physical rows die — `(data file, row position)` pairs
-    * written as small parquet delete files under `deletes/` — instead of
-    * rewriting data files (copy-on-write [[delete]]) or re-evaluating a
-    * predicate on every read ([[deleteDeferred]]). Reads anti-join only
-    * the targeted files against the delete relation; untouched files keep
-    * their plain scans. The 100 TB shape this exists for: a curation job
+  /** POSITIONAL merge-on-read DELETE (Iceberg v2 position deletes):
+    * record WHICH physical rows die — one deletion vector of row
+    * positions per data file under `deletes/` — instead of rewriting
+    * data files (copy-on-write [[delete]]) or re-evaluating a predicate
+    * on every read ([[deleteDeferred]]). Reads filter only the targeted
+    * files through their vectors; untouched files keep their plain
+    * scans. The 100 TB shape this exists for: a curation job
     * identifies a few million victim rows across a petabyte table — the
     * commit writes megabytes of positions, no data file is copied, and
     * the table stays exactly countable (per-target deleted-row counts
@@ -2835,14 +2780,13 @@ final class GraftTable private (
     *  - files whose stats PROVE every visible row matches are dropped
     *    from the manifest with no position I/O (the [[delete]] fast
     *    path);
-    *  - stored positions are DISJOINT across stacked entries (new
-    *    positions are anti-joined against prior delete files), and
-    *    targets always ⊆ the live manifest — so deleted-row counts are
-    *    exact by addition;
+    *  - a vector holds DISTINCT positions (new victims are filtered
+    *    through the prior vectors before the merge), and targets always
+    *    ⊆ the live manifest — so deleted-row counts are exact;
     *  - time travel to earlier snapshots sees the rows again (the entry
     *    lives in THIS snapshot's summary);
     *  - [[compact]] materializes positions into rewritten files; the
-    *    delete parquets are reclaimed by [[expireSnapshots]];
+    *    vectors are reclaimed by [[expireSnapshots]];
     *  - COMPOSES with pending equality and predicate-deferred entries
     *    (victims are rows visible under them, so the forms' dead sets
     *    stay disjoint and counts add exactly; the whole-file drop fast
@@ -3001,7 +2945,7 @@ final class GraftTable private (
 
   /** Shared tail of the positional-delete entry points: compute victim
     * positions over `partial` (already-deleted positions excluded, so
-    * entries stay disjoint), stage + land the delete parquets, and commit
+    * counts stay exact), stage + land the deletion vectors, and commit
     * `untouched ++ partial` with the adjusted entry list ("dropped" files
     * leave the manifest and are stripped from prior entries). */
   private def positionalCore(
@@ -3048,13 +2992,12 @@ final class GraftTable private (
     * `selectVictims` over raw provenance rows, already-dead positions
     * excluded) are merged with each affected file's prior vector into
     * ONE `deletes/dv-…` blob per data file; prior vectors of unaffected
-    * files CARRY by reference (no rewrite); any legacy (file,pos)
-    * parquet entries are converted in the same pass. The result is a
-    * SINGLE entry with at most one delete artifact per data file,
-    * whatever the stacking history — the read side then filters
-    * in-reader ([[DvContains]]) instead of anti-joining a union that
-    * grows with debt depth, and per-target counts stay exact (the
-    * vector IS the distinct position set).
+    * files CARRY by reference (no rewrite). The result is a SINGLE entry
+    * with at most one delete artifact per data file, whatever the
+    * stacking history — the read side then filters in-reader
+    * ([[DvContains]]) instead of anti-joining a union that grows with
+    * debt depth, and per-target counts stay exact (the vector IS the
+    * distinct position set).
     *
     * Returns (entries, newly-written rel paths, newly-dead row count);
     * entries echo the adjusted prior state when nothing matched. */
@@ -3068,7 +3011,6 @@ final class GraftTable private (
       eqEntries: Seq[EqualityDeletes] = Nil,
       pend: Seq[(Long, String)] = Nil)
       : (Seq[PositionalDeletes], Seq[String], Long) = {
-    import org.apache.spark.sql.functions.substring_index
     require(partial.forall(_.path.endsWith(".parquet")),
       s"positional DML cannot target non-parquet data files in $dir " +
         "(no parquet row index) — key-addressed curation works on any " +
@@ -3087,9 +3029,6 @@ final class GraftTable private (
     val dvByTarget: Map[String, String] = prior.flatMap(_.dvs).toMap
     require(dvByTarget.size == prior.map(_.dvs.size).sum,
       s"conflicting deletion-vector entries in $dir")
-    val legacyFiles = prior.filter(_.dvs.isEmpty).flatMap(_.files).distinct
-    val legacyTargets: Set[String] =
-      prior.filter(_.dvs.isEmpty).flatMap(_.targets.keys).toSet
 
     // victims come from rows VISIBLE under pending equality AND
     // predicate-deferred entries: a row another form already hides is
@@ -3103,9 +3042,7 @@ final class GraftTable private (
       .reduce(_ unionByName _)
     var victims = selectVictims(raw)
       .select(col(MetaFileCol), col(MetaPosCol).cast(LongType).as(MetaPosCol))
-    // disjointness/exactness: never re-record an already-dead row.
-    // Vector-recorded priors drop with an in-reader filter; legacy
-    // parquet priors with the historical anti-join.
+    // disjointness/exactness: never re-record an already-dead row
     if (dvByTarget.nonEmpty) {
       val idx = DvIndex(dvByTarget.map { case (t, rel) =>
         baseName(t) -> Paths.get(dir, rel).normalize().toString })
@@ -3113,61 +3050,25 @@ final class GraftTable private (
       victims = victims.filter(!b.column(DvContains(
         b.expr(col(MetaFileCol)), b.expr(col(MetaPosCol)), idx)))
     }
-    if (legacyFiles.nonEmpty) {
-      val priorDf = spark.read.schema(DeleteFileSchema)
-        .parquet(legacyFiles
-          .map(p => Paths.get(dir, p).normalize().toString): _*)
-        .select(substring_index(col("file"), "/", -1).as(MetaFileCol),
-          col("pos").cast(LongType).as(MetaPosCol))
-      victims = victims.join(priorDf, Seq(MetaFileCol, MetaPosCol), "left_anti")
-    }
 
     // AFFECTED bns (bounded driver state, ≤ |partial|): these files'
     // vectors rewrite; everything else carries
     val affectedBns: Set[String] = victims.select(MetaFileCol).distinct()
       .collect().map(_.getString(0)).toSet
-    // nothing matched: no commit (legacy conversion only ever
-    // piggybacks on a real delete)
-    if (affectedBns.isEmpty) return (prior, Nil, 0L)
-    // rewrite set = affected ∪ every legacy target (converted now, so
-    // the table is single-entry/one-artifact-per-file from here on)
-    val rewriteBns: Set[String] = affectedBns ++ legacyTargets.map(baseName)
-
-    // prior positions feeding the merge: affected files' vectors +
-    // ALL legacy positions (their targets all convert)
-    val priorDvIn: DataFrame = {
-      val m = dvByTarget.collect {
-        case (t, rel) if rewriteBns(baseName(t)) =>
-          baseName(t) -> Paths.get(dir, rel).normalize().toString
-      }
-      dvRelation(spark, m)
-    }
-    val legacyIn: DataFrame =
-      if (legacyFiles.isEmpty) dvRelation(spark, Map.empty)
-      else {
-        // restrict to LIVE legacy targets: shared legacy parquets may
-        // still hold rows for files stripped long ago — converting
-        // those would fabricate vectors for ghosts
-        val liveBns = spark.createDataFrame(
-          spark.sparkContext.parallelize(
-            legacyTargets.toSeq.sorted.map(t => Row(baseName(t))), 1),
-          StructType(Seq(StructField(MetaFileCol, StringType,
-            nullable = false))))
-        spark.read.schema(DeleteFileSchema)
-          .parquet(legacyFiles
-            .map(p => Paths.get(dir, p).normalize().toString): _*)
-          .select(substring_index(col("file"), "/", -1).as(MetaFileCol),
-            col("pos").cast(LongType).as(MetaPosCol))
-          .join(liveBns, Seq(MetaFileCol), "left_semi")
-      }
+    if (affectedBns.isEmpty) return (prior, Nil, 0L) // nothing matched
+    // prior positions feeding the merge: the affected files' vectors
+    val priorDvIn = dvRelation(spark, dvByTarget.collect {
+      case (t, rel) if affectedBns(baseName(t)) =>
+        baseName(t) -> Paths.get(dir, rel).normalize().toString
+    })
 
     val (counts, newByBn) = writeVectorBlobs(spark,
-      victims.union(priorDvIn).union(legacyIn), rewriteBns.size, snapId)
+      victims.union(priorDvIn), affectedBns.size, snapId)
 
     // consolidated single entry: carried (unaffected dv targets, by
     // reference) + rewritten (merged vectors, exact distinct counts)
     val carriedDvs = dvByTarget.filterNot { case (t, _) =>
-      rewriteBns(baseName(t)) }
+      affectedBns(baseName(t)) }
     val carriedTargets = prior.flatMap(_.targets).toMap
       .filter { case (t, _) => carriedDvs.contains(t) }
     val newTargets: Map[String, Long] = counts.map { case (bn, n) =>
@@ -3253,25 +3154,6 @@ final class GraftTable private (
     (counts, newByBn)
   }
 
-  /** Fold the pending POSITIONAL-delete state into its canonical form —
-    * ONE consolidated entry, one deletion vector per affected data file
-    * — WITHOUT touching any data file (Iceberg's
-    * `rewrite_position_delete_files` procedure, rebuilt for this
-    * representation). What it clears: legacy (file,pos)-parquet entries
-    * (their read path anti-joins a union that reopens every delete
-    * parquet per scan) convert to in-reader deletion vectors, ghost
-    * rows those shared parquets still hold for long-stripped targets
-    * drop, and a stacked entry list collapses to one. Already-canonical
-    * state (a single all-vector entry) is a no-op — returns None,
-    * nothing committed. Contrast [[compact]]: that clears DV debt by
-    * REWRITING the data files; this folds the delete artifacts alone —
-    * the cheap maintenance when data files are large and healthy.
-    * Per-target counts stay exact (each vector IS its distinct position
-    * set; the per-entry dead sets were disjoint at creation, and the
-    * blob writer collapses any resurrected overlap). Superseded
-    * artifacts (legacy parquets, replaced vectors) leave the entry's
-    * `files` — ancestor snapshots still reference them, expiration
-    * reclaims them. */
   /** DELETE-DEBT fold for the EQUALITY and PREDICATE-deferred forms —
     * the surgical sibling of [[compact]]: materialize every pending
     * equality/predicate entry by rewriting ONLY the files those entries
@@ -3284,8 +3166,7 @@ final class GraftTable private (
     * filters/anti-joins, and the operations that refuse pending
     * equality state (branch publish, CDC seeds) proceed. A covered
     * file's positional debt materializes with it (its positions change);
-    * uncovered files keep their deletion vectors — fold those with
-    * [[rewritePositionDeletes]] (metadata-only) instead.
+    * uncovered files keep their deletion vectors.
     *
     * Entries whose covered files are ALL gone already (rewritten by
     * earlier DML) drain in one metadata-only commit. Returns None when
@@ -3352,90 +3233,6 @@ final class GraftTable private (
     if (every <= 0) return None
     val depth = equalityDeletes.map(_.covs.size).sum
     if (depth >= every) rewriteDeleteFiles(spark, committedAt) else None
-  }
-
-  def rewritePositionDeletes(
-      spark: SparkSession,
-      committedAt: Option[Long] = None): Option[Snapshot] = {
-    import org.apache.spark.sql.functions.substring_index
-    val lg = log
-    val current = lg.current.getOrElse(return None)
-    val prior = parsePositional(current)
-    if (prior.isEmpty) return None
-    val legacy = prior.filter(_.dvs.isEmpty)
-    if (legacy.isEmpty && prior.size == 1) return None
-    val manifest = Manifest.read(s"$dir/${current.manifestList}")
-    val pathSet: Set[String] = manifest.files.map(_.path).toSet
-    val dvByTarget: Map[String, String] = prior.flatMap(_.dvs).toMap
-    require(dvByTarget.size == prior.map(_.dvs.size).sum,
-      s"conflicting deletion-vector entries in $dir")
-    val targetCounts: Map[String, Long] =
-      prior.flatMap(_.targets).groupMapReduce(_._1)(_._2)(_ + _)
-    // targets ⊆ manifest is maintained by every strip site; a violation
-    // means corrupted state — refuse rather than silently dropping debt
-    val gone = targetCounts.keySet.filterNot(pathSet)
-    require(gone.isEmpty,
-      s"positional-delete targets missing from the manifest of $dir: " +
-        gone.mkString(", "))
-    val snapId = lg.nextId
-    val legacyTargets: Set[String] = legacy.flatMap(_.targets.keys).toSet
-    val rewriteBns: Set[String] = legacyTargets.map(baseName)
-    val bnToPath: Map[String, String] =
-      manifest.files.map(f => baseName(f.path) -> f.path).toMap
-
-    val (entry, newRels): (PositionalDeletes, Seq[String]) =
-      if (rewriteBns.isEmpty) {
-        // a stacked all-vector history: pure map merge, no new blobs
-        (PositionalDeletes(
-          files = dvByTarget.values.toSeq.sorted,
-          targets = targetCounts,
-          dvs = dvByTarget), Nil)
-      } else {
-        // distributed conversion: legacy rows for LIVE targets, merged
-        // with any existing vector of the same file (a rollback can
-        // resurrect such overlap; the blob writer dedupes)
-        val legacyFiles = legacy.flatMap(_.files).distinct
-        val liveBns = spark.createDataFrame(
-          spark.sparkContext.parallelize(
-            rewriteBns.toSeq.sorted.map(bn => Row(bn)), 1),
-          StructType(Seq(StructField(MetaFileCol, StringType,
-            nullable = false))))
-        val legacyIn = spark.read.schema(DeleteFileSchema)
-          .parquet(legacyFiles
-            .map(p => Paths.get(dir, p).normalize().toString): _*)
-          .select(substring_index(col("file"), "/", -1).as(MetaFileCol),
-            col("pos").cast(LongType).as(MetaPosCol))
-          .join(liveBns, Seq(MetaFileCol), "left_semi")
-        val overlapDvs = dvByTarget.collect {
-          case (t, rel) if rewriteBns(baseName(t)) =>
-            baseName(t) -> Paths.get(dir, rel).normalize().toString
-        }
-        val (counts, newByBn) = writeVectorBlobs(spark,
-          legacyIn.union(dvRelation(spark, overlapDvs)),
-          rewriteBns.size, snapId)
-        val carriedDvs = dvByTarget.filterNot { case (t, _) =>
-          rewriteBns(baseName(t)) }
-        val newTargets: Map[String, Long] = counts.map { case (bn, n) =>
-          bnToPath.getOrElse(bn, throw new IllegalStateException(
-            s"deletion vector for unknown data file $bn in $dir")) -> n
-        }
-        val newDvs: Map[String, String] = newByBn.map { case (bn, rel) =>
-          bnToPath(bn) -> rel }
-        (PositionalDeletes(
-          files = (carriedDvs.values ++ newDvs.values).toSeq.sorted,
-          targets = targetCounts.filter { case (t, _) =>
-            carriedDvs.contains(t) } ++ newTargets,
-          dvs = carriedDvs ++ newDvs), newByBn.values.toSeq.sorted)
-      }
-    try Some(commit(lg, snapId, manifest, Nil,
-      operation = "rewrite-position-deletes", committedAt,
-      extraSummary = Map(
-        "position-delete-files" -> newRels.size.toString,
-        SummaryPositionalDeletes -> positionalJson(Seq(entry)))))
-    catch { case e: Throwable =>
-      newRels.foreach(r => Files.deleteIfExists(Paths.get(dir, r)))
-      throw e
-    }
   }
 
   /** A set of deletion vectors as a (basename, position) relation —
@@ -3561,13 +3358,11 @@ final class GraftTable private (
     * which entries cover them (by file snapshot id) — each group gets
     * the covering predicates as filters and the covering key files as
     * anti-joins (null keys never match, SQL semantics); positional
-    * deletes apply as ONE left-anti join on `(file basename, row
-    * position)` — only to the files some entry actually targets, so
-    * untouched files keep their plain codegen'd scan with zero join
-    * overhead. The positional anti-join key embeds the file identity,
-    * so a single global delete relation is correct without per-file
-    * filtering; at scale the delete relations are O(deleted rows/keys)
-    * and AQE broadcasts them when small. */
+    * deletes apply as an in-reader deletion-vector filter on `(file
+    * basename, row position)` — only to the files some entry actually
+    * targets, so untouched files keep their plain codegen'd scan. At
+    * scale the equality key relations are O(deleted keys) and AQE
+    * broadcasts them when small. */
   private def readVisible(
       spark: SparkSession,
       pend: Seq[(Long, String)],
@@ -3575,7 +3370,7 @@ final class GraftTable private (
       files: Seq[DataFileEntry],
       eqEntries: Seq[EqualityDeletes] = Nil,
       lineage: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.functions.{coalesce, expr, lit, not, substring_index}
+    import org.apache.spark.sql.functions.{coalesce, expr, lit, not}
     val outSchema =
       if (!lineage) schema
       else StructType(schema.fields ++ Seq(
@@ -3601,33 +3396,13 @@ final class GraftTable private (
         // per row (binary search of the file's lazily-loaded vector —
         // [[DvContains]]), no join in the plan and no delete relation
         // re-read per query; tasks load only the vectors of the files
-        // they scan. Legacy (file,pos)-parquet entries keep the
-        // historical anti-join until the next positional commit
-        // consolidates them.
-        val dvByBn: Map[String, String] = posEntries.flatMap(_.dvs).map {
-          case (t, rel) =>
-            baseName(t) -> Paths.get(dir, rel).normalize().toString
-        }.toMap
-        val legacyEntries = posEntries.filter(_.dvs.isEmpty)
-        val base = pendGroups(withDel, meta = true)
-        val withDv =
-          if (dvByBn.isEmpty) base
-          else {
-            val b = org.apache.spark.sql.classic.GraftBridge
-            val idx = DvIndex(dvByBn)
-            base.map(_.filter(!b.column(DvContains(
-              b.expr(col(MetaFileCol)), b.expr(col(MetaPosCol)), idx))))
-          }
-        if (legacyEntries.isEmpty) withDv
-        else {
-          val delPaths = legacyEntries.flatMap(_.files).distinct
-            .map(p => Paths.get(dir, p).normalize().toString)
-          val deletes = spark.read.schema(DeleteFileSchema)
-            .parquet(delPaths: _*)
-            .select(substring_index(col("file"), "/", -1).as(MetaFileCol),
-              col("pos").as(MetaPosCol))
-          withDv.map(_.join(deletes, Seq(MetaFileCol, MetaPosCol), "left_anti"))
-        }
+        // they scan
+        val idx = DvIndex(posEntries.flatMap(_.dvs).map { case (t, rel) =>
+          baseName(t) -> Paths.get(dir, rel).normalize().toString
+        }.toMap)
+        val b = org.apache.spark.sql.classic.GraftBridge
+        pendGroups(withDel, meta = true).map(_.filter(!b.column(DvContains(
+          b.expr(col(MetaFileCol)), b.expr(col(MetaPosCol)), idx))))
       }
     (pendGroups(clean, meta = false) ++ delBranches)
       .map(_.select(outSchema.fieldNames.map(col): _*))
@@ -3677,26 +3452,22 @@ final class GraftTable private (
     relPath.substring(relPath.lastIndexOf('/') + 1)
 
   /** An equality-delete entry's key relation, read under the TABLE
-    * schema's column types (parquet projection drops the consolidated
-    * per-row covering-snapshot column when present). */
+    * schema's column types (parquet projection drops the per-row
+    * covering-snapshot column). */
   private def readEqKeys(spark: SparkSession, e: EqualityDeletes): DataFrame =
     spark.read
       .schema(StructType(e.cols.map(c => schema(c)).toArray))
       .parquet(e.files.map(p => Paths.get(dir, p).normalize().toString): _*)
 
-  /** The entry's key relation WITH each row's covering snapshot:
-    * consolidated entries carry it as a physical column; legacy
-    * single-commit entries get their wholesale [[EqualityDeletes.covered]]
-    * as a constant (so consolidation commits can fold them in). */
+  /** The entry's key relation WITH each row's covering snapshot
+    * ([[GraftTable.EqCovCol]], a physical column of the key files). */
   private def readEqKeysTagged(
       spark: SparkSession, e: EqualityDeletes): DataFrame =
-    if (e.coveredSnaps.nonEmpty)
-      spark.read
-        .schema(StructType((e.cols.map(c => schema(c)) :+
-          StructField(GraftTable.EqCovCol, LongType, nullable = false))
-          .toArray))
-        .parquet(e.files.map(p => Paths.get(dir, p).normalize().toString): _*)
-    else readEqKeys(spark, e).withColumn(GraftTable.EqCovCol, lit(e.covered))
+    spark.read
+      .schema(StructType((e.cols.map(c => schema(c)) :+
+        StructField(GraftTable.EqCovCol, LongType, nullable = false))
+        .toArray))
+      .parquet(e.files.map(p => Paths.get(dir, p).normalize().toString): _*)
 
   /** The key tuples of `e` applicable to a file group whose applicable
     * covering snapshots are `covs` (⊆ `e.covs`, nonempty): all-applicable
@@ -3705,8 +3476,7 @@ final class GraftTable private (
     * anti-join per group regardless of stacking depth. */
   private def eqKeysScoped(
       spark: SparkSession, e: EqualityDeletes, covs: Seq[Long]): DataFrame =
-    if (e.coveredSnaps.isEmpty || covs.size == e.coveredSnaps.size)
-      readEqKeys(spark, e)
+    if (covs.size == e.covs.size) readEqKeys(spark, e)
     else readEqKeysTagged(spark, e)
       .filter(col(GraftTable.EqCovCol).isin(covs: _*))
       .select(e.cols.map(col): _*)
@@ -4461,10 +4231,10 @@ final class GraftTable private (
           // a branch never owns those bytes and must not reclaim them
           .filterNot(_.startsWith("../"))
         dead.foreach(p => Files.deleteIfExists(Paths.get(dir, p)))
-        // positional delete parquets are referenced from snapshot
-        // SUMMARIES, not manifests — reclaim the ones no surviving
-        // snapshot's entries mention (compaction/DML strip entries but
-        // keep the parquets so older snapshots stay readable)
+        // deletion vectors and equality key files are referenced from
+        // snapshot SUMMARIES, not manifests — reclaim the ones no
+        // surviving snapshot's entries mention (compaction/DML strip
+        // entries but keep the files so older snapshots stay readable)
         val liveDel: Set[String] =
           kept.flatMap(s => parsePositional(s).flatMap(_.files) ++
             parseEquality(s).flatMap(_.files)).toSet
@@ -4476,10 +4246,10 @@ final class GraftTable private (
         // only the ones no surviving manifest list mentions, then the
         // expired lists themselves
         val liveSegs: Set[String] = kept
-          .flatMap(s => Manifest.segmentRefsOf(s"$dir/${s.manifestList}"))
+          .flatMap(s => Manifest.read(s"$dir/${s.manifestList}").segmentRefs)
           .toSet
         expired
-          .flatMap(s => Manifest.segmentRefsOf(s"$dir/${s.manifestList}"))
+          .flatMap(s => Manifest.read(s"$dir/${s.manifestList}").segmentRefs)
           .distinct.filterNot(liveSegs)
           .foreach(r => Files.deleteIfExists(Paths.get(dir, r)))
         expired.foreach(s =>
@@ -4550,7 +4320,7 @@ final class GraftTable private (
     // in a manifest list (the race loser and the log-write failure path
     // clean up after themselves; a kill -9 between the two does not)
     val refSegs: Set[String] = lg.snapshots
-      .flatMap(s => Manifest.segmentRefsOf(s"$dir/${s.manifestList}"))
+      .flatMap(s => Manifest.read(s"$dir/${s.manifestList}").segmentRefs)
       .map(r => Paths.get(dir, r).normalize().toString).toSet
     val orphanSegs = walk(Paths.get(dir, "manifests"))
       .filter(p => p.getFileName.toString.startsWith("seg-"))
@@ -5489,18 +5259,14 @@ final class GraftTable private (
           // its key-column set's file, so "new" = any entry whose file
           // set is not carried verbatim from the parent; its fresh keys
           // are the rows tagged with the parent snapshot (this commit's
-          // covered scope). Legacy single-commit entries ARE their
-          // fresh keys (their covered equals the parent snapshot).
+          // covered scope)
           val parentEqFiles = parentEq.flatMap(_.files).toSet
           val newEntries = parseEquality(s)
             .filterNot(e => e.files.forall(parentEqFiles.contains))
           newEntries.map { e =>
-            val newKeys =
-              if (e.coveredSnaps.nonEmpty)
-                readEqKeysTagged(spark, e)
-                  .filter(col(GraftTable.EqCovCol) === p.snapshotId)
-                  .select(e.cols.map(col): _*)
-              else readEqKeys(spark, e)
+            val newKeys = readEqKeysTagged(spark, e)
+              .filter(col(GraftTable.EqCovCol) === p.snapshotId)
+              .select(e.cols.map(col): _*)
             val covered = files(s).filter(f =>
               fileSnapId(f.path).forall(_ <= p.snapshotId))
             val survivors = readVisibleL(parsePending(p),
@@ -5510,14 +5276,13 @@ final class GraftTable private (
           } ++ inserts
         // POSITIONAL delete/update: deletes = whole-file drops' visible
         // survivors + the new entries' exact rows (target files
-        // semi-joined against their delete parquets); inserts = the
+        // semi-joined against their new vector positions); inserts = the
         // commit's freshly added files (an update's superseding values;
         // empty for a pure delete). Disjointness of stacked entries
         // guarantees retracted rows were visible at the parent — each is
         // retracted exactly once.
         case "delete" | "update"
             if s.summary.get("positional").contains("true") =>
-          import org.apache.spark.sql.functions.substring_index
           val p = parent(s)
           val pPos = parsePositional(p)
           val pf = files(p)
@@ -5539,55 +5304,28 @@ final class GraftTable private (
           val newEntries = parsePositional(s)
             .filterNot(e => e.files.forall(parentEntryFiles.contains))
           val posDel = newEntries.map { e =>
-            if (e.dvs.nonEmpty) {
-              // CONSOLIDATED deletion-vector entry: the commit's delta
-              // is (this snapshot's vectors) − (the parent's positions)
-              // for the REWRITTEN targets only — a carried vector file
-              // also appears in the parent entry, so it is excluded by
-              // path identity; prior positions inside a rewritten
-              // vector are anti-joined away (legacy parquet priors
-              // included, for the conversion commit)
-              val changed = e.dvs.filterNot { case (_, rel) =>
-                parentEntryFiles.contains(rel) }
-              val curPos = dvRelation(spark, changed.map { case (t, rel) =>
-                baseName(t) -> Paths.get(dir, rel).normalize().toString })
-              val changedBns = changed.keySet.map(baseName)
-              val parentDvPos = dvRelation(spark,
-                pPos.flatMap(_.dvs).collect {
-                  case (t, rel) if changedBns(baseName(t)) =>
-                    baseName(t) -> Paths.get(dir, rel).normalize().toString
-                }.toMap)
-              val parentLegacy = pPos.filter(_.dvs.isEmpty)
-                .flatMap(_.files).distinct
-              val parentPos =
-                if (parentLegacy.isEmpty) parentDvPos
-                else parentDvPos.unionByName(
-                  spark.read.schema(DeleteFileSchema)
-                    .parquet(parentLegacy
-                      .map(p => Paths.get(dir, p).normalize().toString): _*)
-                    .select(substring_index(col("file"), "/", -1)
-                      .as(MetaFileCol),
-                      col("pos").cast(LongType).as(MetaPosCol)))
-              val newPos = curPos
-                .join(parentPos, Seq(MetaFileCol, MetaPosCol), "left_anti")
-              val targets = files(s).filter(f => changed.contains(f.path))
-              tag(readFiles(spark, targets, withMeta = true,
-                  withLineage = lineage)
-                .join(newPos, Seq(MetaFileCol, MetaPosCol), "left_semi")
-                .select(rowCols.map(col): _*), "delete", s)
-            } else {
-              val targets = files(s).filter(f => e.targets.contains(f.path))
-              val delPaths = e.files
-                .map(rp => Paths.get(dir, rp).normalize().toString)
-              val delDf = spark.read.schema(DeleteFileSchema)
-                .parquet(delPaths: _*)
-                .select(substring_index(col("file"), "/", -1).as(MetaFileCol),
-                  col("pos").as(MetaPosCol))
-              tag(readFiles(spark, targets, withMeta = true,
-                  withLineage = lineage)
-                .join(delDf, Seq(MetaFileCol, MetaPosCol), "left_semi")
-                .select(rowCols.map(col): _*), "delete", s)
-            }
+            // the consolidated entry's delta is (this snapshot's vectors)
+            // − (the parent's positions) for the REWRITTEN targets only —
+            // a carried vector file also appears in the parent entry, so
+            // it is excluded by path identity; prior positions inside a
+            // rewritten vector are anti-joined away
+            val changed = e.dvs.filterNot { case (_, rel) =>
+              parentEntryFiles.contains(rel) }
+            val curPos = dvRelation(spark, changed.map { case (t, rel) =>
+              baseName(t) -> Paths.get(dir, rel).normalize().toString })
+            val changedBns = changed.keySet.map(baseName)
+            val parentPos = dvRelation(spark,
+              pPos.flatMap(_.dvs).collect {
+                case (t, rel) if changedBns(baseName(t)) =>
+                  baseName(t) -> Paths.get(dir, rel).normalize().toString
+              }.toMap)
+            val newPos = curPos
+              .join(parentPos, Seq(MetaFileCol, MetaPosCol), "left_anti")
+            val targets = files(s).filter(f => changed.contains(f.path))
+            tag(readFiles(spark, targets, withMeta = true,
+                withLineage = lineage)
+              .join(newPos, Seq(MetaFileCol, MetaPosCol), "left_semi")
+              .select(rowCols.map(col): _*), "delete", s)
           }
           droppedDel ++ posDel ++ inserts
         // publish = the branch's accumulated changes landing as one
@@ -5683,11 +5421,10 @@ final class GraftTable private (
     * per-file deletion vectors (basename → absolute path) a seed reader
     * needs to serve exactly the VISIBLE rows straight from those files.
     * Extends [[rawVisibleFiles]] eligibility to POSITIONAL-pending
-    * snapshots whose entries are fully vector-backed (the consolidated
-    * form every positional commit writes) — the zero-copy seed then
-    * filters dead positions in place instead of materializing a
-    * full-state spill. Predicate/equality-pending snapshots and legacy
-    * parquet-entry positional state still return None (materialize).
+    * snapshots — the zero-copy seed then filters dead positions in
+    * place instead of materializing a full-state spill.
+    * Predicate/equality-pending snapshots still return None
+    * (materialize).
     * Like the base eligibility, this is a pure function of the
     * immutable snapshot — replays decide identically. */
   /** The snapshot that committed `path` (parsed from the canonical
@@ -5704,10 +5441,8 @@ final class GraftTable private (
     val s = log.byId(snapshotId).getOrElse(throw new IllegalStateException(
       s"no snapshot $snapshotId in $dir (expired?) — re-seed the consumer"))
     if (parsePending(s).nonEmpty || parseEquality(s).nonEmpty) return None
-    val pos = parsePositional(s)
-    if (pos.exists(e => e.dvs.keySet != e.targets.keySet)) return None
     rawFilesCore(s, identityViaPathRecovery).map { fs =>
-      val dvByBn = pos.flatMap(_.dvs).map { case (t, rel) =>
+      val dvByBn = parsePositional(s).flatMap(_.dvs).map { case (t, rel) =>
         baseName(t) -> Paths.get(dir, rel).normalize().toString
       }.toMap
       (fs, dvByBn)
@@ -6121,26 +5856,16 @@ final class GraftTable private (
     * ships O(segments) refs; each task parses its own segment shard and
     * emits its entries. At ~1 M files the driver never materializes the
     * file list — this is what keeps the `__files`/`__partitions`
-    * metadata tables queryable (and parallel) at any table size.
-    * Unreferenced segments (fresh, or legacy v1 inline manifests) are
-    * already parsed driver-side and ship as a small sliced RDD. */
+    * metadata tables queryable (and parallel) at any table size. */
   private def entriesRdd(
       spark: SparkSession, s: Snapshot): org.apache.spark.rdd.RDD[DataFileEntry] = {
-    val m = Manifest.read(s"$dir/${s.manifestList}")
-    val (refSegs, inline) = m.segments.partition(_.ref.isDefined)
-    val refs = refSegs.flatMap(_.ref)
+    val refs = Manifest.read(s"$dir/${s.manifestList}").segmentRefs
     val td = dir
-    val refRdd =
-      if (refs.isEmpty) spark.sparkContext.emptyRDD[DataFileEntry]
-      else spark.sparkContext
-        .parallelize(refs, math.min(refs.size,
-          math.max(1, spark.sparkContext.defaultParallelism)))
-        .flatMap(rel => Manifest.readSegmentFiles(s"$td/$rel"))
-    val inlineEntries = inline.flatMap(_.files)
-    if (inlineEntries.isEmpty) refRdd
-    else refRdd.union(spark.sparkContext.parallelize(inlineEntries,
-      math.min(inlineEntries.size,
-        math.max(1, spark.sparkContext.defaultParallelism))))
+    if (refs.isEmpty) spark.sparkContext.emptyRDD[DataFileEntry]
+    else spark.sparkContext
+      .parallelize(refs, math.min(refs.size,
+        math.max(1, spark.sparkContext.defaultParallelism)))
+      .flatMap(rel => Manifest.readSegmentFiles(s"$td/$rel"))
   }
 
   /** The `__all_files` metadata table (Iceberg `all_files`/
@@ -6556,12 +6281,17 @@ object GraftTable {
   val LastUpdatedCol = "_last_updated_snapshot_id"
   val SummaryStreamCursors = "stream-cursors"
 
-  /** One EQUALITY merge-on-read delete commit's bookkeeping (Iceberg v2
-    * equality-delete files): `files` are parquet key files under
-    * `deletes/` holding the victim key tuples in columns `cols`; the
-    * entry applies to data files written at snapshot ≤ `covered` (the
-    * predicate-deferred scoping — rows appended later are untouched).
-    * Commit cost is O(keys) plus, by default, one bounds-pruned
+  /** The pending EQUALITY merge-on-read deletes of one key-column set
+    * (Iceberg v2 equality-delete files), consolidated at every commit:
+    * `files` are parquet key files under `deletes/` holding the victim
+    * key tuples in columns `cols`, each row tagged with the snapshot its
+    * commit covered ([[GraftTable.EqCovCol]]) — the deletion-vector
+    * discipline applied to the equality side, so read cost stops growing
+    * with stacking depth. `covs` lists every folded commit's covered
+    * snapshot; a key row applies to data files written at snapshot ≤ its
+    * tag (the predicate-deferred scoping — rows appended later are
+    * untouched), and `covered` is the max of `covs`, the entry's scope
+    * ceiling. Commit cost is O(keys) plus, by default, one bounds-pruned
     * candidate-scan count job that records `dead` — the entry's exact
     * victim count (counted against rows visible under its predecessor
     * entries, so summing entries is exact and `count(*)`/stats stay
@@ -6571,35 +6301,24 @@ object GraftTable {
     * anti-join on covered files until compaction materializes. */
   final case class EqualityDeletes(
       files: Seq[String], cols: Seq[String], covered: Long,
-      dead: Option[Long] = None, coveredSnaps: Seq[Long] = Nil) {
-    /** Per-row covering snapshots present in this entry's key files:
-      * CONSOLIDATED entries (one parquet per key-column set, each key
-      * row tagged with the snapshot its commit covered — the DV
-      * discipline applied to the equality side, so read cost stops
-      * growing with stacking depth) list every folded commit's covered
-      * snapshot; legacy single-commit entries scope wholesale by
-      * [[covered]]. `covered` is always the max — the entry's scope
-      * ceiling, so whole-entry applicability checks stay exact. */
-    def covs: Seq[Long] =
-      if (coveredSnaps.nonEmpty) coveredSnaps else Seq(covered)
-  }
+      dead: Option[Long], covs: Seq[Long])
 
-  /** One POSITIONAL merge-on-read delete commit's bookkeeping: the
-    * parquet delete files it wrote (`deletes/del-…`, rows of
-    * `(file, pos)` — the manifest-relative target path and the row's
-    * physical position in it) and, per target data file, how many of its
-    * rows the entry deletes. Targets pin EXACT files, so — unlike the
+  /** The pending POSITIONAL merge-on-read deletes, consolidated into
+    * one entry by every positional commit: `dvs` maps each target data
+    * file (manifest-relative path) to its deletion vector
+    * (`deletes/dv-…bin`, the sorted row positions deleted in it),
+    * `files` lists those vectors, and `targets` counts the deleted rows
+    * per target file. Targets pin EXACT files, so — unlike the
     * predicate-deferred form — no snapshot-id scoping is needed and
     * later appends are untouched by construction. The per-target counts
-    * keep `count(*)`/stats exact without reading a byte: entries are
-    * maintained so stored positions are DISJOINT across entries (the
-    * write path anti-joins new positions against prior delete files)
-    * and targets always ⊆ the live manifest (DML/compaction strip
-    * rewritten or dropped files). */
+    * keep `count(*)`/stats exact without reading a byte: a vector holds
+    * distinct positions (the write path filters new victims through the
+    * prior vectors) and targets always ⊆ the live manifest
+    * (DML/compaction strip rewritten or dropped files). */
   final case class PositionalDeletes(
       files: Seq[String],
       targets: Map[String, Long],
-      dvs: Map[String, String] = Map.empty) {
+      dvs: Map[String, String]) {
     def deletedRows: Long = targets.values.sum
   }
 
@@ -6656,17 +6375,12 @@ object GraftTable {
       case _ => false
     }
 
-  /** On-disk schema of a positional delete file. */
-  val DeleteFileSchema: StructType = StructType(Seq(
-    StructField("file", StringType, nullable = false),
-    StructField("pos", LongType, nullable = false)))
-
   /** Internal provenance column names (never visible to readers). */
   private[table] val MetaFileCol = "__gf_file"
   private[table] val MetaPosCol = "__gf_pos"
 
-  /** Per-row covering-snapshot column inside CONSOLIDATED equality-delete
-    * key files (never visible to readers). */
+  /** Per-row covering-snapshot column inside equality-delete key files
+    * (never visible to readers). */
   private[table] val EqCovCol = "__eq_covered"
 
   /** Column names the engine reserves: the DSv2 metadata columns — a
@@ -6795,15 +6509,41 @@ object GraftTable {
     streamCompactBytes(properties)
     dmlIsolationOf(properties): Unit
     Files.createDirectories(p)
-    val meta = Map(
-      "format_version" -> 1L,
-      "schema" -> schema.json,
-      "partition_columns" -> partitionBy,
-      "properties" -> properties)
-    Files.writeString(p.resolve("metadata.json"), graft.util.Json.write(meta))
+    Files.writeString(p.resolve("metadata.json"),
+      metadataJson(schema, properties, partitionBy))
     SnapshotLog.empty.write(s"$dir/snapshots.json")
     new GraftTable(dir, schema, properties, partitionBy)
   }
+
+  /** The table metadata format this code writes and reads. A change to
+    * any metadata shape (`metadata.json`, the snapshot summaries, the
+    * manifest lists, `refs.json`) bumps it; [[load]] refuses every other
+    * version instead of keeping a reader for the old shape. */
+  val FormatVersion = 2L
+
+  /** The `metadata.json` document: the one place that writes it, so
+    * every table carries [[FormatVersion]]. */
+  private def metadataJson(
+      schema: StructType,
+      properties: Map[String, String],
+      partitionColumns: Seq[String],
+      dropped: Seq[String] = Nil,
+      renames: Seq[ColumnRename] = Nil,
+      widenings: Seq[ColumnWidening] = Nil,
+      defaults: Seq[ColumnDefault] = Nil): String =
+    graft.util.Json.write(Map(
+      "format_version" -> FormatVersion,
+      "schema" -> schema.json,
+      "partition_columns" -> partitionColumns,
+      "properties" -> properties,
+      "dropped_columns" -> dropped,
+      "column_renames" -> renames.map(r =>
+        Map("at" -> r.at, "from" -> r.from, "to" -> r.to, "seq" -> r.seq)),
+      "column_widenings" -> widenings.map(w =>
+        Map("at" -> w.at, "col" -> w.col,
+          "from" -> w.from.json, "to" -> w.to.json, "seq" -> w.seq)),
+      "column_defaults" -> defaults.map(d =>
+        Map("at" -> d.at, "col" -> d.col, "sql" -> d.sql, "seq" -> d.seq))))
 
   /** Canonical snapshot-log file name; any other name marks the handle
     * as transaction-staged (see [[GraftTransaction]]). */
@@ -6822,6 +6562,13 @@ object GraftTable {
     val metaPath = Paths.get(dir, "metadata.json")
     require(Files.exists(metaPath), s"not a graft table (no metadata.json): $dir")
     val meta = graft.util.Json.parseObject(Files.readString(metaPath))
+    meta.get("format_version") match {
+      case Some(FormatVersion) => ()
+      case found => throw new IllegalStateException(
+        s"cannot load table $dir: its metadata has format_version " +
+          s"${found.getOrElse("(none)")}, but this code reads only " +
+          s"format_version $FormatVersion — rebuild the table")
+    }
     val schema = DataType.fromJson(meta("schema").asInstanceOf[String])
       .asInstanceOf[StructType]
     val props = meta.getOrElse("properties", Map.empty[String, Any])
@@ -6931,11 +6678,7 @@ object GraftTable {
       val stagedLogName = s"$MainLog.rtas-$token"
       graft.util.Json.writeFileAtomic(
         Paths.get(dir, stagedMetaName).toString,
-        graft.util.Json.write(Map(
-          "format_version" -> 1L,
-          "schema" -> schema.json,
-          "partition_columns" -> partitionBy,
-          "properties" -> properties)))
+        metadataJson(schema, properties, partitionBy))
       SnapshotLog.empty.write(s"$dir/$stagedLogName")
       val staged = new GraftTable(dir, schema, properties, partitionBy,
         logName = stagedLogName)

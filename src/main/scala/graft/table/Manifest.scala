@@ -56,7 +56,7 @@ final class ManifestSegment private (
       * stats — [[ColumnStats.mergeEnvelope]]), carried IN THE MANIFEST
       * LIST so predicate-scoped scans and DML skip whole segments
       * without parsing them (Iceberg's manifest-list partition-summary
-      * analog). None = unknown (legacy lists, schema-less writers) —
+      * analog). None = unknown (schema-less writers) —
       * consumers must then parse. */
     val envelope: Option[Map[String, ColumnStats]]) {
   lazy val files: Vector[DataFileEntry] = filesThunk()
@@ -297,16 +297,6 @@ object Manifest {
     (absPath, attrs.size(), attrs.lastModifiedTime().toMillis)
   }
 
-  private def cacheGet(absPath: String): Option[Vector[DataFileEntry]] = {
-    val key = cacheKey(absPath)
-    cache.synchronized(Option(cache.get(key)))
-  }
-
-  private def cachePut(absPath: String, v: Vector[DataFileEntry]): Unit = {
-    val key = cacheKey(absPath)
-    cache.synchronized(cache.put(key, v))
-  }
-
   private def cachedFiles(absPath: String)(
       parse: String => Vector[DataFileEntry]): Vector[DataFileEntry] = {
     val key = cacheKey(absPath)
@@ -318,12 +308,7 @@ object Manifest {
     }
   }
 
-  /** Read a snapshot's manifest. Format v2 (`segments`) assembles lazy
-    * segments — a caller that never touches `.files` (an append commit)
-    * reads only the list. Format v1 (`files`, pre-segmentation) parses
-    * inline and presents as one fresh segment, so the next commit
-    * migrates it to a segment file transparently. */
-  /** Parsed v2 manifest-LIST cache. Lists are write-once like segments
+  /** Parsed manifest-LIST cache. Lists are write-once like segments
     * (`snap-<id>.json`, atomic publish), and the hot paths — loadTable
     * per SQL query, scan planning, stream pacing — all start with a
     * `Manifest.read` of the current list; the (size, mtime)-keyed hit
@@ -339,80 +324,38 @@ object Manifest {
         size() > CacheCap
     }
 
+  /** Read a snapshot's manifest list: lazy segments, so a caller that
+    * never touches `.files` (an append commit, expire's ref counting)
+    * reads only the list. */
   def read(absPath: String): Manifest = {
     val tableDir = Paths.get(absPath).getParent.getParent.toString
-    // v1 fast path BEFORE any parse: historical pre-segmentation
-    // manifests keep the inline-files format forever and can be huge —
-    // a cache hit skips the whole JSON parse, like a segment's would
-    cacheGet(absPath).foreach { files =>
-      return if (files.isEmpty) empty
-      else new Manifest(Vector(ManifestSegment.fresh(files)))
-    }
     val key = cacheKey(absPath)
     listCache.synchronized(Option(listCache.get(key))).foreach(m => return m)
     listParses.incrementAndGet()
     val obj = Json.parseObject(Files.readString(Paths.get(absPath)))
-    obj.get("segments") match {
-      case Some(segs) =>
-        val parsed = new Manifest(segs.asInstanceOf[Seq[Any]].map { s =>
-          val m = s.asInstanceOf[Map[String, Any]]
-          val env = m.get("stats").map(_.asInstanceOf[Map[String, Any]]
-            .map { case (c, raw) =>
-              val sm = raw.asInstanceOf[Map[String, Any]]
-              c -> ColumnStats(
-                Option(sm.getOrElse("min", null)).map(_.toString),
-                Option(sm.getOrElse("max", null)).map(_.toString),
-                Option(sm.getOrElse("null_count", null))
-                  .map(_.asInstanceOf[Long]),
-                Option(sm.getOrElse("value_count", null))
-                  .map(_.asInstanceOf[Long]))
-            })
-          ManifestSegment.loaded(
-            m("path").asInstanceOf[String],
-            tableDir,
-            m("file_count").asInstanceOf[Long],
-            m("record_count").asInstanceOf[Long],
-            m("size_bytes").asInstanceOf[Long],
-            env)
-        }.toVector)
-        listCache.synchronized(listCache.put(key, parsed): Unit)
-        parsed
-      case None =>
-        // v1 manifests are immutable too (only the HEAD migrates on the
-        // next commit; historical snapshots keep this format forever) —
-        // cache the ALREADY-parsed entries (the miss path above read the
-        // file once; re-reading through cachedFiles would double the I/O)
-        val files = parseEntries(obj)
-        cachePut(absPath, files)
-        if (files.isEmpty) empty
-        else new Manifest(Vector(ManifestSegment.fresh(files)))
-    }
-  }
-
-  /** The segment refs of a manifest list without touching any segment
-    * (expiration/orphan ref-counting, called once per snapshot per run).
-    * Cached: a LEGACY v1 manifest would otherwise pay its full O(files)
-    * inline parse on every maintenance pass just to return Nil. */
-  private val refsCache =
-    new java.util.LinkedHashMap[(String, Long, Long), Seq[String]](
-      16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, Long, Long), Seq[String]]): Boolean =
-        size() > CacheCap
-    }
-
-  def segmentRefsOf(absPath: String): Seq[String] = {
-    val key = cacheKey(absPath)
-    refsCache.synchronized(Option(refsCache.get(key))).getOrElse {
-      val obj = Json.parseObject(Files.readString(Paths.get(absPath)))
-      val refs = obj.get("segments") match {
-        case Some(segs) => segs.asInstanceOf[Seq[Any]]
-          .map(s => s.asInstanceOf[Map[String, Any]]("path").asInstanceOf[String])
-        case None => Seq.empty[String]
-      }
-      refsCache.synchronized(refsCache.put(key, refs))
-      refs
-    }
+    val parsed = new Manifest(obj("segments").asInstanceOf[Seq[Any]].map { s =>
+      val m = s.asInstanceOf[Map[String, Any]]
+      val env = m.get("stats").map(_.asInstanceOf[Map[String, Any]]
+        .map { case (c, raw) =>
+          val sm = raw.asInstanceOf[Map[String, Any]]
+          c -> ColumnStats(
+            Option(sm.getOrElse("min", null)).map(_.toString),
+            Option(sm.getOrElse("max", null)).map(_.toString),
+            Option(sm.getOrElse("null_count", null))
+              .map(_.asInstanceOf[Long]),
+            Option(sm.getOrElse("value_count", null))
+              .map(_.asInstanceOf[Long]))
+        })
+      ManifestSegment.loaded(
+        m("path").asInstanceOf[String],
+        tableDir,
+        m("file_count").asInstanceOf[Long],
+        m("record_count").asInstanceOf[Long],
+        m("size_bytes").asInstanceOf[Long],
+        env)
+    }.toVector)
+    listCache.synchronized(listCache.put(key, parsed): Unit)
+    parsed
   }
 
   /** Manifest-LIST parse counter (cache misses only) — observable by

@@ -70,7 +70,7 @@ object TableDemo {
     println("DEFERRED-MATERIALIZED: rows=" + mt.read(spark).orderBy("id")
       .collect().mkString(", ") + " pending=" + mt.pendingDeletes.size)
 
-    // positional (merge-on-read) delete: row-level (file, pos) entries —
+    // positional (merge-on-read) delete: row-level deletion vectors —
     // no data rewrite; key-addressed deletes are the curation entry point
     val pdt = GraftTable.create(s"$dir/pos", schema)
     pdt.append(df(1L -> "keep", 2L -> "dup", 3L -> "dup"), Some(1000L))

@@ -1577,10 +1577,10 @@ class GraftSparkCatalogSpec extends SparkSpecBase {
       "CALL g2.system.rewrite_position_delete_files('db.proc_rpd')")
       .collect().isEmpty)
     assert(GraftTable.load(s"$wh/db/proc_rpd").log.snapshots.size == 2)
-    // the end-to-end legacy fold is PositionalDeleteSpec's; the SQL
-    // surface here proves routing + result shape on the no-op path and
-    // that the table keeps serving (library read — raw SQL over
-    // MoR-pending state needs an extensions session by design)
+    // the procedure is an Iceberg-parity no-op (every positional commit
+    // already leaves the canonical form): this proves routing + result
+    // shape and that the table keeps serving (library read — raw SQL
+    // over MoR-pending state needs an extensions session by design)
     assert(GraftTable.load(s"$wh/db/proc_rpd").read(spark)
       .select("id").collect().map(_.getLong(0)).sorted.toSeq == Seq(1L, 3L))
   }

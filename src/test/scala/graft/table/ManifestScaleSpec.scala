@@ -168,10 +168,10 @@ class ManifestScaleSpec extends SparkSpecBase {
     // CoW delete of row 1 rewrites snapshot 1's segment; snapshot 2's
     // second segment is shared by snapshots 2 and 3
     t.delete(spark, col("id") === 1L, Some(3000L))
-    val seg1 = Manifest.segmentRefsOf(
-      s"$dir/${t.log.byId(1L).get.manifestList}")
-    val seg3 = Manifest.segmentRefsOf(
-      s"$dir/${t.log.current.get.manifestList}")
+    val seg1 = Manifest.read(
+      s"$dir/${t.log.byId(1L).get.manifestList}").segmentRefs
+    val seg3 = Manifest.read(
+      s"$dir/${t.log.current.get.manifestList}").segmentRefs
     val unshared = seg1.filterNot(seg3.contains)
     assert(unshared.nonEmpty, "fixture needs an unshared segment")
 
@@ -501,25 +501,6 @@ class ManifestScaleSpec extends SparkSpecBase {
     assert(spark.sql(
       "SELECT record_count FROM gdm.db.dm__partitions").collect()
       .map(_.getLong(0)).toSeq == Seq(12L))
-  }
-
-  test("v1 (pre-segmentation) manifests read and migrate transparently") {
-    val dir = s"${tmp()}/t"
-    val t = GraftTable.create(dir, schema)
-    t.append(mkDf(1L -> "a", 2L -> "b"), Some(1000L))
-    // rewrite the current manifest in the OLD inline-files format
-    val cur = t.log.current.get
-    val m = Manifest.read(s"$dir/${cur.manifestList}")
-    graft.util.Json.writeFileAtomic(s"$dir/${cur.manifestList}",
-      graft.util.Json.write(
-        Map("files" -> m.files.map(Manifest.entryToJson))))
-    // reads see the same table
-    assert(t.read(spark).count() == 2L)
-    // the next commit migrates the inline list into a segment
-    t.append(mkDf(3L -> "c"), Some(2000L))
-    val m2 = Manifest.read(s"$dir/${t.log.current.get.manifestList}")
-    assert(m2.segmentRefs.size == 2)
-    assert(t.read(spark).count() == 3L)
   }
 
   test("DSv2 point query parses only the touched segment (lazy planning)") {

@@ -106,50 +106,6 @@ class PartitionEvolutionSpec extends SparkSpecBase {
     assert(all == expect, s"truncate-era prefix scan lost rows ($all/$expect)")
   }
 
-  test("legacy bare-key derived stats: aliased on one-era tables, off after evolution") {
-    // files written before stat-key qualification carry synthesized
-    // bucket stats under the bare directory key. One era → the bare key
-    // provably holds the current parameterization, so pruning must still
-    // work through the alias; after updatePartitionSpec the bare key is
-    // ambiguous and the alias must shut off (conservative keep).
-    val dir = tmpDir("evo-legacy-stats")
-    val t = GraftTable.create(dir, nation.schema,
-      partitionBy = Seq("bucket(8,n_nationkey)"))
-    t.append(nation, Some(1000L))
-    def legacy(tb: GraftTable): Seq[DataFileEntry] =
-      Manifest.read(s"${tb.dir}/${tb.log.current.get.manifestList}")
-        .files.map { f =>
-          f.copy(stats = f.stats.map {
-            case ("n_nationkey_bucket_8", st) => "n_nationkey_bucket" -> st
-            case kv => kv
-          })
-        }
-    val resolved = GraftTable.resolveAgainst(spark, t.schema,
-      GraftBridge.expr(col("n_nationkey") === 3))
-    val current = Manifest
-      .read(s"${t.dir}/${t.log.current.get.manifestList}").files
-    val keptQualified = current.count(t.pruneKeep(resolved))
-    val keptOneEra = legacy(t).count(t.pruneKeep(resolved))
-    assert(keptQualified < current.size,
-      "fixture degenerate: qualified stats pruned nothing")
-    assert(keptOneEra == keptQualified,
-      s"one-era legacy stats must prune exactly like qualified stats " +
-        s"($keptOneEra vs $keptQualified)")
-    // after evolution the bare key may have been written under a
-    // different modulus: it must contribute NOTHING beyond the real
-    // source-column footer stats (which stay sound either way)
-    val evolved = t.updatePartitionSpec(Seq("bucket(4,n_nationkey)"))
-    val resolvedEvo = GraftTable.resolveAgainst(spark, evolved.schema,
-      GraftBridge.expr(col("n_nationkey") === 3))
-    val noDerived = legacy(evolved).map(f =>
-      f.copy(stats = f.stats - "n_nationkey_bucket"))
-    val keptEvolved = legacy(evolved).count(evolved.pruneKeep(resolvedEvo))
-    val keptNoDerived = noDerived.count(evolved.pruneKeep(resolvedEvo))
-    assert(keptEvolved == keptNoDerived,
-      s"evolved table probed legacy bare-key stats — unsound cross-era " +
-        s"skip ($keptEvolved vs $keptNoDerived)")
-  }
-
   test("compact() migrates the whole table to the current spec") {
     val dir = tmpDir("evo-compact")
     val t0 = GraftTable.create(dir, nation.schema)

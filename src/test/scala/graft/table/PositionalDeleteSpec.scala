@@ -1,16 +1,14 @@
 package graft.table
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.SparkSpecBase
 
-/** POSITIONAL merge-on-read deletes (Iceberg v2 position-delete files):
-  * row-level deletes recorded as (file, pos) parquet entries — no data
-  * rewrite at commit, per-file anti-joins at read, exact counts from the
+/** POSITIONAL merge-on-read deletes (Iceberg v2 position deletes):
+  * row-level deletes recorded as per-file deletion vectors — no data
+  * rewrite at commit, in-reader filters at read, exact counts from the
   * summary bookkeeping, materialization through compaction, reclamation
   * through expiration, and composition with the copy-on-write DML.
   */
@@ -50,7 +48,7 @@ class PositionalDeleteSpec extends SparkSpecBase {
     try {
       val it = st.iterator()
       val buf = Seq.newBuilder[String]
-      // legacy (file,pos) parquets AND deletion-vector bins
+      // deletion-vector bins (and equality key parquets)
       while (it.hasNext) {
         val x = it.next()
         if (x.toString.endsWith(".parquet") || x.toString.endsWith(".bin"))
@@ -72,7 +70,7 @@ class PositionalDeleteSpec extends SparkSpecBase {
     assert(snap.get.summary("positional") == "true")
     assert(snap.get.summary("deleted-records") == "2")
     assert(dataFiles(s"$dir/t").sorted == before, "a data file changed")
-    assert(deleteFiles(s"$dir/t").nonEmpty, "no delete parquet written")
+    assert(deleteFiles(s"$dir/t").nonEmpty, "no deletion vector written")
 
     assert(ids(t) == Seq(1L, 3L, 5L))
     assert(ids(t, Some(1L)) == Seq(1L, 2L, 3L), "time travel lost rows")
@@ -90,23 +88,59 @@ class PositionalDeleteSpec extends SparkSpecBase {
   }
 
   test("stacked deletes stay disjoint; counts stay exact; appends are untouched") {
+    import spark.implicits._
     val dir = tmp()
     val t = GraftTable.create(s"$dir/t", schema)
+    // every positional writer leaves at most ONE consolidated entry
+    def atMostOneEntry(step: String): Unit =
+      assert(t.positionalDeletes.size <= 1,
+        s"$step left ${t.positionalDeletes.size} positional entries")
     t.append(mkDf(1L -> "x", 2L -> "x", 3L -> "y"), Some(1000L))
     t.deletePositional(spark, col("data") === "x", Some(2000L))
+    atMostOneEntry("deletePositional")
     // overlapping predicate: positions of already-dead rows must NOT be
     // re-recorded (disjointness keeps counts additive)
     t.deletePositional(spark, col("id") <= 2, Some(3000L))
+    atMostOneEntry("overlapping deletePositional")
     assert(ids(t) == Seq(3L))
     assert(t.positionalDeletedCount == 2L, "overlap double-counted")
     // same values arriving later live on: targets pin exact files
     t.append(mkDf(10L -> "x", 11L -> "y"), Some(4000L))
+    atMostOneEntry("append")
     assert(ids(t) == Seq(3L, 10L, 11L))
     assert(t.read(spark).count() == 3L)
     // no-op delete commits nothing
     val n0 = t.log.snapshots.size
     assert(t.deletePositional(spark, col("data") === "zzz", Some(5000L)).isEmpty)
     assert(t.log.snapshots.size == n0)
+    // the other positional writers stack onto the same entry
+    t.updatePositional(spark, col("id") === 11L,
+      Map("data" -> lit("Y")), Some(5000L))
+    atMostOneEntry("updatePositional")
+    assert(t.positionalDeletedCount == 3L)
+    val afterUpdate = t.log.current.get.snapshotId
+    t.deletePositionalByKeys(spark, Seq(3L).toDF("id"), Seq("id"), Some(6000L))
+    atMostOneEntry("deletePositionalByKeys")
+    assert(ids(t) == Seq(10L, 11L))
+    assert(t.positionalDeletedCount == 4L)
+    // a merge-on-read merge carries the entry
+    t.mergeEquality(spark, mkDf(10L -> "X", 12L -> "z"), Seq("id"),
+      Some(7000L))
+    atMostOneEntry("mergeEquality")
+    assert(t.read(spark).collect()
+      .map(r => r.getLong(0) -> r.getString(1)).toMap ==
+      Map(10L -> "X", 11L -> "Y", 12L -> "z"))
+    assert(t.positionalDeletedCount == 4L)
+    // rollback adopts the target's entry; later deletes stack onto it
+    t.rollbackTo(afterUpdate, Some(8000L))
+    atMostOneEntry("rollbackTo")
+    assert(ids(t) == Seq(3L, 10L, 11L))
+    assert(t.positionalDeletedCount == 3L)
+    t.deletePositional(spark, col("id") === 10L, Some(9000L))
+    atMostOneEntry("deletePositional after rollbackTo")
+    assert(ids(t) == Seq(3L, 11L))
+    assert(t.positionalDeletedCount == 4L)
+    assert(t.read(spark).count() == 2L)
   }
 
   test("deletePositionalByKeys: dedup-driven row deletes without rewrite") {
@@ -490,122 +524,5 @@ class PositionalDeleteSpec extends SparkSpecBase {
     import spark.implicits._
     t.deletePositionalByKeys(spark, Seq(2L).toDF("id"), Seq("id"), Some(2000L))
     assert(ids(t) == Seq(1L))
-  }
-
-  /** Rewrite the CURRENT snapshot's positional summary to the legacy
-    * (file,pos)-parquet shape: `pairs` (data-file basename, position)
-    * land in one delete parquet per entry group; the summary entries
-    * carry NO "dvs" key — exactly what a pre-vector table's metadata
-    * looks like. Ghost pairs (basenames of long-gone files) may ride
-    * along in the parquet, as stripPositional leaves them in real
-    * legacy estates. */
-  private def fabricateLegacy(
-      t: GraftTable,
-      groups: Seq[(Seq[(String, Long)], Map[String, Long])]): Unit = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    val rels = groups.zipWithIndex.map { case ((pairs, _), i) =>
-      val stage = tmp()
-      spark.createDataFrame(
-        spark.sparkContext.parallelize(
-          pairs.map(p => Row(p._1, p._2)), 1),
-        StructType(Seq(
-          StructField("file", StringType, nullable = false),
-          StructField("pos", LongType, nullable = false))))
-        .coalesce(1).write.mode("overwrite").parquet(stage)
-      val part = Files.list(Paths.get(stage)).iterator().asScala
-        .find(_.toString.endsWith(".parquet")).get
-      val rel = f"deletes/legacy-$i%02d.parquet"
-      Files.createDirectories(Paths.get(t.dir, "deletes"))
-      Files.move(part, Paths.get(t.dir, rel),
-        StandardCopyOption.REPLACE_EXISTING)
-      rel
-    }
-    val legacyJson = graft.util.Json.write(
-      groups.zip(rels).map { case ((_, targets), rel) =>
-        Map[String, Any]("files" -> Seq(rel),
-          "targets" -> targets.map { case (k, v) => k -> (v: Any) })
-      })
-    val logP = Paths.get(t.dir, "snapshots.json")
-    val snaps = graft.util.Json.parse(Files.readString(logP))
-      .asInstanceOf[Seq[Any]].map(_.asInstanceOf[Map[String, Any]])
-    val updated = snaps.init :+ {
-      val last = snaps.last
-      val summary = last("summary").asInstanceOf[Map[String, Any]] +
-        (GraftTable.SummaryPositionalDeletes -> legacyJson)
-      last + ("summary" -> summary)
-    }
-    Files.writeString(logP, graft.util.Json.write(updated))
-  }
-
-  test("rewritePositionDeletes folds legacy parquet entries to vectors, data untouched") {
-    import java.nio.file.{Files, Paths}
-    val dir = tmp()
-    val t = GraftTable.create(s"$dir/t", schema)
-    t.append(mkDf(1L -> "a", 2L -> "b", 3L -> "c"), Some(1000L))
-    t.append(mkDf(10L -> "x", 11L -> "y"), Some(2000L))
-    val manifest = Manifest.read(s"$dir/t/${t.log.current.get.manifestList}")
-    val Seq(f1, f2) = manifest.files.map(_.path).sorted
-    def bn(p: String) = p.substring(p.lastIndexOf('/') + 1)
-    // two stacked legacy entries: #1 kills pos 1 of file1 (id 2) and
-    // carries a GHOST row for a long-gone file; #2 kills pos 0 of file2
-    // (id 10) — disjoint, as real stacked history is
-    fabricateLegacy(t, Seq(
-      (Seq(bn(f1) -> 1L, "part-ghost-00000.parquet" -> 0L),
-        Map(f1 -> 1L)),
-      (Seq(bn(f2) -> 0L), Map(f2 -> 1L))))
-    val t1 = GraftTable.load(s"$dir/t")
-    assert(t1.positionalDeletes.size == 2 &&
-      t1.positionalDeletes.forall(_.dvs.isEmpty))
-    assert(ids(t1) == Seq(1L, 3L, 11L), "legacy anti-join read")
-    val dataBefore = manifest.files.map(f =>
-      f.path -> Files.getLastModifiedTime(Paths.get(s"$dir/t/${f.path}")))
-
-    val snap = t1.rewritePositionDeletes(spark, Some(3000L))
-    assert(snap.isDefined &&
-      snap.get.operation == "rewrite-position-deletes")
-    val t2 = GraftTable.load(s"$dir/t")
-    // rows identical, now served by in-reader vectors
-    assert(ids(t2) == Seq(1L, 3L, 11L))
-    val entries = t2.positionalDeletes
-    assert(entries.size == 1, "stack collapses to ONE entry")
-    val e = entries.head
-    assert(e.dvs.keySet == Set(f1, f2) &&
-      e.targets == Map(f1 -> 1L, f2 -> 1L),
-      s"exact per-target counts survive: $e")
-    assert(e.files.forall(_.endsWith(".bin")),
-      "ghost rows and legacy parquets leave the entry")
-    // NO data file was rewritten — same paths, same mtimes
-    val m2 = Manifest.read(s"$dir/t/${t2.log.current.get.manifestList}")
-    assert(m2.files.map(_.path).sorted == Seq(f1, f2))
-    dataBefore.foreach { case (p, mt) =>
-      assert(Files.getLastModifiedTime(Paths.get(s"$dir/t/$p")) == mt,
-        s"$p must be untouched") }
-    // counts stay exact end-to-end
-    assert(t2.positionalDeletedCount == 2L)
-    // idempotent: canonical state folds to None, nothing committed
-    assert(t2.rewritePositionDeletes(spark, Some(3500L)).isEmpty)
-    assert(t2.log.snapshots.size == 3)
-    // DML on the folded state composes as usual
-    t2.deletePositional(spark, col("id") === 3L, Some(4000L))
-    assert(ids(GraftTable.load(s"$dir/t")) == Seq(1L, 11L))
-    // expiration reclaims the superseded legacy parquets (unreferenced
-    // by any surviving snapshot once the pre-fold history expires)
-    val t3 = GraftTable.load(s"$dir/t")
-    t3.expireSnapshots(3500L, retainLast = 1)
-    assert(!Files.exists(Paths.get(s"$dir/t/deletes/legacy-00.parquet")) &&
-      !Files.exists(Paths.get(s"$dir/t/deletes/legacy-01.parquet")))
-    assert(ids(GraftTable.load(s"$dir/t")) == Seq(1L, 11L))
-  }
-
-  test("rewritePositionDeletes: no-op on empty, fresh-vector, and absent state") {
-    val dir = tmp()
-    val t = GraftTable.create(s"$dir/t", schema)
-    assert(t.rewritePositionDeletes(spark).isEmpty) // empty table
-    t.append(mkDf(1L -> "a", 2L -> "b"), Some(1000L))
-    assert(t.rewritePositionDeletes(spark).isEmpty) // nothing pending
-    t.deletePositional(spark, col("id") === 1L, Some(2000L))
-    // a current-code commit is already canonical (single vector entry)
-    assert(t.rewritePositionDeletes(spark).isEmpty)
-    assert(GraftTable.load(s"$dir/t").log.snapshots.size == 2)
   }
 }

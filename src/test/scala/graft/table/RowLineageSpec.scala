@@ -301,8 +301,8 @@ class RowLineageSpec extends SparkSpecBase {
     // simulate LEGACY metadata (written before banding existed): strip
     // every band from snapshot 1's segment and the watermark from its
     // summary — the shape the advice's rollback scenario starts from
-    val segs = Manifest.segmentRefsOf(
-      s"$dir/t/${t.log.current.get.manifestList}")
+    val segs = Manifest.read(
+      s"$dir/t/${t.log.current.get.manifestList}").segmentRefs
     segs.foreach { ref =>
       val p = Paths.get(s"$dir/t/$ref")
       Files.writeString(p, Files.readString(p)
