@@ -247,7 +247,6 @@ final class GraftTable private (
     graft.util.Json.parse(json).asInstanceOf[Seq[Any]].map { e =>
       val m = e.asInstanceOf[Map[String, Any]]
       PositionalDeletes(
-        m("files").asInstanceOf[Seq[Any]].map(_.toString),
         m("targets").asInstanceOf[Map[String, Any]]
           .map { case (k, v) => k -> v.asInstanceOf[Long] },
         m("dvs").asInstanceOf[Map[String, Any]]
@@ -359,11 +358,9 @@ final class GraftTable private (
       .map { e =>
         // a removed target's per-file deletion vector leaves with it
         // (the file becomes unreferenced → expire/orphan reclaims it)
-        val goneDvs = e.dvs.collect { case (p, dv) if gone(p) => dv }.toSet
         e.copy(
           targets = e.targets.filterNot { case (p, _) => gone(p) },
-          dvs = e.dvs.filterNot { case (p, _) => gone(p) },
-          files = e.files.filterNot(goneDvs))
+          dvs = e.dvs.filterNot { case (p, _) => gone(p) })
       }
       .filter(_.targets.nonEmpty)
 
@@ -998,11 +995,11 @@ final class GraftTable private (
       posPend.flatMap(_.targets).groupMapReduce(_._1)(_._2)(_ + _)
     val keptFiles =
       if (rewrites.isEmpty) Nil
-      else writeDataFiles(
+      else writeNonEmptyFiles(
         readVisibleCarry(spark, pend, posPend, rewrites, eqPend)
           .filter(org.apache.spark.sql.functions.coalesce(
             !predicate, org.apache.spark.sql.functions.lit(true))),
-        snapId).filter(_.recordCount > 0)
+        snapId)
     val inserted = writeDataFiles(df, snapId)
     val removed =
       (if (eqPend.isEmpty && pend.isEmpty)
@@ -1148,10 +1145,10 @@ final class GraftTable private (
       posPend.flatMap(_.targets).groupMapReduce(_._1)(_._2)(_ + _)
     val keptFiles =
       if (rewrites.isEmpty) Nil
-      else writeDataFiles(
+      else writeNonEmptyFiles(
         readVisibleCarry(spark, pend, posPend, rewrites, eqPend)
           .filter(!rowPred), // <=> / isNull keep the predicate total
-        snapId).filter(_.recordCount > 0)
+        snapId)
     val removed =
       (if (eqPend.isEmpty && pend.isEmpty)
         candidates.map(f =>
@@ -1308,6 +1305,15 @@ final class GraftTable private (
         name = r.to
     }
     name
+  }
+
+  /** [[writeDataFiles]] minus its empty outputs (a rewrite whose every
+    * row is deleted), which are removed from `data/` at once: no
+    * manifest will ever name them. */
+  private def writeNonEmptyFiles(df: DataFrame, snapId: Long): Seq[DataFileEntry] = {
+    val (kept, empty) = writeDataFiles(df, snapId).partition(_.recordCount > 0)
+    empty.foreach(f => Files.deleteIfExists(Paths.get(dir, f.path)))
+    kept
   }
 
   /** Defaulted columns by their CURRENT name (with target type + SQL). */
@@ -1611,14 +1617,24 @@ final class GraftTable private (
     // the first staged id would collide with that very claim.
     val marker = Paths.get(dir, "manifests", f".commit-$snapId%05d")
     Files.createDirectories(marker.getParent)
+    // an unpublished commit reclaims everything this call created: the
+    // data files, the metadata files it wrote (`written`: fresh segments
+    // and the manifest list), and the claim once held
+    var claimed = false
+    def abandon(written: Seq[String]): Unit = {
+      (newFiles.map(_.path) ++ written)
+        .foreach(r => Files.deleteIfExists(Paths.get(dir, r)))
+      if (claimed) Files.deleteIfExists(marker)
+    }
     if (!txnStaged) {
       try Files.createFile(marker)
       catch {
         case _: java.nio.file.FileAlreadyExistsException =>
-          newFiles.foreach(f => Files.deleteIfExists(Paths.get(dir, f.path)))
+          abandon(Nil)
           throw new java.util.ConcurrentModificationException(
             s"snapshot $snapId already claimed by a concurrent committer on $dir")
       }
+      claimed = true
     }
     // Post-claim check BEFORE touching the manifest path: markers are
     // deleted after successful commits (see below), so a late claimer can
@@ -1626,8 +1642,7 @@ final class GraftTable private (
     // here, NOT after overwriting the winner's manifest file.
     val lg2 = log
     if (lg2.nextId != snapId) {
-      newFiles.foreach(f => Files.deleteIfExists(Paths.get(dir, f.path)))
-      if (!txnStaged) Files.deleteIfExists(marker)
+      abandon(Nil)
       throw new java.util.ConcurrentModificationException(
         s"snapshot log advanced to ${lg2.nextId} during commit of $snapId on $dir")
     }
@@ -1645,8 +1660,7 @@ final class GraftTable private (
         .flatMap(_.targets.keys).map(baseName).toSet
       val clash = newFiles.map(f => baseName(f.path)).filter(pendingBns)
       if (clash.nonEmpty) {
-        newFiles.foreach(f => Files.deleteIfExists(Paths.get(dir, f.path)))
-        if (!txnStaged) Files.deleteIfExists(marker)
+        abandon(Nil)
         throw new IllegalStateException(
           s"new data-file basename(s) ${clash.mkString(", ")} collide with " +
             s"pending positional-delete targets on $dir — retry the write " +
@@ -1661,12 +1675,10 @@ final class GraftTable private (
     // watermark in fresh-segment entry order (stable: staged file names
     // sort, callers append deterministically); a file's rows read
     // `firstRowId + position` unless a materialized lineage column
-    // overrides (rewrites carrying prior ids). Any band-less
-    // fresh-segment entry is safely bandable: carried entries always
-    // retain their band through the manifest JSON, so band-less means
-    // either a genuinely new file or a pre-lineage file getting its
-    // upgrade band (NULL → id, never id → different id; older
-    // snapshots' manifests are immutable and still read NULL).
+    // overrides (rewrites carrying prior ids). Carried entries retain
+    // their band through the manifest JSON, so a band-less fresh entry
+    // is a genuinely new file — and every entry of every snapshot,
+    // rollback and cherry-pick targets included, is banded.
     val ridBase = lg2.current
       .flatMap(_.summary.get(SummaryNextRowId)).map(_.toLong).getOrElse(0L)
     var ridCursor = ridBase
@@ -1698,16 +1710,14 @@ final class GraftTable private (
         case Some(v) => Some(v)
         case None => lg.current.flatMap(_.summary.get(key))
       }).filter(v => v.nonEmpty && v != "[]" && v != "{}")
-    val carriedKeys = Seq(SummaryPendingDeletes, SummaryPositionalDeletes,
-      SummaryEqualityDeletes, SummaryStreamCursors)
     val snap = Snapshot(
       snapshotId = snapId,
       parentId = lg2.current.map(_.snapshotId),
       committedAt = committedAt.getOrElse(System.currentTimeMillis()),
       operation = operation,
       manifestList = manifestRel,
-      summary = (extraSummary -- carriedKeys - SummaryNextRowId) ++
-        carriedKeys.flatMap(k => carried(k).map(k -> _)).toMap ++ Map(
+      summary = (extraSummary -- CarriedKeys - SummaryNextRowId) ++
+        CarriedKeys.flatMap(k => carried(k).map(k -> _)).toMap ++ Map(
         // totals from the manifest LIST's per-segment metadata — an
         // append commit never parses the carried segments' entries
         "total-data-files" -> manifest.totalFiles.toString,
@@ -1720,18 +1730,13 @@ final class GraftTable private (
     // would resurrect expired snapshots whose files are already deleted
     try SnapshotLog(lg2.snapshots :+ snap).write(s"$dir/$logName")
     catch { case e: Throwable =>
-      // unpublished commit: reclaim everything this call created (the
-      // data files, the fresh segments, the manifest list, the claim)
-      newFiles.foreach(f => Files.deleteIfExists(Paths.get(dir, f.path)))
-      createdSegs.foreach(r => Files.deleteIfExists(Paths.get(dir, r)))
-      Files.deleteIfExists(Paths.get(dir, manifestRel))
-      if (!txnStaged) Files.deleteIfExists(marker)
+      abandon(createdSegs :+ manifestRel)
       throw e
     }
     // claim served its purpose (the log now holds snapId, so no racer can
     // pass the nextId re-check) — delete it rather than accumulate one
     // zero-byte marker per commit forever
-    if (!txnStaged) Files.deleteIfExists(marker)
+    if (claimed) Files.deleteIfExists(marker)
     snap
   }
 
@@ -2208,11 +2213,11 @@ final class GraftTable private (
       posPend.flatMap(_.targets).groupMapReduce(_._1)(_._2)(_ + _)
     val newFiles =
       if (rewrites.isEmpty) Nil
-      else writeDataFiles(
+      else writeNonEmptyFiles(
         readVisibleCarry(spark, pend, posPend, rewrites, eqPend)
           .filter(org.apache.spark.sql.functions.coalesce(
             !predicate, org.apache.spark.sql.functions.lit(true))),
-        snapId).filter(_.recordCount > 0) // drop empty rewrite outputs
+        snapId)
     // visible rows removed: candidates' SURVIVOR counts minus what the
     // rewrite kept (rows already positionally dead don't count twice);
     // under pending equality/predicate entries the per-file split of
@@ -2296,8 +2301,7 @@ final class GraftTable private (
       .join(keySel,
         keyCols.map(c => col(c) === col(P + c)).reduce(_ && _), "left_anti")
       .select(carried.columns.map(col): _*) // schema + any lineage carry
-    val newFiles = writeDataFiles(survivors, snapId)
-      .filter(_.recordCount > 0)
+    val newFiles = writeNonEmptyFiles(survivors, snapId)
     val removed =
       (if (eqPend.isEmpty && pend.isEmpty)
         candidates.map(f =>
@@ -2687,7 +2691,7 @@ final class GraftTable private (
     deleteKeys.foreach(dk => keyCols.foreach(c =>
       require(dk.columns.contains(c), s"deleteKeys lacks key column '$c'")))
     val snapId = lg.nextId
-    val newFiles = writeDataFiles(source, snapId).filter(_.recordCount > 0)
+    val newFiles = writeNonEmptyFiles(source, snapId)
     if (newFiles.isEmpty && deleteKeys.isEmpty)
       return None // empty source: no upsert, no entry
     // key file: the distinct non-null-free key tuples of the source's
@@ -3079,7 +3083,6 @@ final class GraftTable private (
       bnToPath(bn) -> rel }
     val priorTotal = prior.flatMap(_.targets.values).sum
     val entry = PositionalDeletes(
-      files = (carriedDvs.values ++ newDvs.values).toSeq.sorted,
       targets = carriedTargets ++ newTargets,
       dvs = carriedDvs ++ newDvs)
     val newlyDead = entry.deletedRows - priorTotal
@@ -3650,8 +3653,7 @@ final class GraftTable private (
           kept.unionByName(srcCarry)
         }
       }
-    val newFiles = writeDataFiles(survivors, snapId)
-      .filter(_.recordCount > 0)
+    val newFiles = writeNonEmptyFiles(survivors, snapId)
     val stillPositional =
       stripPositional(posPend, candidates.map(_.path).toSet)
     commit(lg, snapId,
@@ -3863,7 +3865,7 @@ final class GraftTable private (
       case (r, i) => r.orElse(i)
     }
     val newFiles = out
-      .map(df => writeDataFiles(df, snapId).filter(_.recordCount > 0))
+      .map(df => writeNonEmptyFiles(df, snapId))
       .getOrElse(Nil)
     if (!rowModifying) {
       // insert-only: every existing file (candidates included) stays in
@@ -4007,34 +4009,14 @@ final class GraftTable private (
     val lg = log
     val target = lg.byId(snapshotId).getOrElse(
       throw new IllegalArgumentException(s"no snapshot $snapshotId in $dir"))
-    // ROW-ID STABILITY across rollback: the target's manifest may hold
-    // band-less entries (pre-lineage snapshots) that the rolled-back
-    // head had since banded — without adoption a later rewrite would
-    // re-band those files from the watermark and the same physical rows
-    // would read DIFFERENT _row_id values than the discarded history
-    // served (unique, but not stable). Adopt the head's assignments for
-    // files common to both manifests; files only the target knows either
-    // ride an adoption-rewritten segment and take their upgrade band at
-    // this commit, or stay band-less until their next rewrite (ids never
-    // reused either way — the next-row-id watermark is carried, monotone).
-    val manifest0 = Manifest.read(s"$dir/${target.manifestList}")
-    val headBands: Map[String, Long] = lg.current.toSeq
-      .flatMap(h => Manifest.read(s"$dir/${h.manifestList}").files)
-      .flatMap(f => f.firstRowId.map(f.path -> _)).toMap
-    val manifest = manifest0.adoptBands(headBands)
-    commit(lg, lg.nextId, manifest, Nil,
+    // adopt the TARGET's carried state (commit would otherwise inherit
+    // the rolled-back head's): pending deletes AND stream cursors — so a
+    // replay of a rolled-back stream batch re-ingests instead of being
+    // dropped as a re-delivery. "" clears a key the target lacks.
+    commit(lg, lg.nextId, Manifest.read(s"$dir/${target.manifestList}"), Nil,
       operation = "rollback", committedAt,
-      extraSummary = Map(
-        "rolled-back-to" -> snapshotId.toString,
-        // adopt the TARGET's carried state (commit would otherwise
-        // inherit the rolled-back head's): pending deferred deletes AND
-        // stream cursors — so a replay of a rolled-back stream batch
-        // re-ingests instead of being dropped as a re-delivery
-        SummaryPendingDeletes -> pendingJsonFull(parsePendingFull(target)),
-        SummaryPositionalDeletes -> positionalJson(parsePositional(target)),
-        SummaryEqualityDeletes -> equalityJson(parseEquality(target)),
-        SummaryStreamCursors -> target.summary
-          .getOrElse(SummaryStreamCursors, "{}")))
+      extraSummary = Map("rolled-back-to" -> snapshotId.toString) ++
+        CarriedKeys.map(k => k -> target.summary.getOrElse(k, "")))
   }
 
   /** CHERRY-PICK an append snapshot onto the current state (Iceberg's
@@ -4218,44 +4200,35 @@ final class GraftTable private (
       case None => Nil
       case Some((expired, kept)) =>
         // physical deletes need no lock: the pruned log is already durable,
-        // so nothing can resurrect references to the dead files
-        val live: Set[String] = kept
-          .flatMap(s =>
-            Manifest.read(s"$dir/${s.manifestList}").files.map(_.path))
-          .toSet
-        val dead = expired
-          .flatMap(s =>
-            Manifest.read(s"$dir/${s.manifestList}").files.map(_.path))
-          .distinct.filterNot(live)
-          // fork-inherited `../…` entries point into the PARENT table —
-          // a branch never owns those bytes and must not reclaim them
+        // so nothing can resurrect references to the dead files. Files,
+        // delete files and segments are shared across snapshots, so only
+        // what no surviving snapshot reaches goes; fork-inherited `../…`
+        // entries point into the PARENT table — a branch never owns those
+        // bytes and must not reclaim them
+        (reachable(expired) -- reachable(kept)).all
           .filterNot(_.startsWith("../"))
-        dead.foreach(p => Files.deleteIfExists(Paths.get(dir, p)))
-        // deletion vectors and equality key files are referenced from
-        // snapshot SUMMARIES, not manifests — reclaim the ones no
-        // surviving snapshot's entries mention (compaction/DML strip
-        // entries but keep the files so older snapshots stay readable)
-        val liveDel: Set[String] =
-          kept.flatMap(s => parsePositional(s).flatMap(_.files) ++
-            parseEquality(s).flatMap(_.files)).toSet
-        expired.flatMap(s => parsePositional(s).flatMap(_.files) ++
-            parseEquality(s).flatMap(_.files))
-          .distinct.filterNot(liveDel).filterNot(_.startsWith("../"))
           .foreach(p => Files.deleteIfExists(Paths.get(dir, p)))
-        // manifest SEGMENTS are shared by ref across snapshots — reclaim
-        // only the ones no surviving manifest list mentions, then the
-        // expired lists themselves
-        val liveSegs: Set[String] = kept
-          .flatMap(s => Manifest.read(s"$dir/${s.manifestList}").segmentRefs)
-          .toSet
-        expired
-          .flatMap(s => Manifest.read(s"$dir/${s.manifestList}").segmentRefs)
-          .distinct.filterNot(liveSegs)
-          .foreach(r => Files.deleteIfExists(Paths.get(dir, r)))
-        expired.foreach(s =>
-          Files.deleteIfExists(Paths.get(dir, s.manifestList)))
         expired.map(_.snapshotId)
     }
+  }
+
+  /** Every artifact `snaps` keep alive, by kind (table-root-relative
+    * paths): manifest-entry data files, delete files (deletion vectors
+    * and equality key files, named by the snapshot summaries), manifest
+    * segments and manifest lists. The one reachability walk — expire
+    * reclaims what only expired snapshots reach, the orphan sweep what
+    * no snapshot reaches; a new artifact kind goes here. Each distinct
+    * list is read once and each distinct segment parsed once. */
+  private def reachable(snaps: Seq[Snapshot]): Reachable = {
+    val lists = snaps.map(_.manifestList).distinct
+    val segs = lists.flatMap(l => Manifest.read(s"$dir/$l").segments)
+      .flatMap(seg => seg.ref.map(_ -> seg)).toMap
+    Reachable(
+      dataFiles = segs.values.flatMap(_.files.map(_.path)).toSet,
+      deleteFiles = snaps.flatMap(s => parsePositional(s).flatMap(_.files) ++
+        parseEquality(s).flatMap(_.files)).toSet,
+      segments = segs.keySet,
+      lists = lists.toSet)
   }
 
   /** ADMIN: reclaim ORPHAN files — bytes under this table's `data/` and
@@ -4300,43 +4273,23 @@ final class GraftTable private (
       s"a table REPLACE is in flight on $dir — let it finish (or read " +
         "the table once to heal a crashed one) before sweeping orphans")
     val cutoff = System.currentTimeMillis() - olderThanMillis
-    val lg = log
-    val referenced: Set[String] = (lg.snapshots.flatMap { s =>
-      Manifest.read(s"$dir/${s.manifestList}").files.map(f =>
-        Paths.get(dir, f.path).normalize().toString)
-    } ++ lg.snapshots.flatMap(s => parsePositional(s).flatMap(_.files) ++
-        parseEquality(s).flatMap(_.files))
-      .map(p => Paths.get(dir, p).normalize().toString)).toSet
-    def walk(root: java.nio.file.Path): Seq[java.nio.file.Path] =
-      if (!Files.exists(root)) Nil
-      else scala.util.Using.resource(Files.walk(root)) { st =>
+    val live = reachable(log.snapshots).all
+      .map(p => Paths.get(dir, p).normalize().toString).toSet
+    def walk(root: String): Seq[java.nio.file.Path] =
+      if (!Files.exists(Paths.get(dir, root))) Nil
+      else scala.util.Using.resource(Files.walk(Paths.get(dir, root))) { st =>
         st.iterator().asScala.filter(Files.isRegularFile(_)).toSeq
       }
-    val orphans = (walk(Paths.get(dir, "data")) ++ walk(Paths.get(dir, "deletes")))
+    // files a hard-crashed writer staged, and segments and manifest lists
+    // no snapshot names — a crashed committer's, or the pre-replace
+    // history a REPLACE discarded (the race loser and the log-write
+    // failure path clean up after themselves; a kill -9 does not)
+    val orphans = (walk("data") ++ walk("deletes") ++
+        walk("manifests").filter(p =>
+          Seq("seg-", "snap-").exists(p.getFileName.toString.startsWith)))
       .filter(p => Files.getLastModifiedTime(p).toMillis < cutoff)
-      .filterNot(p => referenced.contains(p.normalize().toString))
+      .filterNot(p => live(p.normalize().toString))
     orphans.foreach(Files.deleteIfExists(_))
-    // segment files a hard-crashed committer wrote but never published
-    // in a manifest list (the race loser and the log-write failure path
-    // clean up after themselves; a kill -9 between the two does not)
-    val refSegs: Set[String] = lg.snapshots
-      .flatMap(s => Manifest.read(s"$dir/${s.manifestList}").segmentRefs)
-      .map(r => Paths.get(dir, r).normalize().toString).toSet
-    val orphanSegs = walk(Paths.get(dir, "manifests"))
-      .filter(p => p.getFileName.toString.startsWith("seg-"))
-      .filter(p => Files.getLastModifiedTime(p).toMillis < cutoff)
-      .filterNot(p => refSegs.contains(p.normalize().toString))
-    orphanSegs.foreach(Files.deleteIfExists(_))
-    // manifest LISTS no snapshot references — the pre-replace history a
-    // REPLACE discarded (expire removes entries + lists together, so
-    // only a whole-log swap can strand these)
-    val refLists: Set[String] = lg.snapshots
-      .map(s => Paths.get(dir, s.manifestList).normalize().toString).toSet
-    val orphanLists = walk(Paths.get(dir, "manifests"))
-      .filter(p => p.getFileName.toString.startsWith("snap-"))
-      .filter(p => Files.getLastModifiedTime(p).toMillis < cutoff)
-      .filterNot(p => refLists.contains(p.normalize().toString))
-    orphanLists.foreach(Files.deleteIfExists(_))
     val staged = scala.util.Using.resource(Files.list(Paths.get(dir))) { st =>
       st.iterator().asScala
         .filter { p =>
@@ -4350,8 +4303,7 @@ final class GraftTable private (
         .toSeq
     }
     staged.foreach(GraftTable.deleteRecursively)
-    (orphans ++ orphanSegs ++ orphanLists ++ staged)
-      .map(p => Paths.get(dir).relativize(p).toString)
+    (orphans ++ staged).map(p => Paths.get(dir).relativize(p).toString)
   }
 
   /** Schema evolution: add a nullable column (the add-column slice of
@@ -6281,6 +6233,13 @@ object GraftTable {
   val LastUpdatedCol = "_last_updated_snapshot_id"
   val SummaryStreamCursors = "stream-cursors"
 
+  /** Summary keys whose state CARRIES FORWARD: a commit that does not set
+    * one inherits its parent's value, so the current snapshot always
+    * holds the full state; rollback adopts the target's raw value (or
+    * clears it). A new carried key goes here and nowhere else. */
+  val CarriedKeys: Seq[String] = Seq(SummaryPendingDeletes,
+    SummaryPositionalDeletes, SummaryEqualityDeletes, SummaryStreamCursors)
+
   /** The pending EQUALITY merge-on-read deletes of one key-column set
     * (Iceberg v2 equality-delete files), consolidated at every commit:
     * `files` are parquet key files under `deletes/` holding the victim
@@ -6316,17 +6275,29 @@ object GraftTable {
     * prior vectors) and targets always ⊆ the live manifest
     * (DML/compaction strip rewritten or dropped files). */
   final case class PositionalDeletes(
-      files: Seq[String],
       targets: Map[String, Long],
       dvs: Map[String, String]) {
+    def files: Seq[String] = dvs.values.toSeq.sorted
     def deletedRows: Long = targets.values.sum
+  }
+
+  /** The artifacts a set of snapshots keeps alive, by kind
+    * ([[GraftTable.reachable]]); `all` lists them in deletion order —
+    * data and delete files before the metadata that names them. */
+  private[table] final case class Reachable(
+      dataFiles: Set[String], deleteFiles: Set[String],
+      segments: Set[String], lists: Set[String]) {
+    def --(o: Reachable): Reachable = Reachable(dataFiles -- o.dataFiles,
+      deleteFiles -- o.deleteFiles, segments -- o.segments, lists -- o.lists)
+    def all: Seq[String] =
+      dataFiles.toSeq ++ deleteFiles.toSeq ++ segments.toSeq ++ lists.toSeq
   }
 
   /** One column rename era: files written at snapshot < `at` hold the
     * column under `from`; files at ≥ `at` under `to` (the name-based
     * analog of Iceberg's field-id indirection — [[GraftTable.renameColumn]]). */
   final case class ColumnRename(
-      at: Long, from: String, to: String, seq: Long = 0L)
+      at: Long, from: String, to: String, seq: Long)
 
   /** One add-column-with-DEFAULT era (Iceberg v3 `initial-default`
     * parity): files written at snapshot < `at` predate the column
@@ -6338,7 +6309,7 @@ object GraftTable {
     * same literal is the WRITE default: an append/merge source lacking
     * the column fills it at write time. */
   final case class ColumnDefault(
-      at: Long, col: String, sql: String, seq: Long = 0L)
+      at: Long, col: String, sql: String, seq: Long)
 
   /** One lossless type-widening era (Iceberg's type promotion): files
     * written at snapshot < `at` hold `col` (its logical name AT widening
@@ -6348,7 +6319,7 @@ object GraftTable {
     * first or chained renames/widenings in one commit window resolve to
     * the wrong era (caught by SchemaEvolutionPropertySpec). */
   final case class ColumnWidening(
-      at: Long, col: String, from: DataType, to: DataType, seq: Long = 0L)
+      at: Long, col: String, from: DataType, to: DataType, seq: Long)
 
   /** A stored column default must be a CONSTANT of the column's type
     * and survive a SQL round-trip (it is re-planned at every read of a
@@ -6582,7 +6553,7 @@ object GraftTable {
         val m = r.asInstanceOf[Map[String, Any]]
         ColumnRename(m("at").asInstanceOf[Long],
           m("from").asInstanceOf[String], m("to").asInstanceOf[String],
-          m.get("seq").collect { case l: Long => l }.getOrElse(0L))
+          m("seq").asInstanceOf[Long])
       }
     val widenings = meta.getOrElse("column_widenings", Seq.empty[Any])
       .asInstanceOf[Seq[Any]].map { w =>
@@ -6591,14 +6562,14 @@ object GraftTable {
           m("col").asInstanceOf[String],
           DataType.fromJson(m("from").asInstanceOf[String]),
           DataType.fromJson(m("to").asInstanceOf[String]),
-          m.get("seq").collect { case l: Long => l }.getOrElse(0L))
+          m("seq").asInstanceOf[Long])
       }
     val defaults = meta.getOrElse("column_defaults", Seq.empty[Any])
       .asInstanceOf[Seq[Any]].map { d =>
         val m = d.asInstanceOf[Map[String, Any]]
         ColumnDefault(m("at").asInstanceOf[Long],
           m("col").asInstanceOf[String], m("sql").asInstanceOf[String],
-          m.get("seq").collect { case l: Long => l }.getOrElse(0L))
+          m("seq").asInstanceOf[Long])
       }
     new GraftTable(dir, schema, props, partitionBy, dropped, renames,
       widenings, defaults, logName)

@@ -113,25 +113,6 @@ final class Manifest private[table] (val segments: Vector[ManifestSegment]) {
       if (s.ref.isDefined) s else ManifestSegment.fresh(s.files.map(f))
     })
 
-  /** Adopt row-id band assignments for BAND-LESS entries whose path has
-    * one in `bands` — rollback adopting the discarded head's bands, so
-    * files common to both manifests keep serving the exact `_row_id`s
-    * the discarded history served (ids stay stable, not merely unique).
-    * Only segments actually containing an adoptable entry are rewritten
-    * fresh; everything else carries by ref. Banded entries are never
-    * re-banded (NULL → id only, same invariant as commit's assignment). */
-  private[table] def adoptBands(bands: Map[String, Long]): Manifest =
-    if (bands.isEmpty) this
-    else new Manifest(segments.map { seg =>
-      if (!seg.files.exists(f => f.firstRowId.isEmpty && bands.contains(f.path)))
-        seg
-      else ManifestSegment.fresh(seg.files.map { f =>
-        if (f.firstRowId.isEmpty && bands.contains(f.path))
-          f.copy(firstRowId = Some(bands(f.path)))
-        else f
-      })
-    })
-
   /** All prior segments carried by ref + one fresh segment of `newFiles`.
     * Never parses the carried segments. */
   def append(newFiles: Seq[DataFileEntry]): Manifest =

@@ -1,10 +1,10 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, GlobalLimit, ResolvedHint}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 
-import graft.SparkEntry
+import graft.{GraftSession, SparkEntry}
 
 /** Plan auditor: prints, for each (or one named) SparkEntry query, the
   * physical-plan properties that matter at 100 TB —
@@ -63,14 +63,7 @@ object ExplainAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val only = args.drop(1).headOption
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local("4", "ERROR")
 
     val names = only.map(Seq(_)).getOrElse(SparkEntry.queries.keys.toSeq.sorted)
     for (name <- names) {

@@ -1,14 +1,12 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: run one named SparkEntry query N times with timings, and
   * optionally dump its formatted plan. Usage:
   *
   *   sbt "runMain graft.tools.QueryProbe <name> [reps] [explain]"
   *
-  * Environment mirrors Bench (same master, shuffle partitions, nanos
-  * handling) so a time measured here is comparable to a BENCH_r{N} entry.
+  * Session ([[graft.GraftSession.local]]) and warmup query match Bench,
+  * so a time measured here is comparable to a BENCH_r{N} entry.
   */
 object QueryProbe {
   def main(args: Array[String]): Unit = {
@@ -17,17 +15,11 @@ object QueryProbe {
     val doExplain = args.contains("explain")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(cpus, "WARN")
     val fn = graft.SparkEntry.queries(name)
-    // one warmup pass like Bench's entry() warmup (JIT + parquet footer cache)
-    try graft.SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
+    // Bench's warmup pass (JIT + parquet footer cache), on the same sfDir
+    try graft.SparkEntry.queries("h01_pricing_summary")(spark, sfDir)
+      .write.format("noop").mode("overwrite").save()
     catch { case _: Throwable => }
     if (doExplain) fn(spark, sfDir).explain("formatted")
     (1 to reps).foreach { i =>

@@ -1,8 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
-import graft.SparkEntry
+import graft.{GraftSession, SparkEntry}
 
 /** CLI to run any SparkEntry query by name:
   *
@@ -12,7 +10,7 @@ import graft.SparkEntry
   * }}}
   *
   * Prints the first `n` rows (default 20) and the row count. The session
-  * is configured exactly like Verify/Bench (UTC, nanos-as-long, AQE on).
+  * is Verify/Bench's ([[GraftSession.local]]).
   */
 object QueryRunner {
   def main(args: Array[String]): Unit = {
@@ -26,15 +24,8 @@ object QueryRunner {
     val fn = SparkEntry.queries.getOrElse(name,
       sys.error(s"unknown query '$name' — run with 'list' to see all"))
 
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"), "WARN")
     val df = fn(spark, sfDir)
     df.show(n, truncate = 40)
     println(s"rows: ${df.count()}")

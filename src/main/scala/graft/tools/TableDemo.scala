@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -15,14 +15,7 @@ import graft.table._
   */
 object TableDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .withExtensions(new graft.table.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.local("4", "ERROR")
 
     val dir = args.headOption.getOrElse(
       java.nio.file.Files.createTempDirectory("graft-demo").toString)

@@ -275,77 +275,36 @@ class RowLineageSpec extends SparkSpecBase {
   test("rollback never reuses ids; lineage columns refuse as user columns") {
     val dir = tmp()
     val t = GraftTable.create(s"$dir/t", schema)
+    // every entry of every logged snapshot carries a band: commit bands
+    // each fresh entry, and every other entry is carried from a snapshot
+    // that already banded it
+    def assertAllBanded(after: String): Unit = t.log.snapshots.foreach { s =>
+      val bandless = Manifest.read(s"${t.dir}/${s.manifestList}").files
+        .filter(_.firstRowId.isEmpty).map(_.path)
+      assert(bandless.isEmpty,
+        s"after $after, snapshot ${s.snapshotId} has band-less $bandless")
+    }
     t.append(mkDf(1L -> "a"), Some(1000L))   // band [0,1): id 0
     t.append(mkDf(2L -> "b"), Some(2000L))   // band [1,2)
+    assertAllBanded("append")
     t.rollbackTo(1L, Some(3000L))
+    assertAllBanded("rollback")
     t.append(mkDf(3L -> "c"), Some(4000L))
     // the rolled-past band [1,2) is never reissued
     assert(rowIds(t) == Map(1L -> 0L, 3L -> 2L))
+    t.delete(spark, col("id") === 3L, Some(5000L))
+    assertAllBanded("delete")
+    t.append(mkDf(4L -> "d"), Some(6000L))
+    t.compact(spark, smallerThanBytes = Long.MaxValue, Some(7000L))
+    assertAllBanded("compact")
+    // re-applying the rolled-back append keeps its band
+    t.cherrypick(2L, Some(8000L))
+    assertAllBanded("cherrypick")
+    assert(rowIds(t)(2L) == 1L)
     intercept[IllegalArgumentException] {
       GraftTable.create(s"$dir/bad", StructType(Seq(
         StructField("_row_id", LongType, nullable = false))))
     }
     intercept[IllegalArgumentException] { t.addColumn("_gf_rid", LongType) }
-  }
-
-  test("rollback adopts the discarded head's bands for files common to both manifests") {
-    import java.nio.file.{Files, Paths}
-    val dir = tmp()
-    val t = GraftTable.create(s"$dir/t", schema)
-    // ONE segment holding TWO files (2 input partitions)
-    val rows = Seq(Row(1L, "a"), Row(2L, "b"), Row(3L, "c"), Row(4L, "d"))
-    val df = spark.createDataFrame(
-      spark.sparkContext.parallelize(rows.take(2), 1)
-        .union(spark.sparkContext.parallelize(rows.drop(2), 1)), schema)
-    t.append(df, Some(1000L))
-    // simulate LEGACY metadata (written before banding existed): strip
-    // every band from snapshot 1's segment and the watermark from its
-    // summary — the shape the advice's rollback scenario starts from
-    val segs = Manifest.read(
-      s"$dir/t/${t.log.current.get.manifestList}").segmentRefs
-    segs.foreach { ref =>
-      val p = Paths.get(s"$dir/t/$ref")
-      Files.writeString(p, Files.readString(p)
-        .replaceAll(""","first_row_id":\d+""", "")
-        .replaceAll(""""first_row_id":\d+,""", ""))
-    }
-    val logP = Paths.get(s"$dir/t/snapshots.json")
-    Files.writeString(logP, Files.readString(logP)
-      .replaceAll(""","next-row-id":"\d+"""", "")
-      .replaceAll(""""next-row-id":"\d+",""", ""))
-    val t1 = GraftTable.load(s"$dir/t")
-    assert(t1.readLineage(spark).collect()
-      .forall(r => r.isNullAt(r.fieldIndex("_row_id"))))
-    // snapshot 2: whole-file drop of the (3,4) file — the shared segment
-    // rewrites fresh with the survivor file under its SAME path, and the
-    // commit gives that pre-lineage file its upgrade band
-    t1.delete(spark, col("id") >= 3L, Some(2000L))
-    val head = GraftTable.load(s"$dir/t")
-    val headIds = head.readLineage(spark).collect()
-      .map(r => r.getLong(0) -> r.getLong(r.fieldIndex("_row_id"))).toMap
-    assert(headIds.keySet == Set(1L, 2L))
-    // snapshot 3: rollback past the banding commit — the target manifest
-    // holds that file band-less; adoption must keep the head's ids
-    head.rollbackTo(1L, Some(3000L))
-    val back = GraftTable.load(s"$dir/t")
-    val ids = back.readLineage(spark).collect().map(r =>
-      r.getLong(0) -> (if (r.isNullAt(r.fieldIndex("_row_id"))) None
-        else Some(r.getLong(r.fieldIndex("_row_id"))))).toMap
-    // common file: ids identical to what the discarded head served
-    assert(ids(1L).contains(headIds(1L)) && ids(2L).contains(headIds(2L)))
-    // the file only the target knows (no head band to adopt) rides the
-    // adoption-rewritten fresh segment and gets its upgrade band at the
-    // rollback commit — FRESH ids from the watermark, never a reuse of
-    // the adopted (or any discarded) band
-    val adopted = Set(headIds(1L), headIds(2L))
-    assert(ids(3L).exists(i => i >= 2L && !adopted.contains(i)) &&
-      ids(4L).exists(i => i >= 2L && !adopted.contains(i)))
-    // and the watermark stays monotone: the next write bands fresh
-    t.append(mkDf(9L -> "z"), Some(4000L))
-    val fin = GraftTable.load(s"$dir/t")
-    val allIds = fin.readLineage(spark).collect().flatMap(r =>
-      if (r.isNullAt(r.fieldIndex("_row_id"))) None
-      else Some(r.getLong(r.fieldIndex("_row_id"))))
-    assert(allIds.length == allIds.distinct.length)
   }
 }
