@@ -673,7 +673,7 @@ final class GraftV2Table(
     // raw scan refuses MoR-pending tables — plain sessions report
     // predicate-deferred/equality statements unsupported (with the
     // scan's direction toward extensions), extensions sessions route
-    // through GraftDeleteCommand. Positional entries stay allowed.
+    // to the copy-on-write delete. Positional entries stay allowed.
     snapshotId.isEmpty && t.pendingDeletes.isEmpty &&
       t.equalityDeletes.isEmpty &&
       filters.forall(f => filterToColumn(f).isDefined)
@@ -963,9 +963,10 @@ final class GraftV2Table(
           "read through a GraftExtensions session (builder" +
           ".withExtensions(new GraftExtensions)), via GraftTable.read/" +
           "scan, or compact() to materialize them first"
-      require(t.parsePending(s).isEmpty, refuse("deferred deletes"))
-      require(t.parsePositional(s).isEmpty, refuse("positional deletes"))
-      require(t.parseEquality(s).isEmpty, refuse("equality deletes"))
+      val state = DeleteState.of(s)
+      require(state.predicates.isEmpty, refuse("deferred deletes"))
+      require(state.positional.isEmpty, refuse("positional deletes"))
+      require(state.equality.isEmpty, refuse("equality deletes"))
     }
     // LAZY planning: the manifest LIST is read here (small), but its
     // segment files are only parsed for the files a query actually
@@ -1135,7 +1136,7 @@ final class GraftV2Table(
         val ridByBn = scoped
           .flatMap(f => f.firstRowId.map(bn(f.path) -> _)).toMap
         val seqByBn = scoped
-          .flatMap(f => t.fileSnapId(f.path).map(bn(f.path) -> _)).toMap
+          .flatMap(f => GraftTable.fileSnapId(f.path).map(bn(f.path) -> _)).toMap
         new GraftFileposScan(tableName, t.schema, req,
           new util.HashMap[String, String](opts), files,
           ridByBn, seqByBn)

@@ -80,7 +80,11 @@ case class ResolveGraftDml(spark: SparkSession) extends Rule[LogicalPlan] {
     case a @ AppendData(table, query, _, isByName, _, _) =>
       if (!query.resolved) plan
       else graftTarget(table) match {
-        case Some(g) => rewriteInsert(g, query, isByName)
+        case Some(g) =>
+          val src = aligned(g, query, isByName)
+          // INSERT keeps the append's own commit retry, not withDmlRetry
+          GraftDmlCommand(s"INSERT INTO ${g.name()}", s =>
+            g.underlying.appendWithRetry(GraftBridge.ofRows(s, src)): Unit)
         case None => spliceSource(plan, query)(q => a.copy(query = q))
       }
     case d @ DeleteFromTable(target, condition) =>
@@ -96,17 +100,23 @@ case class ResolveGraftDml(spark: SparkSession) extends Rule[LogicalPlan] {
         case Some(g) if g.pinned.isEmpty &&
             inSubqueryKeys(condition, target.outputSet).isDefined =>
           val (cols, src) = inSubqueryKeys(condition, target.outputSet).get
+          def keys(s: SparkSession) = GraftBridge.ofRows(s, src).select(
+            cols.map(c => org.apache.spark.sql.functions.col(c)
+              .cast(g.underlying.schema(c).dataType).as(c)): _*)
           if (g.underlying.properties.get("write.delete.mode")
               .contains("merge-on-read"))
-            GraftMorDeleteKeysCommand(g.underlying, src, cols)
-          else GraftCowDeleteKeysCommand(g.underlying, src, cols)
+            dml("DELETE positional by keys", g)((t, s) =>
+              t.deletePositionalByKeys(s, keys(s), cols))
+          else dml("DELETE copy-on-write by keys", g)((t, s) =>
+            t.deleteByKeys(s, keys(s), cols))
         // write.delete.mode=merge-on-read: commit positions, not a
         // rewrite (the v28/v29 library path) — O(victim rows) of delete
         // metadata, untouched files keep their plain scans
         case Some(g) if g.pinned.isEmpty &&
             g.underlying.properties.get("write.delete.mode")
               .contains("merge-on-read") =>
-          GraftMorDeleteCommand(g.underlying, byName(condition))
+          val cond = byName(condition)
+          dml("DELETE positional", g)((t, s) => t.deletePositional(s, cond))
         // POSITIONAL, EQUALITY and PREDICATE-deferred entries compose
         // with CoW delete in the library, but the DSv2 DELETE plan still
         // builds a scan of the relation and the raw scan refuses
@@ -117,7 +127,8 @@ case class ResolveGraftDml(spark: SparkSession) extends Rule[LogicalPlan] {
             (g.underlying.positionalDeletes.nonEmpty ||
               g.underlying.equalityDeletes.nonEmpty ||
               g.underlying.pendingDeletes.nonEmpty) =>
-          GraftDeleteCommand(g.underlying, byName(condition))
+          val cond = byName(condition)
+          dml("DELETE copy-on-write", g)((t, s) => t.delete(s, cond))
         case _ => plan
       }
     case o @ OverwritePartitionsDynamic(table, query, _, isByName, _) =>
@@ -127,11 +138,9 @@ case class ResolveGraftDml(spark: SparkSession) extends Rule[LogicalPlan] {
       if (!query.resolved) plan
       else graftTarget(table) match {
         case Some(g) =>
-          rewriteInsert(g, query, isByName) match {
-            case GraftInsertCommand(t, src) =>
-              GraftOverwriteDynamicCommand(t, src)
-            case other => other
-          }
+          val src = aligned(g, query, isByName)
+          dml("INSERT OVERWRITE dynamic partitions", g)((t, s) =>
+            t.overwritePartitionsDynamic(s, GraftBridge.ofRows(s, src)))
         case None => spliceSource(plan, query)(q => o.copy(query = q))
       }
     case o @ OverwriteByExpression(table, deleteExpr, query, _, isByName, _, _) =>
@@ -142,22 +151,19 @@ case class ResolveGraftDml(spark: SparkSession) extends Rule[LogicalPlan] {
           // deleteExpr is the always-true literal. Partition-scoped
           // overwrites would need the CoW delete's per-file proofs fused
           // with the append — refused with direction instead of guessed.
+          val src = aligned(g, query, isByName)
           deleteExpr match {
             case org.apache.spark.sql.catalyst.expressions.Literal(true, _) =>
-              rewriteInsert(g, query, isByName) match {
-                case GraftInsertCommand(t, src) => GraftOverwriteCommand(t, src)
-                case other => other
-              }
+              dml("INSERT OVERWRITE", g)((t, s) =>
+                t.overwrite(GraftBridge.ofRows(s, src)))
             case pred =>
               // static-partition / predicate-scoped overwrite
               // (`INSERT OVERWRITE t PARTITION (p = …)`): atomic slice
               // replacement via overwriteWhere — whole-slice files drop
               // metadata-only, only boundary files rewrite
-              rewriteInsert(g, query, isByName) match {
-                case GraftInsertCommand(t, src) =>
-                  GraftOverwriteWhereCommand(t, byName(pred), src)
-                case other => other
-              }
+              val cond = byName(pred)
+              dml("INSERT OVERWRITE where", g)((t, s) =>
+                t.overwriteWhere(s, cond, GraftBridge.ofRows(s, src)))
           }
         case None => spliceSource(plan, query)(q => o.copy(query = q))
       }
@@ -204,12 +210,23 @@ case class ResolveGraftDml(spark: SparkSession) extends Rule[LogicalPlan] {
     case _ => substituteMorReads(plan)
   }
 
-  /** SQL `INSERT INTO cat.db.t …` → [[GraftTable.append]]'s manifest
-    * commit protocol (a bare DSv2 write would bypass it — the relation
-    * deliberately lacks BATCH_WRITE). Column-list inserts arrive
-    * by-name; bare inserts by-position; both are cast to the table
-    * schema (ANSI failures surface at execution, same as any insert). */
-  private def rewriteInsert(
+  /** A statement routed to one table operation: `op` runs under
+    * [[GraftTable.withDmlRetry]] (so `graft.dml.isolation=strict`
+    * refuses instead of replanning), and EXPLAIN shows `what` and the
+    * table name. */
+  private def dml(what: String, g: GraftV2Table)(
+      op: (GraftTable, SparkSession) => Any): LogicalPlan = {
+    val t = g.underlying
+    GraftDmlCommand(s"$what ${g.name()}", s => t.withDmlRetry()(op(t, s)): Unit)
+  }
+
+  /** The source of SQL `INSERT [OVERWRITE] cat.db.t …` aligned to the
+    * table schema, for [[GraftTable.append]]'s manifest commit protocol
+    * (a bare DSv2 write would bypass it — the relation deliberately
+    * lacks BATCH_WRITE). Column-list inserts arrive by-name; bare
+    * inserts by-position; both are cast to the table schema (ANSI
+    * failures surface at execution, same as any insert). */
+  private def aligned(
       g: GraftV2Table,
       sourceQuery: LogicalPlan,
       isByName: Boolean): LogicalPlan = {
@@ -221,7 +238,7 @@ case class ResolveGraftDml(spark: SparkSession) extends Rule[LogicalPlan] {
     // rule is not at risk
     val query = substituteMorReads(sourceQuery)
     val fields = g.underlying.schema.fields.toSeq
-    val aligned: Seq[(org.apache.spark.sql.catalyst.expressions.Attribute,
+    val pairs: Seq[(org.apache.spark.sql.catalyst.expressions.Attribute,
         org.apache.spark.sql.types.StructField)] =
       if (isByName) {
         // by-name requires the exact column set: silently dropping an
@@ -240,13 +257,12 @@ case class ResolveGraftDml(spark: SparkSession) extends Rule[LogicalPlan] {
             s"${g.name()} has ${fields.size}")
         query.output.zip(fields)
       }
-    val prj = Project(aligned.map { case (attr, f) =>
+    Project(pairs.map { case (attr, f) =>
       val v =
         if (attr.dataType == f.dataType) attr
         else org.apache.spark.sql.catalyst.expressions.Cast(attr, f.dataType)
       Alias(v, f.name)()
     }, query)
-    GraftInsertCommand(g.underlying, prj)
   }
 
   /** A DSv2 graft relation whose snapshot has merge-on-read deletes
@@ -352,8 +368,7 @@ case class ResolveGraftDml(spark: SparkSession) extends Rule[LogicalPlan] {
             case Some(id) => tb.log.byId(id)
             case None => tb.log.current
           }
-          val pending = snap.exists(s => tb.parsePending(s).nonEmpty ||
-            tb.parsePositional(s).nonEmpty || tb.parseEquality(s).nonEmpty)
+          val pending = snap.exists(s => !DeleteState.of(s).isEmpty)
           // pre-rename/pre-widening/pre-default files also need the
           // library's per-era aliasing/casting/filling — the raw
           // file-list scan would read renamed columns as NULL, widened
@@ -430,27 +445,29 @@ case class ResolveGraftDml(spark: SparkSession) extends Rule[LogicalPlan] {
       if (a.value.semanticEquals(a.key)) None
       else Some(name -> byName(a.value))
     }.toMap
-    if (assigns.isEmpty) GraftNoopCommand()
+    if (assigns.isEmpty)
+      GraftDmlCommand(s"UPDATE ${g.name()} (identity assignments only)", _ => ())
     else condition.flatMap(inSubqueryKeys(_, targetOut)) match {
       case Some((cols, src)) =>
         // UPDATE … WHERE k IN (SELECT …) ≡ a matched-only MERGE keyed on
         // the (deduplicated) subquery tuples — routed to the CoW action
         // rewrite. The write.update.mode property governs only the
         // predicate form (a positional update needs a row predicate).
-        GraftMergeActionsCommand(g.underlying, Distinct(src),
-          cols.map(c => (c, c)),
-          Seq(MergeUpdate(None, assigns)), Nil, Nil)
-      case None => {
-      val cond = condition.map(byName).getOrElse(lit(true))
-      // write.update.mode=merge-on-read routes to the positional-delta
-      // form (old copies tombstoned as positions + new rows appended —
-      // O(matching rows) written, no candidate file rewritten); default
-      // stays the copy-on-write rewrite
-      g.underlying.properties.getOrElse("write.update.mode", "copy-on-write") match {
-        case "merge-on-read" => GraftMorUpdateCommand(g.underlying, cond, assigns)
-        case _ => GraftUpdateCommand(g.underlying, cond, assigns)
-      }
-      }
+        val keys = Distinct(src)
+        dml("UPDATE copy-on-write by keys", g)((t, s) =>
+          t.mergeActions(s, GraftBridge.ofRows(s, keys), cols.map(c => (c, c)),
+            Seq(MergeUpdate(None, assigns)), Nil))
+      case None =>
+        val cond = condition.map(byName).getOrElse(lit(true))
+        // write.update.mode=merge-on-read routes to the positional-delta
+        // form (old copies tombstoned as positions + new rows appended —
+        // O(matching rows) written, no candidate file rewritten); default
+        // stays the copy-on-write rewrite
+        if (g.underlying.properties.get("write.update.mode")
+            .contains("merge-on-read"))
+          dml("UPDATE positional", g)((t, s) =>
+            t.updatePositional(s, cond, assigns))
+        else dml("UPDATE copy-on-write", g)((t, s) => t.update(s, cond, assigns))
     }
   }
 
@@ -554,9 +571,11 @@ case class ResolveGraftDml(spark: SparkSession) extends Rule[LogicalPlan] {
     val mode = tbl.properties.getOrElse("write.merge.mode", "copy-on-write")
     canonical match {
       case Some(project) if mode == "merge-on-read" =>
-        GraftMorMergeCommand(tbl, project, keyPairs.map(_._1))
+        dml("MERGE equality upsert", g)((t, s) =>
+          t.mergeEquality(s, GraftBridge.ofRows(s, project), keyPairs.map(_._1)))
       case Some(project) if keyPairs.size == 1 =>
-        GraftCowMergeCommand(tbl, project, keyPairs.head._1)
+        dml("MERGE copy-on-write upsert", g)((t, s) =>
+          t.merge(s, GraftBridge.ofRows(s, project), keyPairs.head._1))
       case _ if mode == "merge-on-read" =>
         // general shape under merge-on-read: expressible as ONE
         // tombstone+upsert commit only when every outcome is a function
@@ -595,8 +614,9 @@ case class ResolveGraftDml(spark: SparkSession) extends Rule[LogicalPlan] {
               as.map(parseAssign).toMap
                 .map { case (c, v) => c -> overSource(v, sourceOut) })
         }
-        GraftMorMergeActionsCommand(tbl, sourcePlan, keyPairs,
-          matched, notMatched)
+        dml("MERGE equality actions", g)((t, s) =>
+          t.mergeEqualityConditional(s, GraftBridge.ofRows(s, sourcePlan),
+            keyPairs, matched, notMatched))
       case _ =>
         // general copy-on-write: conditions/values see the joined row
         // (target bare, source under the reserved prefix)
@@ -618,8 +638,9 @@ case class ResolveGraftDml(spark: SparkSession) extends Rule[LogicalPlan] {
               as.map(parseAssign).toMap.map { case (c, v) => c -> oj(v) })
           case DeleteAction(cond) => MergeDelete(cond.map(oj))
         }
-        GraftMergeActionsCommand(tbl, sourcePlan, keyPairs,
-          matched, notMatched, bySource)
+        dml("MERGE copy-on-write actions", g)((t, s) =>
+          t.mergeActions(s, GraftBridge.ofRows(s, sourcePlan), keyPairs,
+            matched, notMatched, bySource))
     }
   }
 
@@ -677,193 +698,13 @@ object ResolveGraftDml {
   }
 }
 
-/** DELETE routed to the copy-on-write delete (the positional-pending
-  * composition the DSv2 SupportsDelete path cannot serve — its plan
-  * scans the relation, and the raw scan refuses MoR-pending tables). */
-case class GraftDeleteCommand(
-    table: GraftTable,
-    cond: Column) extends LeafRunnableCommand {
-  override def run(spark: SparkSession): Seq[Row] = {
-    table.withDmlRetry() { table.delete(spark, cond) }
-    Nil
-  }
-}
-
-/** UPDATE routed to the copy-on-write rewrite. */
-case class GraftUpdateCommand(
-    table: GraftTable,
-    cond: Column,
-    assigns: Map[String, Column]) extends LeafRunnableCommand {
-  override def run(spark: SparkSession): Seq[Row] = {
-    table.withDmlRetry() { table.update(spark, cond, assigns) }
-    Nil
-  }
-}
-
-/** MERGE routed to the copy-on-write keyed upsert. */
-case class GraftCowMergeCommand(
-    table: GraftTable,
-    source: LogicalPlan,
-    keyCol: String) extends LeafRunnableCommand {
-  override def run(spark: SparkSession): Seq[Row] = {
-    val src = GraftBridge.ofRows(spark, source)
-    table.withDmlRetry() { table.merge(spark, src, keyCol) }
-    Nil
-  }
-}
-
-/** UPDATE routed to the positional merge-on-read delta
-  * ([[GraftTable.updatePositional]] — `write.update.mode=merge-on-read`). */
-case class GraftMorUpdateCommand(
-    table: GraftTable,
-    cond: Column,
-    assigns: Map[String, Column]) extends LeafRunnableCommand {
-  override def run(spark: SparkSession): Seq[Row] = {
-    table.withDmlRetry() { table.updatePositional(spark, cond, assigns) }
-    Nil
-  }
-}
-
-/** DELETE routed to the positional merge-on-read form
-  * ([[GraftTable.deletePositional]] — `write.delete.mode=merge-on-read`). */
-case class GraftMorDeleteCommand(
-    table: GraftTable,
-    cond: Column) extends LeafRunnableCommand {
-  override def run(spark: SparkSession): Seq[Row] = {
-    table.withDmlRetry() { table.deletePositional(spark, cond) }
-    Nil
-  }
-}
-
-/** `DELETE … WHERE k IN (SELECT …)` routed to the copy-on-write
-  * anti-join rewrite ([[GraftTable.deleteByKeys]]). */
-case class GraftCowDeleteKeysCommand(
-    table: GraftTable,
-    source: LogicalPlan,
-    keyCols: Seq[String]) extends LeafRunnableCommand {
-  override def run(spark: SparkSession): Seq[Row] = {
-    val keys = castKeys(spark, table, source, keyCols)
-    table.withDmlRetry() { table.deleteByKeys(spark, keys, keyCols) }
-    Nil
-  }
-  private def castKeys(spark: SparkSession, t: GraftTable,
-      src: LogicalPlan, cols: Seq[String]) =
-    GraftBridge.ofRows(spark, src).select(cols.map(c =>
-      org.apache.spark.sql.functions.col(c)
-        .cast(t.schema(c).dataType).as(c)): _*)
-}
-
-/** `DELETE … WHERE k IN (SELECT …)` routed to the positional
-  * merge-on-read key delete ([[GraftTable.deletePositionalByKeys]] —
-  * `write.delete.mode=merge-on-read`). */
-case class GraftMorDeleteKeysCommand(
-    table: GraftTable,
-    source: LogicalPlan,
-    keyCols: Seq[String]) extends LeafRunnableCommand {
-  override def run(spark: SparkSession): Seq[Row] = {
-    val keys = GraftBridge.ofRows(spark, source).select(keyCols.map(c =>
-      org.apache.spark.sql.functions.col(c)
-        .cast(table.schema(c).dataType).as(c)): _*)
-    table.withDmlRetry() {
-      table.deletePositionalByKeys(spark, keys, keyCols)
-    }
-    Nil
-  }
-}
-
-/** Conditional-action MERGE routed to the general copy-on-write rewrite
-  * ([[GraftTable.mergeActions]]). */
-case class GraftMergeActionsCommand(
-    table: GraftTable,
-    source: LogicalPlan,
-    keyPairs: Seq[(String, String)],
-    matched: Seq[MergeMatchedAction],
-    notMatched: Seq[MergeInsert],
-    bySource: Seq[MergeMatchedAction]) extends LeafRunnableCommand {
-  override def run(spark: SparkSession): Seq[Row] = {
-    val src = GraftBridge.ofRows(spark, source)
-    table.withDmlRetry() {
-      table.mergeActions(spark, src, keyPairs, matched, notMatched, bySource)
-    }
-    Nil
-  }
-}
-
-/** Conditional-action MERGE routed to the merge-on-read tombstone+upsert
-  * commit ([[GraftTable.mergeEqualityConditional]]). */
-case class GraftMorMergeActionsCommand(
-    table: GraftTable,
-    source: LogicalPlan,
-    keyPairs: Seq[(String, String)],
-    matched: Seq[MergeMatchedAction],
-    notMatched: Seq[MergeInsert]) extends LeafRunnableCommand {
-  override def run(spark: SparkSession): Seq[Row] = {
-    val src = GraftBridge.ofRows(spark, source)
-    table.withDmlRetry() {
-      table.mergeEqualityConditional(spark, src, keyPairs, matched, notMatched)
-    }
-    Nil
-  }
-}
-
-/** MERGE routed to the merge-on-read (equality tombstone) upsert. */
-case class GraftMorMergeCommand(
-    table: GraftTable,
-    source: LogicalPlan,
-    keyCols: Seq[String]) extends LeafRunnableCommand {
-  override def run(spark: SparkSession): Seq[Row] = {
-    val src = GraftBridge.ofRows(spark, source)
-    table.withDmlRetry() { table.mergeEquality(spark, src, keyCols) }
-    Nil
-  }
-}
-
-/** INSERT INTO routed to the append commit protocol. */
-case class GraftInsertCommand(
-    table: GraftTable,
-    source: LogicalPlan) extends LeafRunnableCommand {
-  override def run(spark: SparkSession): Seq[Row] = {
-    val src = GraftBridge.ofRows(spark, source)
-    table.appendWithRetry(src)
-    Nil
-  }
-}
-
-/** Predicate-scoped INSERT OVERWRITE routed to the atomic slice
-  * replacement ([[GraftTable.overwriteWhere]]). */
-case class GraftOverwriteWhereCommand(
-    table: GraftTable,
-    pred: Column,
-    source: LogicalPlan) extends LeafRunnableCommand {
-  override def run(spark: SparkSession): Seq[Row] = {
-    val src = GraftBridge.ofRows(spark, source)
-    table.withDmlRetry() { table.overwriteWhere(spark, pred, src) }
-    Nil
-  }
-}
-
-/** Dynamic-partition INSERT OVERWRITE routed to the atomic
-  * replace-written-partitions commit
-  * ([[GraftTable.overwritePartitionsDynamic]]). */
-case class GraftOverwriteDynamicCommand(
-    table: GraftTable,
-    source: LogicalPlan) extends LeafRunnableCommand {
-  override def run(spark: SparkSession): Seq[Row] = {
-    val src = GraftBridge.ofRows(spark, source)
-    table.withDmlRetry() { table.overwritePartitionsDynamic(spark, src) }
-    Nil
-  }
-}
-
-/** INSERT OVERWRITE TABLE routed to the atomic truncate-and-replace. */
-case class GraftOverwriteCommand(
-    table: GraftTable,
-    source: LogicalPlan) extends LeafRunnableCommand {
-  override def run(spark: SparkSession): Seq[Row] = {
-    val src = GraftBridge.ofRows(spark, source)
-    table.withDmlRetry() { table.overwrite(src) }
-    Nil
-  }
+/** A SQL DML statement routed to one [[GraftTable]] operation by
+  * [[ResolveGraftDml]]: `op` performs it, retry policy included, and
+  * EXPLAIN shows `description`. */
+case class GraftDmlCommand(description: String, op: SparkSession => Unit)
+    extends LeafRunnableCommand {
+  override def run(spark: SparkSession): Seq[Row] = { op(spark); Nil }
+  override def simpleString(maxFields: Int): String = s"GraftDml $description"
 }
 
 /** CREATE TABLE … AS SELECT: create through the catalog (schema from the
@@ -935,9 +776,4 @@ case class GraftRtasCommand(
     catalog.invalidateTable(ident)
     Nil
   }
-}
-
-/** An UPDATE whose every assignment was the identity — nothing to do. */
-case class GraftNoopCommand() extends LeafRunnableCommand {
-  override def run(spark: SparkSession): Seq[Row] = Nil
 }

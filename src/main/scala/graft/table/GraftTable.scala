@@ -188,41 +188,14 @@ final class GraftTable private (
   def snapshotsTableEnabled: Boolean =
     properties.getOrElse(PropSnapshotsTable, "true").toBoolean
 
-  /** DEFERRED (merge-on-read) deletes pending on a snapshot: `(coveredSnap,
-    * predicateSql)` pairs parsed from the `pending-deletes` summary entry.
-    * A predicate applies only to data files written at snapshot ≤
-    * `coveredSnap` — rows appended AFTER the delete are never affected
-    * (the sequence-number scoping Iceberg's equality deletes use). */
-  private[table] def parsePending(s: Snapshot): Seq[(Long, String)] =
-    parsePendingFull(s).map(e => (e._1, e._2))
+  /** The merge-on-read delete state of the CURRENT snapshot. */
+  private def deleteState: DeleteState = DeleteState.of(log.current)
 
-  /** [[parsePending]] plus each entry's commit-time exact dead-row count
-    * (`None` for entries committed with `exactCount = false`). The count
-    * is immutable once written: covered files never change, so the rows a
-    * predicate kills are fixed at commit. */
-  private[table] def parsePendingFull(
-      s: Snapshot): Seq[(Long, String, Option[Long])] =
-    s.summary.get(SummaryPendingDeletes) match {
-      case None | Some("") | Some("[]") => Nil
-      case Some(json) =>
-        graft.util.Json.parse(json).asInstanceOf[Seq[Any]].map { e =>
-          val m = e.asInstanceOf[Map[String, Any]]
-          (m("snap").asInstanceOf[Long], m("pred").asInstanceOf[String],
-            m.get("dead").collect { case d: Long => d })
-        }
-    }
-
-  private def pendingJsonFull(
-      entries: Seq[(Long, String, Option[Long])]): String =
-    graft.util.Json.write(entries.map { case (sn, p, dead) =>
-      val base = Map[String, Any]("snap" -> sn, "pred" -> p)
-      dead.fold(base)(d => base + ("dead" -> d))
-    })
-
-  /** Pending deferred deletes of the CURRENT snapshot (empty when all
-    * deletes are materialized). */
+  /** Pending PREDICATE-deferred deletes of the CURRENT snapshot as
+    * `(coveredSnap, predicateSql)` pairs (empty when all deletes are
+    * materialized) — see [[PredicateDelete]]. */
   def pendingDeletes: Seq[(Long, String)] =
-    log.current.map(parsePending).getOrElse(Nil)
+    deleteState.predicates.map(p => (p.covered, p.sql))
 
   /** Exact rows hidden by pending PREDICATE deletes at the current
     * snapshot — `Some` only when every entry carries its commit-time
@@ -230,72 +203,21 @@ final class GraftTable private (
     * under its predecessors, so the sum is exact and `count(*)`/stats can
     * stay metadata-only while entries are pending. */
   def pendingDeletedCount: Option[Long] = {
-    val es = log.current.map(parsePendingFull).getOrElse(Nil)
-    if (es.forall(_._3.isDefined)) Some(es.flatMap(_._3).sum) else None
+    val es = deleteState.predicates
+    if (es.forall(_.dead.isDefined)) Some(es.flatMap(_.dead).sum) else None
   }
 
-  /** POSITIONAL merge-on-read deletes pending on a snapshot, parsed from
-    * the `positional-deletes` summary entry (see
+  /** Pending positional delete entries of the CURRENT snapshot (see
     * [[GraftTable.PositionalDeletes]]). */
-  private[table] def parsePositional(s: Snapshot): Seq[PositionalDeletes] =
-    s.summary.get(SummaryPositionalDeletes) match {
-      case None | Some("") | Some("[]") => Nil
-      case Some(json) => parsePositionalJson(json)
-    }
-
-  private def parsePositionalJson(json: String): Seq[PositionalDeletes] =
-    graft.util.Json.parse(json).asInstanceOf[Seq[Any]].map { e =>
-      val m = e.asInstanceOf[Map[String, Any]]
-      PositionalDeletes(
-        m("targets").asInstanceOf[Map[String, Any]]
-          .map { case (k, v) => k -> v.asInstanceOf[Long] },
-        m("dvs").asInstanceOf[Map[String, Any]]
-          .map { case (k, v) => k -> v.toString })
-    }
-
-  private def positionalJson(entries: Seq[PositionalDeletes]): String =
-    graft.util.Json.write(entries.map { e =>
-      Map[String, Any]("files" -> e.files,
-        "targets" -> e.targets.map { case (k, v) => k -> (v: Any) },
-        "dvs" -> e.dvs)
-    })
-
-  /** Pending positional delete entries of the CURRENT snapshot. */
-  def positionalDeletes: Seq[PositionalDeletes] =
-    log.current.map(parsePositional).getOrElse(Nil)
+  def positionalDeletes: Seq[PositionalDeletes] = deleteState.positional
 
   /** Rows hidden by pending positional deletes at the current snapshot —
     * exact by the disjointness + targets-⊆-manifest invariants, so
     * metadata `count(*)`/stats stay exact under positional deletes. */
   def positionalDeletedCount: Long = positionalDeletes.map(_.deletedRows).sum
 
-  /** EQUALITY merge-on-read deletes pending on a snapshot, parsed from
-    * the `equality-deletes` summary entry. */
-  private[table] def parseEquality(s: Snapshot): Seq[EqualityDeletes] =
-    s.summary.get(SummaryEqualityDeletes) match {
-      case None | Some("") | Some("[]") => Nil
-      case Some(json) =>
-        graft.util.Json.parse(json).asInstanceOf[Seq[Any]].map { e =>
-          val m = e.asInstanceOf[Map[String, Any]]
-          EqualityDeletes(
-            m("files").asInstanceOf[Seq[Any]].map(_.toString),
-            m("cols").asInstanceOf[Seq[Any]].map(_.toString),
-            m("snap").asInstanceOf[Long],
-            m.get("dead").collect { case d: Long => d },
-            m("covs").asInstanceOf[Seq[Any]].map(_.asInstanceOf[Long]))
-        }
-    }
-
-  private def equalityJson(entries: Seq[EqualityDeletes]): String =
-    graft.util.Json.write(entries.map { e =>
-      val base = Map[String, Any]("files" -> e.files, "cols" -> e.cols,
-        "snap" -> e.covered, "covs" -> e.covs)
-      e.dead.fold(base)(d => base + ("dead" -> d))
-    })
-
   /** Pending equality-delete entries of the CURRENT snapshot. */
-  def equalityDeletes: Seq[EqualityDeletes] =
-    log.current.map(parseEquality).getOrElse(Nil)
+  def equalityDeletes: Seq[EqualityDeletes] = deleteState.equality
 
   /** Exact rows hidden by pending EQUALITY deletes at the current
     * snapshot — `Some` only when every entry carries its commit-time
@@ -304,65 +226,6 @@ final class GraftTable private (
     val es = equalityDeletes
     if (es.forall(_.dead.isDefined)) Some(es.flatMap(_.dead).sum) else None
   }
-
-  /** Surviving equality entries after a COPY-ON-WRITE commit that
-    * rewrote or dropped `touched` candidate files: an entry whose
-    * coverage intersects the touched set degrades its dead count to
-    * None — part of its victims just MATERIALIZED (equality-dead rows
-    * are never copied into the rewrite), so the recorded count no
-    * longer describes the remaining debt; degrade, never lie (the
-    * [[compact]] discipline — count(*)/stats fall back to scans until
-    * compaction clears the entries). Entries covering none of the
-    * touched files keep their exact counts. The entries themselves are
-    * KEPT even when their remaining coverage might be empty — checking
-    * would parse the untouched manifest segments this planning
-    * deliberately skips, and an entry covering nothing attaches to no
-    * read group (harmless until compact() clears it). */
-  private def degradeEqualityFor(
-      eqPend: Seq[EqualityDeletes],
-      touched: Seq[DataFileEntry]): Seq[EqualityDeletes] =
-    eqPend.map { e =>
-      if (touched.exists(f =>
-          fileSnapId(f.path).getOrElse(Long.MinValue) <= e.covered))
-        e.copy(dead = None)
-      else e
-    }
-
-  /** [[degradeEqualityFor]]'s PREDICATE-form twin: surviving
-    * predicate-deferred entries after a copy-on-write commit touched
-    * `touched` files — an entry covering any of them degrades its dead
-    * count to None (part of its victims just materialized with the
-    * rewrite); untouched entries keep their exact counts, and entries
-    * are never removed here for the same skip-the-untouched-segments
-    * reason (a predicate re-applied to already-filtered survivors is
-    * idempotent — `NOT p OR p IS NULL` keeps every kept row). */
-  private def degradePendingFor(
-      pend: Seq[(Long, String, Option[Long])],
-      touched: Seq[DataFileEntry]): Seq[(Long, String, Option[Long])] =
-    pend.map { case e @ (covered, sql, _) =>
-      if (touched.exists(f =>
-          fileSnapId(f.path).getOrElse(Long.MinValue) <= covered))
-        (covered, sql, None)
-      else e
-    }
-
-  /** Strip `gone` data-file paths from positional entries (the files were
-    * dropped or rewritten — their deletions are materialized); entries
-    * with no remaining targets disappear (their deletion vectors stay on
-    * disk until [[expireSnapshots]] reclaims them). Only ever shrinks
-    * the list, so the at-most-one-entry invariant holds. */
-  private def stripPositional(
-      entries: Seq[PositionalDeletes],
-      gone: Set[String]): Seq[PositionalDeletes] =
-    entries
-      .map { e =>
-        // a removed target's per-file deletion vector leaves with it
-        // (the file becomes unreferenced → expire/orphan reclaims it)
-        e.copy(
-          targets = e.targets.filterNot { case (p, _) => gone(p) },
-          dvs = e.dvs.filterNot { case (p, _) => gone(p) })
-      }
-      .filter(_.targets.nonEmpty)
 
   // ------------------------------------------------------------------
   // named refs (tags)
@@ -698,26 +561,6 @@ final class GraftTable private (
     writeBranches(branches - name)
   }
 
-  /** The snapshot that wrote a data file, parsed from its
-    * `part-<snap>-<token>-<seq>` name — the scope key for deferred
-    * deletes. Files OUTSIDE this table's own data dir — a branch's
-    * fork-inherited `../../data/…` entries, or a parent's published
-    * `branches/<name>/data/…` entries — carry snapshot ids from a
-    * DIFFERENT table's sequence, so their names mean nothing here:
-    * they resolve to None, which every consumer treats conservatively
-    * (always covered by a deferred delete, force-included in the
-    * compaction that materializes one). Correct in both directions:
-    * foreign-era files always predate any delete committed in THIS
-    * table's log. */
-  private[table] def fileSnapId(path: String): Option[Long] = {
-    if (path.startsWith("../") || path.startsWith("branches/") ||
-        path.contains("/branches/")) return None
-    val base = path.substring(path.lastIndexOf('/') + 1)
-    if (!base.startsWith("part-")) return None
-    val seg = base.drop(5).takeWhile(_ != '-')
-    if (seg.nonEmpty && seg.forall(_.isDigit)) Some(seg.toLong) else None
-  }
-
   /** Columns with per-file bloom filters ([[FileBloom]]): the
     * `graft.bloom.columns` property filtered to existing, bloom-capable,
     * non-partition columns — unknown names are ignored rather than
@@ -934,12 +777,10 @@ final class GraftTable private (
       extraSummary = Map(
         "dropped-data-files" -> prevFiles.toString,
         "added-data-files" -> newFiles.size.toString,
-        "added-records" -> newFiles.map(_.recordCount).sum.toString,
+        "added-records" -> newFiles.map(_.recordCount).sum.toString) ++
         // explicit empty values beat the carried-summary inheritance:
         // no covered file survives, so no entry survives
-        SummaryPendingDeletes -> "[]",
-        SummaryPositionalDeletes -> "[]",
-        SummaryEqualityDeletes -> "[]"))
+        DeleteState.empty.summary)
   }
 
   /** Predicate-scoped OVERWRITE — atomic "replace this slice": rows
@@ -952,8 +793,8 @@ final class GraftTable private (
     * rows are NOT constrained to match the predicate (same as SQL's
     * `INSERT OVERWRITE … PARTITION` trust model — callers enforce
     * alignment with a [[GraftTable.PropCheckPrefix]] constraint if they
-    * want it hard). MoR stance matches [[delete]]: refuses pending
-    * predicate/equality entries, composes with positional. */
+    * want it hard). Pending merge-on-read state composes as in
+    * [[delete]]. */
   def overwriteWhere(
       spark: SparkSession,
       predicate: Column,
@@ -973,42 +814,19 @@ final class GraftTable private (
     val augSchema = PartitionField.augmentedSchema(schema, partitionFields)
     val (dropped0, rewrites0) =
       candidates.partition(f => Pruning.mustMatchAll(proofPred, f, augSchema))
-    // pending EQUALITY and PREDICATE-deferred entries: same composition
-    // discipline as delete() — covered whole-file drops demote to
-    // rewrites, survivors read fully visible, touched entries degrade
-    // their dead counts
-    val eqPend = parseEquality(current)
-    val pendFull = parsePendingFull(current)
-    val pend = pendFull.map(e => (e._1, e._2))
-    val (dropped, rewrites) =
-      if (eqPend.isEmpty && pend.isEmpty) (dropped0, rewrites0)
-      else {
-        val (coverable, freeDrop) = dropped0.partition { f =>
-          val fsn = fileSnapId(f.path).getOrElse(Long.MinValue)
-          eqPend.exists(e => fsn <= e.covered) ||
-            pend.exists { case (covered, _) => fsn <= covered }
-        }
-        (freeDrop, coverable ++ rewrites0)
-      }
-    val posPend = parsePositional(current)
-    val priorDeleted: Map[String, Long] =
-      posPend.flatMap(_.targets).groupMapReduce(_._1)(_._2)(_ + _)
+    // pending merge-on-read state composes as in delete()
+    val state = DeleteState.of(current)
+    val (dropped, rewrites) = state.demote(dropped0, rewrites0)
     val keptFiles =
       if (rewrites.isEmpty) Nil
       else writeNonEmptyFiles(
-        readVisibleCarry(spark, pend, posPend, rewrites, eqPend)
+        readVisibleCarry(spark, state, rewrites)
           .filter(org.apache.spark.sql.functions.coalesce(
             !predicate, org.apache.spark.sql.functions.lit(true))),
         snapId)
     val inserted = writeDataFiles(df, snapId)
-    val removed =
-      (if (eqPend.isEmpty && pend.isEmpty)
-        candidates.map(f =>
-          f.recordCount - priorDeleted.getOrElse(f.path, 0L)).sum
-      else readVisible(spark, pend, posPend, candidates, eqPend).count()) -
+    val removed = visibleRows(spark, state, candidates) -
       keptFiles.map(_.recordCount).sum
-    val stillPositional =
-      stripPositional(posPend, candidates.map(_.path).toSet)
     commit(lg, snapId,
       untouchedM.append(keptFiles ++ inserted),
       keptFiles ++ inserted,
@@ -1018,12 +836,8 @@ final class GraftTable private (
         "dropped-data-files" -> dropped.size.toString,
         "rewritten-data-files" -> rewrites.size.toString,
         "added-data-files" -> inserted.size.toString,
-        "added-records" -> inserted.map(_.recordCount).sum.toString,
-        SummaryPendingDeletes ->
-          pendingJsonFull(degradePendingFor(pendFull, candidates)),
-        SummaryPositionalDeletes -> positionalJson(stillPositional),
-        SummaryEqualityDeletes ->
-          equalityJson(degradeEqualityFor(eqPend, candidates))))
+        "added-records" -> inserted.map(_.recordCount).sum.toString) ++
+        state.afterRewrite(candidates).summary)
   }
 
   /** DYNAMIC-partition OVERWRITE (Spark's
@@ -1047,9 +861,8 @@ final class GraftTable private (
     * quantity dynamic overwrite is bounded by at any corpus size.
     * Unpartitioned tables follow Spark/Iceberg: dynamic overwrite
     * degenerates to full-table replacement; an EMPTY source replaces
-    * nothing (no snapshot committed). MoR stance matches
-    * [[overwriteWhere]]: positional entries compose, covered drops
-    * demote to rewrites, touched entries degrade their dead counts. */
+    * nothing (no snapshot committed). Pending merge-on-read state
+    * composes as in [[delete]]. */
   def overwritePartitionsDynamic(
       spark: SparkSession,
       df: DataFrame,
@@ -1124,39 +937,17 @@ final class GraftTable private (
       !properties.contains(GraftTable.PropSpecEvolved)
     val (dropped0, rewrites0) = candidates.partition(f =>
       tupleExactOk && touched.contains(f.partition))
-    // pending EQUALITY / PREDICATE-deferred composition — identical
-    // discipline to overwriteWhere: covered whole-file drops demote to
-    // rewrites, survivors read fully visible, touched entries degrade
-    val eqPend = parseEquality(current)
-    val pendFull = parsePendingFull(current)
-    val pend = pendFull.map(e => (e._1, e._2))
-    val (dropped, rewrites) =
-      if (eqPend.isEmpty && pend.isEmpty) (dropped0, rewrites0)
-      else {
-        val (coverable, freeDrop) = dropped0.partition { f =>
-          val fsn = fileSnapId(f.path).getOrElse(Long.MinValue)
-          eqPend.exists(e => fsn <= e.covered) ||
-            pend.exists { case (covered, _) => fsn <= covered }
-        }
-        (freeDrop, coverable ++ rewrites0)
-      }
-    val posPend = parsePositional(current)
-    val priorDeleted: Map[String, Long] =
-      posPend.flatMap(_.targets).groupMapReduce(_._1)(_._2)(_ + _)
+    // pending merge-on-read state composes as in delete()
+    val state = DeleteState.of(current)
+    val (dropped, rewrites) = state.demote(dropped0, rewrites0)
     val keptFiles =
       if (rewrites.isEmpty) Nil
       else writeNonEmptyFiles(
-        readVisibleCarry(spark, pend, posPend, rewrites, eqPend)
+        readVisibleCarry(spark, state, rewrites)
           .filter(!rowPred), // <=> / isNull keep the predicate total
         snapId)
-    val removed =
-      (if (eqPend.isEmpty && pend.isEmpty)
-        candidates.map(f =>
-          f.recordCount - priorDeleted.getOrElse(f.path, 0L)).sum
-      else readVisible(spark, pend, posPend, candidates, eqPend).count()) -
+    val removed = visibleRows(spark, state, candidates) -
       keptFiles.map(_.recordCount).sum
-    val stillPositional =
-      stripPositional(posPend, candidates.map(_.path).toSet)
     commit(lg, snapId,
       untouchedM.append(keptFiles ++ inserted),
       keptFiles ++ inserted,
@@ -1167,12 +958,8 @@ final class GraftTable private (
         "dropped-data-files" -> dropped.size.toString,
         "rewritten-data-files" -> rewrites.size.toString,
         "added-data-files" -> inserted.size.toString,
-        "added-records" -> inserted.map(_.recordCount).sum.toString,
-        SummaryPendingDeletes ->
-          pendingJsonFull(degradePendingFor(pendFull, candidates)),
-        SummaryPositionalDeletes -> positionalJson(stillPositional),
-        SummaryEqualityDeletes ->
-          equalityJson(degradeEqualityFor(eqPend, candidates))))
+        "added-records" -> inserted.map(_.recordCount).sum.toString) ++
+        state.afterRewrite(candidates).summary)
   }
 
   /** [[append]] with optimistic-concurrency RETRY — the production
@@ -1653,11 +1440,9 @@ final class GraftTable private (
     // file's rows — re-check every commit that adds files while entries
     // are pending.
     if (newFiles.nonEmpty) {
-      val posJson = extraSummary.get(SummaryPositionalDeletes)
-        .orElse(lg2.current.flatMap(_.summary.get(SummaryPositionalDeletes)))
-        .filter(v => v.nonEmpty && v != "[]")
-      val pendingBns = posJson.toSeq.flatMap(parsePositionalJson)
-        .flatMap(_.targets.keys).map(baseName).toSet
+      val pendingBns = DeleteState.of(
+          lg2.current.fold(Map.empty[String, String])(_.summary) ++ extraSummary)
+        .positional.flatMap(_.targets.keys).map(baseName).toSet
       val clash = newFiles.map(f => baseName(f.path)).filter(pendingBns)
       if (clash.nonEmpty) {
         abandon(Nil)
@@ -1791,15 +1576,9 @@ final class GraftTable private (
     * pending merge-on-read coverage to materialize, or a pre-rename/
     * pre-widening era to migrate. */
   private def compactForced(current: Snapshot): DataFileEntry => Boolean = {
-    val pend = parsePending(current)
-    val eqPend = parseEquality(current)
-    val posTargets: Set[String] =
-      parsePositional(current).flatMap(_.targets.keys).toSet
-    f =>
-      posTargets.contains(f.path) || pend.exists {
-        case (covered, _) => fileSnapId(f.path).forall(_ <= covered) } ||
-      eqPend.exists(e => fileSnapId(f.path).forall(_ <= e.covered)) ||
-      renameAffects(f)
+    val state = DeleteState.of(current)
+    val posTargets: Set[String] = state.positionalDead.keySet
+    f => posTargets.contains(f.path) || state.covers(f) || renameAffects(f)
   }
 
   def compact(
@@ -1814,9 +1593,7 @@ final class GraftTable private (
     val lg = log
     val current = lg.current.getOrElse(return None)
     val manifest = Manifest.read(s"$dir/${current.manifestList}")
-    val pend = parsePending(current)
-    val posPend = parsePositional(current)
-    val eqPend = parseEquality(current)
+    val state = DeleteState.of(current)
     val small0 = compactCandidates(current, manifest, smallerThanBytes)
     // `where` scopes a maintenance pass to one slice of a huge table —
     // the manifest prune keeps only files that MAY hold matching rows
@@ -1847,8 +1624,7 @@ final class GraftTable private (
     // An explicit onlyPaths group was PLANNED by compactPartial —
     // rewrite it as mandated even when it holds one file
     if (small.isEmpty ||
-        (onlyPaths.isEmpty && small.size < 2 && pend.isEmpty &&
-          posPend.isEmpty && eqPend.isEmpty &&
+        (onlyPaths.isEmpty && small.size < 2 && state.isEmpty &&
           !small.exists(renameAffects))) return None
     require(sortBy.isEmpty || zorderBy.isEmpty,
       "sortBy and zorderBy are mutually exclusive")
@@ -1864,8 +1640,7 @@ final class GraftTable private (
     // pending only while an untouched file they cover remains
     // lineage carry: a compaction is a pure repack — every row keeps its
     // _row_id AND its last-updated snapshot (readVisibleCarry)
-    val packed = readVisibleCarry(spark, parsePending(current),
-      parsePositional(current), small, parseEquality(current))
+    val packed = readVisibleCarry(spark, state, small)
     // clustered rewrite (Iceberg sort-order analog): range-partition +
     // sort so each output file covers a DISJOINT range of the cluster key.
     // sortBy clusters lexicographically (tight min/max on the FIRST
@@ -1894,33 +1669,18 @@ final class GraftTable private (
       else packed
         .repartitionByRange(targetParts, clusterKey: _*)
         .sortWithinPartitions(clusterKey: _*)
-    val newFiles = writeDataFiles(df, snapId)
-    // every covered file was force-included above, so this is empty unless
-    // a predicate's coverage check itself is conservative (kept for safety).
-    // A conservatively-surviving entry drops its commit-time dead count:
-    // part of its victims may just have been materialized by the rewrite,
-    // so the recorded count is no longer trustworthy — degrade, never lie.
-    val stillPending = parsePendingFull(current)
-      .filter { case (covered, _, _) =>
-        big.exists(f => fileSnapId(f.path).forall(_ <= covered))
-      }.map { case (covered, p, _) => (covered, p, None: Option[Long]) }
-    // positional entries lose their rewritten targets (those deletions
-    // are now physical); by force-inclusion the strip empties every
-    // entry — kept general for the same safety reason as stillPending
-    val stillPositional = stripPositional(posPend, small.map(_.path).toSet)
-    val stillEquality = eqPend.filter(e =>
-      big.exists(f => fileSnapId(f.path).forall(_ <= e.covered)))
-      .map(_.copy(dead = None))
+    val newFiles = writeNonEmptyFiles(df, snapId)
+    // a full pass force-includes every covered file and target, so the
+    // state empties; a scoped pass keeps the entries that still cover an
+    // untouched file (DeleteState.afterCompaction)
     Some(commit(lg, snapId,
       manifest.retainPaths(big.map(_.path).toSet).append(newFiles), newFiles,
       operation = "replace", committedAt,
       extraSummary = Map(
         "rewritten-data-files" -> small.size.toString,
         "added-data-files" -> newFiles.size.toString,
-        "rewritten-bytes" -> totalBytes.toString,
-        SummaryPendingDeletes -> pendingJsonFull(stillPending),
-        SummaryPositionalDeletes -> positionalJson(stillPositional),
-        SummaryEqualityDeletes -> equalityJson(stillEquality))))
+        "rewritten-bytes" -> totalBytes.toString) ++
+        state.afterCompaction(small, big).summary))
   }
 
   /** PARTIAL-PROGRESS compaction (the Iceberg `rewrite_data_files`
@@ -2075,8 +1835,8 @@ final class GraftTable private (
     // would let analyzing a SUBSET advance the watermark past files
     // other columns never sketched (silent permanent undercount). A
     // column's incremental pass covers files newer than ITS recorded
-    // snapshot; no sketch, or a sketch without a recorded snapshot
-    // (legacy) ⇒ the whole file list (union stays an upper bound).
+    // snapshot; no sketch ⇒ the whole file list (union stays an upper
+    // bound).
     val prior: Map[String, Array[Byte]] = cols.flatMap(c =>
       properties.get(s"$PropStatsSketchPrefix$c")
         .map(s => c -> d64.decode(s))).toMap
@@ -2130,9 +1890,7 @@ final class GraftTable private (
       }
     updateProperties(updates ++
       cols.map(c => s"$PropStatsSnapPrefix$c" ->
-        current.snapshotId.toString),
-      // pre-per-column tables carried one global watermark — dead now
-      removals = Set("graft.stats.analyzed-snapshot"))
+        current.snapshotId.toString))
   }
 
   /** Analyzed per-column NDV estimates ([[analyze]]), by column name. */
@@ -2179,59 +1937,29 @@ final class GraftTable private (
     val augSchema = PartitionField.augmentedSchema(schema, partitionFields)
     val (dropped0, rewrites0) =
       candidates.partition(f => Pruning.mustMatchAll(proofPred, f, augSchema))
-    // pending EQUALITY and PREDICATE-deferred entries compose:
-    // survivors are read through the full visible-row reader (a row
-    // another form already hides is never copied — the rewrite
-    // MATERIALIZES the tombstones/filters for its files), and a
-    // whole-file drop of a COVERED file demotes to a rewrite (same
-    // scoped demotion as deletePositional — dropping it would break the
-    // entries' count bookkeeping). Touched entries degrade their dead
-    // counts (degradeEqualityFor / degradePendingFor).
-    val eqPend = parseEquality(current)
-    val pendFull = parsePendingFull(current)
-    val pend = pendFull.map(e => (e._1, e._2))
-    val (dropped, rewrites) =
-      if (eqPend.isEmpty && pend.isEmpty) (dropped0, rewrites0)
-      else {
-        val (coverable, freeDrop) = dropped0.partition { f =>
-          val fsn = fileSnapId(f.path).getOrElse(Long.MinValue)
-          eqPend.exists(e => fsn <= e.covered) ||
-            pend.exists { case (covered, _) => fsn <= covered }
-        }
-        (freeDrop, coverable ++ rewrites0)
-      }
+    // pending merge-on-read state of every form composes (the
+    // DeleteState rule): survivors are read through the full
+    // visible-row reader (a row another form already hides is never
+    // copied — the rewrite MATERIALIZES the vectors/tombstones/filters
+    // for its files), a whole-file drop of a COVERED file demotes to a
+    // rewrite, and the commit settles the state over the candidates.
+    val state = DeleteState.of(current)
+    val (dropped, rewrites) = state.demote(dropped0, rewrites0)
     // SQL DELETE removes only rows where the predicate is TRUE; a NULL
     // predicate (e.g. over a column added by addColumn, NULL for old rows)
     // must KEEP the row — plain !predicate maps NULL→NULL and filter drops
     // it, silently deleting rows the predicate never matched.
-    // Pending POSITIONAL deletes compose: the rewrite reads candidates
-    // through the visible-row reader (their dead positions stay dead),
-    // and rewritten/dropped files leave the positional entries — their
-    // deletions are materialized by this commit.
-    val posPend = parsePositional(current)
-    val priorDeleted: Map[String, Long] =
-      posPend.flatMap(_.targets).groupMapReduce(_._1)(_._2)(_ + _)
     val newFiles =
       if (rewrites.isEmpty) Nil
       else writeNonEmptyFiles(
-        readVisibleCarry(spark, pend, posPend, rewrites, eqPend)
+        readVisibleCarry(spark, state, rewrites)
           .filter(org.apache.spark.sql.functions.coalesce(
             !predicate, org.apache.spark.sql.functions.lit(true))),
         snapId)
     // visible rows removed: candidates' SURVIVOR counts minus what the
-    // rewrite kept (rows already positionally dead don't count twice);
-    // under pending equality/predicate entries the per-file split of
-    // their dead rows is unknown — one count job over the candidates'
-    // visible rows keeps the summary honest (only paid while entries
-    // pend)
-    val removed =
-      (if (eqPend.isEmpty && pend.isEmpty)
-        candidates.map(f =>
-          f.recordCount - priorDeleted.getOrElse(f.path, 0L)).sum
-      else readVisible(spark, pend, posPend, candidates, eqPend).count()) -
+    // rewrite kept (rows already dead don't count twice)
+    val removed = visibleRows(spark, state, candidates) -
       newFiles.map(_.recordCount).sum
-    val stillPositional =
-      stripPositional(posPend, candidates.map(_.path).toSet)
     Some(commit(lg, snapId,
       untouchedM.append(newFiles),
       newFiles,
@@ -2239,12 +1967,8 @@ final class GraftTable private (
       extraSummary = Map(
         "deleted-records" -> removed.toString,
         "dropped-data-files" -> dropped.size.toString,
-        "rewritten-data-files" -> rewrites.size.toString,
-        SummaryPendingDeletes ->
-          pendingJsonFull(degradePendingFor(pendFull, candidates)),
-        SummaryPositionalDeletes -> positionalJson(stillPositional),
-        SummaryEqualityDeletes ->
-          equalityJson(degradeEqualityFor(eqPend, candidates)))))
+        "rewritten-data-files" -> rewrites.size.toString) ++
+        state.afterRewrite(candidates).summary))
   }
 
   /** Copy-on-write DELETE BY KEYS (the SQL
@@ -2286,43 +2010,40 @@ final class GraftTable private (
     val (candidates, untouchedM) = partitionPruned(manifest, rangePred)
     if (candidates.isEmpty) return None
     val snapId = lg.nextId
-    val posPend = parsePositional(current)
-    val eqPend = parseEquality(current)
-    val pendFull = parsePendingFull(current)
-    val pend = pendFull.map(e => (e._1, e._2))
-    val priorDeleted: Map[String, Long] =
-      posPend.flatMap(_.targets).groupMapReduce(_._1)(_._2)(_ + _)
+    val state = DeleteState.of(current)
     val P = GraftTable.MergeSrcPrefix
     val keySel = keys
       .select(keyCols.map(c => col(c).cast(schema(c).dataType).as(P + c)): _*)
       .distinct()
-    val carried = readVisibleCarry(spark, pend, posPend, candidates, eqPend)
+    val carried = readVisibleCarry(spark, state, candidates)
     val survivors = carried
       .join(keySel,
         keyCols.map(c => col(c) === col(P + c)).reduce(_ && _), "left_anti")
       .select(carried.columns.map(col): _*) // schema + any lineage carry
     val newFiles = writeNonEmptyFiles(survivors, snapId)
-    val removed =
-      (if (eqPend.isEmpty && pend.isEmpty)
-        candidates.map(f =>
-          f.recordCount - priorDeleted.getOrElse(f.path, 0L)).sum
-      else readVisible(spark, pend, posPend, candidates, eqPend).count()) -
+    val removed = visibleRows(spark, state, candidates) -
       newFiles.map(_.recordCount).sum
-    val stillPositional =
-      stripPositional(posPend, candidates.map(_.path).toSet)
     Some(commit(lg, snapId,
       untouchedM.append(newFiles),
       newFiles,
       operation = "delete", committedAt,
       extraSummary = Map(
         "deleted-records" -> removed.toString,
-        "rewritten-data-files" -> candidates.size.toString,
-        SummaryPendingDeletes ->
-          pendingJsonFull(degradePendingFor(pendFull, candidates)),
-        SummaryPositionalDeletes -> positionalJson(stillPositional),
-        SummaryEqualityDeletes ->
-          equalityJson(degradeEqualityFor(eqPend, candidates)))))
+        "rewritten-data-files" -> candidates.size.toString) ++
+        state.afterRewrite(candidates).summary))
   }
+
+  /** Rows of `files` visible under `state`: exact from the manifest
+    * counts minus the per-file positional debt while only positional
+    * entries pend; under predicate/equality entries the per-file split
+    * of their dead rows is unknown, so one count job over the files'
+    * visible rows keeps the figure honest (only paid while they pend). */
+  private def visibleRows(
+      spark: SparkSession, state: DeleteState, files: Seq[DataFileEntry]): Long =
+    if (state.predicates.isEmpty && state.equality.isEmpty) {
+      val dead = state.positionalDead
+      files.map(f => f.recordCount - dead.getOrElse(f.path, 0L)).sum
+    } else readVisible(spark, state, files).count()
 
   /** Predicate COUNT with metadata acceleration — the other consumer of
     * the [[Pruning.mustMatchAll]] proof: files provably ALL-matching
@@ -2346,8 +2067,7 @@ final class GraftTable private (
     val candidates = prunedFiles(manifest, resolved)
     val proofPred = PartitionField.proofAugment(resolved, partitionFields)
     val augSchema = PartitionField.augmentedSchema(schema, partitionFields)
-    val eqPend = parseEquality(s)
-    val pend = parsePending(s)
+    val state = DeleteState.of(s)
     // positional deletes keep the metadata path EXACT: a proved file
     // contributes its survivors (all of which match), and the scanned
     // remainder reads through the visible-row reader. EQUALITY and
@@ -2355,21 +2075,14 @@ final class GraftTable private (
     // unknowable (their dead rows' split across files isn't recorded) —
     // files any entry may cover DEMOTE to the scan side; files beyond
     // every entry's reach keep the fast path
-    val (proved, toScan) = candidates.partition { f =>
-      val fsn = fileSnapId(f.path).getOrElse(Long.MinValue)
-      Pruning.mustMatchAll(proofPred, f, augSchema) &&
-        !eqPend.exists(e => fsn <= e.covered) &&
-        !pend.exists { case (covered, _) => fsn <= covered }
-    }
-    val posPend = parsePositional(s)
-    val priorDeleted: Map[String, Long] =
-      posPend.flatMap(_.targets).groupMapReduce(_._1)(_._2)(_ + _)
+    val (proved, toScan) = candidates.partition(f =>
+      Pruning.mustMatchAll(proofPred, f, augSchema) && !state.covers(f))
+    val priorDeleted = state.positionalDead
     val metadataCount = proved.map(f =>
       f.recordCount - priorDeleted.getOrElse(f.path, 0L)).sum
     val scanned =
       if (toScan.isEmpty) 0L
-      else readVisible(spark, pend, posPend, toScan, eqPend)
-        .filter(predicate).count()
+      else readVisible(spark, state, toScan).filter(predicate).count()
     metadataCount + scanned
   }
 
@@ -2393,8 +2106,8 @@ final class GraftTable private (
     *    predicate-dead row is never resurrected — the rewrite
     *    materializes the filter for its files), covered whole-file
     *    drops demote to rewrites, and touched entries degrade their
-    *    dead counts to None ([[degradePendingFor]] — degrade, never
-    *    lie);
+    *    dead counts to None ([[DeleteState.afterRewrite]] — degrade,
+    *    never lie);
     *  - [[changes]]/change feeds already document removals as
     *    out-of-scope (additive feeds); [[changesCdc]] emits the exact
     *    per-entry retractions;
@@ -2442,20 +2155,17 @@ final class GraftTable private (
     // count runs over rows visible under EVERY pending form, so a row
     // another form already hides is never counted twice and
     // count(*)/stats stay exact by addition while the forms stack
-    val prior = parsePendingFull(current)
+    val state = DeleteState.of(current)
     val dead: Option[Long] =
       if (!exactCount) None
-      else Some(readVisible(spark, prior.map(e => (e._1, e._2)),
-        parsePositional(current), candidates, parseEquality(current))
-        .filter(predicate).count())
+      else Some(readVisible(spark, state, candidates).filter(predicate).count())
     if (dead.contains(0L)) return None // provably nothing to delete
     val snapId = lg.nextId
-    val pend = prior :+ ((current.snapshotId, sql, dead))
+    val entry = PredicateDelete(current.snapshotId, sql, dead)
     Some(commit(lg, snapId, manifest, Nil,
       operation = "delete", committedAt,
-      extraSummary = Map(
-        "deferred" -> "true",
-        SummaryPendingDeletes -> pendingJsonFull(pend))))
+      extraSummary = Map("deferred" -> "true") ++
+        state.copy(predicates = state.predicates :+ entry).summary))
   }
 
   /** EQUALITY merge-on-read DELETE (Iceberg v2 equality-delete files):
@@ -2521,24 +2231,24 @@ final class GraftTable private (
       GraftTable.deleteRecursively(Paths.get(newStaging)); throw e
     }
     val keySchema = StructType(keyCols.map(c => schema(c)).toArray)
-    val newKeys = spark.read.schema(keySchema).parquet(newStaging)
+    val newKeys = readStaged(spark, newStaging, keySchema)
     val nKeys = newKeys.count()
     if (nKeys == 0L) {
       GraftTable.deleteRecursively(Paths.get(newStaging))
       return None
     }
-    val prior = parseEquality(current)
+    val state = DeleteState.of(current)
     // dead of the NEW keys ONLY (consolidation must not re-count prior
     // entries' victims — their dead counts carry into the merged entry)
     val deadNew =
       try equalityDeadCount(spark, exactCount, manifest, newKeys,
-        keyCols, prior, parsePositional(current), parsePending(current))
+        keyCols, state)
       catch { case e: Throwable =>
         GraftTable.deleteRecursively(Paths.get(newStaging)); throw e
       }
     val (rels, covsAll, samePrior, otherPrior) =
-      try consolidateEqKeys(spark, newStaging, keyCols, keySchema, prior,
-        current.snapshotId, snapId, token)
+      try consolidateEqKeys(spark, newStaging, keyCols, keySchema,
+        state.equality, current.snapshotId, snapId, token)
       finally GraftTable.deleteRecursively(Paths.get(newStaging))
     val dead =
       if (deadNew.isDefined && samePrior.forall(_.dead.isDefined))
@@ -2550,8 +2260,8 @@ final class GraftTable private (
       operation = "delete", committedAt,
       extraSummary = Map(
         "equality" -> "true",
-        "equality-key-rows" -> nKeys.toString,
-        SummaryEqualityDeletes -> equalityJson(entries))))
+        "equality-key-rows" -> nKeys.toString) ++
+        state.copy(equality = entries).summary))
     catch { case e: Throwable =>
       rels.foreach(r => Files.deleteIfExists(Paths.get(dir, r)))
       throw e
@@ -2582,7 +2292,7 @@ final class GraftTable private (
       token: String)
       : (Seq[String], Seq[Long], Seq[EqualityDeletes], Seq[EqualityDeletes]) = {
     val (samePrior, otherPrior) = prior.partition(_.cols == keyCols)
-    val newTagged = spark.read.schema(keySchema).parquet(newStaging)
+    val newTagged = readStaged(spark, newStaging, keySchema)
       .withColumn(GraftTable.EqCovCol, lit(coveredAt))
     val merged = samePrior.map(e => readEqKeysTagged(spark, e))
       .foldLeft(newTagged)(_ unionByName _)
@@ -2605,6 +2315,18 @@ final class GraftTable private (
     GraftTable.deleteRecursively(Paths.get(staging))
     val covs = (samePrior.flatMap(_.covs) :+ coveredAt).distinct.sorted
     (rels, covs, samePrior, otherPrior)
+  }
+
+  /** The parquet files a Spark write left in the dot-named `staging`
+    * dir, read under `schema`. Read by FILE: Spark treats a dot-named
+    * root as hidden and logs a warning for every read of it. */
+  private def readStaged(
+      spark: SparkSession, staging: String, schema: StructType): DataFrame = {
+    val files = scala.util.Using.resource(Files.list(Paths.get(staging))) {
+      s => s.iterator().asScala.map(_.toString)
+        .filter(_.endsWith(".parquet")).toSeq.sorted
+    }
+    spark.read.schema(schema).parquet(files: _*)
   }
 
   /** MERGE-ON-READ UPSERT by key — the O(source) merge: ONE commit pairs
@@ -2635,9 +2357,7 @@ final class GraftTable private (
       manifest: Manifest,
       keySel: DataFrame,
       keyCols: Seq[String],
-      prior: Seq[EqualityDeletes],
-      posPend: Seq[PositionalDeletes],
-      pend: Seq[(Long, String)] = Nil): Option[Long] = {
+      prior: DeleteState): Option[Long] = {
     import org.apache.spark.sql.functions.{max => fmax, min => fmin}
     if (!exact) return None
     val k0 = keyCols.head
@@ -2653,7 +2373,7 @@ final class GraftTable private (
     // an already-dead row is never a new entry's victim, so the
     // per-form dead sets stay disjoint and count(*)/stats remain exact
     // by addition while forms stack
-    Some(readVisible(spark, pend, posPend, candidates, prior)
+    Some(readVisible(spark, prior, candidates)
       .join(keySel, keyCols.toSeq, "left_semi").count())
   }
 
@@ -2714,7 +2434,7 @@ final class GraftTable private (
       GraftTable.deleteRecursively(Paths.get(newStaging)); throw e
     }
     val keySchema = StructType(keyCols.map(c => schema(c)).toArray)
-    val newKeys = spark.read.schema(keySchema).parquet(newStaging)
+    val newKeys = readStaged(spark, newStaging, keySchema)
     // a conditional merge can reduce to no upserts AND no victims —
     // don't commit an entry whose empty tombstone would tax every read
     // (the count is parquet-footer metadata, not a scan)
@@ -2722,20 +2442,20 @@ final class GraftTable private (
       GraftTable.deleteRecursively(Paths.get(newStaging))
       return None
     }
-    val prior = parseEquality(current)
+    val state = DeleteState.of(current)
     // counted over the PRE-merge manifest (the tombstone covers files ≤
     // current.snapshotId, so the freshly-written source files are never
     // its victims), NEW keys only — prior entries' dead counts carry
     val deadNew =
       try equalityDeadCount(spark, exactCount, manifest, newKeys, keyCols,
-        prior, parsePositional(current), parsePending(current))
+        state)
       catch { case e: Throwable =>
         newFiles.foreach(f => Files.deleteIfExists(Paths.get(dir, f.path)))
         GraftTable.deleteRecursively(Paths.get(newStaging)); throw e
       }
     val (rels, covsAll, samePrior, otherPrior) =
-      try consolidateEqKeys(spark, newStaging, keyCols, keySchema, prior,
-        current.snapshotId, snapId, token)
+      try consolidateEqKeys(spark, newStaging, keyCols, keySchema,
+        state.equality, current.snapshotId, snapId, token)
       catch { case e: Throwable =>
         newFiles.foreach(f => Files.deleteIfExists(Paths.get(dir, f.path)))
         throw e
@@ -2754,8 +2474,8 @@ final class GraftTable private (
       operation = "merge", committedAt,
       extraSummary = Map(
         "equality" -> "true",
-        "merge-key" -> keyCols.mkString(","),
-        SummaryEqualityDeletes -> equalityJson(entries)) ++ cursorSummary))
+        "merge-key" -> keyCols.mkString(",")) ++
+        state.copy(equality = entries).summary ++ cursorSummary))
     catch { case e: Throwable =>
       rels.foreach(r => Files.deleteIfExists(Paths.get(dir, r)))
       // commit() deletes newFiles on its detected race paths only; a
@@ -2838,18 +2558,7 @@ final class GraftTable private (
     // demoting them would trade an O(1) manifest edit for an
     // O(file rows) scan+vector, and would wrongly refuse
     // provably-droppable non-parquet files.
-    val eqPend0 = parseEquality(current)
-    val pend0 = parsePending(current)
-    val (dropped, partial) =
-      if (eqPend0.isEmpty && pend0.isEmpty) (dropped0, partial0)
-      else {
-        val (coverable, freeDrop) = dropped0.partition { f =>
-          val fsn = fileSnapId(f.path).getOrElse(Long.MinValue)
-          eqPend0.exists(e => fsn <= e.covered) ||
-            pend0.exists { case (covered, _) => fsn <= covered }
-        }
-        (freeDrop, coverable ++ partial0)
-      }
+    val (dropped, partial) = DeleteState.of(current).demote(dropped0, partial0)
     positionalCore(spark, lg, current, manifest, untouchedM, dropped, partial,
       raw => raw.filter(coalesce(predicate, lit(false))), committedAt)
   }
@@ -2962,17 +2671,16 @@ final class GraftTable private (
       partial: Seq[DataFileEntry],
       selectVictims: DataFrame => DataFrame,
       committedAt: Option[Long]): Option[Snapshot] = {
-    val prior = parsePositional(current)
-    val priorDeleted: Map[String, Long] =
-      prior.flatMap(_.targets).groupMapReduce(_._1)(_._2)(_ + _)
+    val state = DeleteState.of(current)
+    val priorDeleted = state.positionalDead
     val snapId = lg.nextId
-    val droppedPaths = dropped.map(_.path).toSet
     // drop-adjusted prior state FIRST: a dropped target's vector must
-    // not be merged into the consolidated entry
-    val adjusted = stripPositional(prior, droppedPaths)
+    // not be merged into the consolidated entry (dropped files are ones
+    // no predicate/equality entry covers, so nothing else changes)
+    val adjusted = state.afterRewrite(dropped)
     val (entries, newRels, newlyDead) =
       writeDeletionVectors(spark, manifest, partial, selectVictims,
-        adjusted, snapId, parseEquality(current), parsePending(current))
+        adjusted, snapId)
     if (newRels.isEmpty && dropped.isEmpty) return None
     val removed = dropped.map(f =>
       f.recordCount - priorDeleted.getOrElse(f.path, 0L)).sum + newlyDead
@@ -2983,8 +2691,8 @@ final class GraftTable private (
         "positional" -> "true",
         "deleted-records" -> removed.toString,
         "dropped-data-files" -> dropped.size.toString,
-        "position-delete-files" -> newRels.size.toString,
-        SummaryPositionalDeletes -> positionalJson(entries))))
+        "position-delete-files" -> newRels.size.toString) ++
+        adjusted.copy(positional = entries).summary))
     catch { case e: Throwable =>
       newRels.foreach(r => Files.deleteIfExists(Paths.get(dir, r)))
       throw e
@@ -3010,11 +2718,10 @@ final class GraftTable private (
       manifest: Manifest,
       partial: Seq[DataFileEntry],
       selectVictims: DataFrame => DataFrame,
-      prior: Seq[PositionalDeletes],
-      snapId: Long,
-      eqEntries: Seq[EqualityDeletes] = Nil,
-      pend: Seq[(Long, String)] = Nil)
+      state: DeleteState,
+      snapId: Long)
       : (Seq[PositionalDeletes], Seq[String], Long) = {
+    val prior = state.positional
     require(partial.forall(_.path.endsWith(".parquet")),
       s"positional DML cannot target non-parquet data files in $dir " +
         "(no parquet row index) — key-addressed curation works on any " +
@@ -3042,7 +2749,7 @@ final class GraftTable private (
     // covers files written at snapshot ≤ its covered id (every file is
     // attributable here — the deferred forms require it and refuse
     // branch-era files).
-    val raw = pendEqGroups(spark, pend, eqEntries, partial, meta = true)
+    val raw = pendEqGroups(spark, state, partial, meta = true)
       .reduce(_ unionByName _)
     var victims = selectVictims(raw)
       .select(col(MetaFileCol), col(MetaPosCol).cast(LongType).as(MetaPosCol))
@@ -3182,24 +2889,20 @@ final class GraftTable private (
       committedAt: Option[Long] = None): Option[Snapshot] = {
     val lg = log
     val current = lg.current.getOrElse(return None)
-    val pend = parsePending(current)
-    val eqPend = parseEquality(current)
-    if (pend.isEmpty && eqPend.isEmpty) return None
+    val state = DeleteState.of(current)
+    if (state.predicates.isEmpty && state.equality.isEmpty) return None
     val manifest = Manifest.read(s"$dir/${current.manifestList}")
-    val covered = manifest.files.filter(f =>
-      pend.exists { case (c, _) => fileSnapId(f.path).forall(_ <= c) } ||
-        eqPend.exists(e => fileSnapId(f.path).forall(_ <= e.covered)))
+    val covered = manifest.files.filter(state.covers)
     if (covered.isEmpty) {
       // every covered file is gone (earlier DML rewrote them): the
       // entries are dead weight — drain them metadata-only (positional
-      // entries carry forward untouched via the summary defaults)
+      // entries stay as they are)
       return Some(commit(lg, lg.nextId, manifest, Nil,
         operation = "replace", committedAt,
         extraSummary = Map(
           "rewritten-data-files" -> "0",
-          "added-data-files" -> "0",
-          SummaryPendingDeletes -> "[]",
-          SummaryEqualityDeletes -> "[]")))
+          "added-data-files" -> "0") ++
+          DeleteState(Nil, state.positional, Nil).summary))
     }
     // compact's forced set = covered ∪ positional targets ∪ rename
     // eras; onlyPaths narrows it to exactly the covered files, and the
@@ -3295,14 +2998,11 @@ final class GraftTable private (
     val manifest = Manifest.read(s"$dir/${current.manifestList}")
     val candidates = prunedFiles(manifest, resolved)
     if (candidates.isEmpty) return None
-    val prior = parsePositional(current)
-    val eqPend = parseEquality(current)
-    val pend = parsePending(current)
+    val state = DeleteState.of(current)
     val snapId = lg.nextId
     val (entries, newRels, newlyDead) =
       writeDeletionVectors(spark, manifest, candidates,
-        raw => raw.filter(coalesce(predicate, lit(false))), prior, snapId,
-        eqPend, pend)
+        raw => raw.filter(coalesce(predicate, lit(false))), state, snapId)
     if (newRels.isEmpty) return None // no visible row matched: no commit
     // new values for exactly the superseded rows — assignments all read
     // the OLD row (one projection; predicate is TRUE on every victim).
@@ -3313,7 +3013,7 @@ final class GraftTable private (
     // lineage: a positional UPDATE is the same logical row superseded in
     // place — the new copy inherits the victim's _row_id; _gf_seq NULL
     // makes the read side stamp this commit's snapshot
-    val newRows = readVisibleCarry(spark, pend, prior, candidates, eqPend)
+    val newRows = readVisibleCarry(spark, state, candidates)
       .filter(coalesce(predicate, lit(false)))
       .select(schema.fieldNames.map { c =>
         assignments.get(c).map(_.as(c)).getOrElse(col(c))
@@ -3332,8 +3032,8 @@ final class GraftTable private (
         "positional" -> "true",
         "updated-rows" -> newlyDead.toString,
         "position-delete-files" -> newRels.size.toString,
-        "updated-columns" -> assignments.keys.toSeq.sorted.mkString(","),
-        SummaryPositionalDeletes -> positionalJson(entries))))
+        "updated-columns" -> assignments.keys.toSeq.sorted.mkString(",")) ++
+        state.copy(positional = entries).summary))
     catch { case e: Throwable =>
       newRels.foreach(r => Files.deleteIfExists(Paths.get(dir, r)))
       // see mergeEquality: non-race commit failures must not leak the
@@ -3353,8 +3053,7 @@ final class GraftTable private (
       spark: SparkSession,
       s: Snapshot,
       files: Seq[DataFileEntry]): DataFrame =
-    readVisible(spark, parsePending(s), parsePositional(s), files,
-      parseEquality(s))
+    readVisible(spark, DeleteState.of(s), files)
 
   /** The single VISIBLE-ROW reader: `files` minus every merge-on-read
     * delete form. Predicate-deferred and EQUALITY deletes group files by
@@ -3368,10 +3067,8 @@ final class GraftTable private (
     * broadcasts them when small. */
   private def readVisible(
       spark: SparkSession,
-      pend: Seq[(Long, String)],
-      posEntries: Seq[PositionalDeletes],
+      state: DeleteState,
       files: Seq[DataFileEntry],
-      eqEntries: Seq[EqualityDeletes] = Nil,
       lineage: Boolean = false): DataFrame = {
     import org.apache.spark.sql.functions.{coalesce, expr, lit, not}
     val outSchema =
@@ -3381,10 +3078,10 @@ final class GraftTable private (
         StructField(LastUpdatedCol, LongType, nullable = true)))
     if (files.isEmpty)
       return spark.createDataFrame(spark.sparkContext.emptyRDD[Row], outSchema)
-    val targeted: Set[String] = posEntries.flatMap(_.targets.keys).toSet
+    val targeted: Set[String] = state.positionalDead.keySet
     val (withDel, clean) = files.partition(f => targeted.contains(f.path))
     def pendGroups(fs: Seq[DataFileEntry], meta: Boolean): Seq[DataFrame] =
-      pendEqGroups(spark, pend, eqEntries, fs, meta, lineage)
+      pendEqGroups(spark, state, fs, meta, lineage)
     val delBranches =
       if (withDel.isEmpty) Nil
       else {
@@ -3400,7 +3097,7 @@ final class GraftTable private (
         // [[DvContains]]), no join in the plan and no delete relation
         // re-read per query; tasks load only the vectors of the files
         // they scan
-        val idx = DvIndex(posEntries.flatMap(_.dvs).map { case (t, rel) =>
+        val idx = DvIndex(state.positional.flatMap(_.dvs).map { case (t, rel) =>
           baseName(t) -> Paths.get(dir, rel).normalize().toString
         }.toMap)
         val b = org.apache.spark.sql.classic.GraftBridge
@@ -3425,19 +3122,19 @@ final class GraftTable private (
     * stacking depth. */
   private def pendEqGroups(
       spark: SparkSession,
-      pend: Seq[(Long, String)],
-      eqEntries: Seq[EqualityDeletes],
+      state: DeleteState,
       fs: Seq[DataFileEntry],
       meta: Boolean,
       lineage: Boolean = false): Seq[DataFrame] = {
     import org.apache.spark.sql.functions.{coalesce, expr, not}
+    val eqEntries = state.equality
     if (fs.isEmpty) Nil
-    else if (pend.isEmpty && eqEntries.isEmpty)
+    else if (state.predicates.isEmpty && eqEntries.isEmpty)
       Seq(readFiles(spark, fs, meta, lineage))
     else {
       val groups = fs.groupBy { f =>
         val fsn = fileSnapId(f.path).getOrElse(Long.MinValue) // unattributable: assume oldest (over-filtering is impossible — the deferred forms refuse such tables; this path exists for robustness only)
-        (pend.filter { case (covered, _) => fsn <= covered }.map(_._2),
+        (state.predicates.filter(fsn <= _.covered).map(_.sql),
           eqEntries.map(e => e.covs.filter(_ >= fsn)))
       }
       groups.toSeq.sortBy(_._2.head.path).map { case ((preds, covSets), gfs) =>
@@ -3512,16 +3209,12 @@ final class GraftTable private (
     if (candidates.isEmpty) return None
 
     val snapId = lg.nextId
-    // pending POSITIONAL, EQUALITY and PREDICATE-deferred deletes
-    // compose exactly as in delete(): the rewrite reads visible rows
-    // only (a row another form hides is never resurrected — its
-    // tombstone/filter materializes with the rewrite), and rewritten
-    // files leave the positional entries
-    val posPend = parsePositional(current)
-    val eqPend = parseEquality(current)
-    val pendFull = parsePendingFull(current)
-    val pend = pendFull.map(e => (e._1, e._2))
-    val src = readVisibleCarry(spark, pend, posPend, candidates, eqPend)
+    // pending merge-on-read state composes exactly as in delete(): the
+    // rewrite reads visible rows only (a row another form hides is never
+    // resurrected — its vector/tombstone/filter materializes with the
+    // rewrite)
+    val state = DeleteState.of(current)
+    val src = readVisibleCarry(spark, state, candidates)
     // ONE projection computing every assignment from the OLD row (SQL
     // UPDATE semantics): chained withColumn would let later assignments
     // observe earlier ones' new values — wrong, and Map-order-dependent.
@@ -3539,21 +3232,15 @@ final class GraftTable private (
         case None => col(c)
       }
     } ++ carryCols: _*)
-    val newFiles = writeDataFiles(rewritten, snapId)
-    val stillPositional =
-      stripPositional(posPend, candidates.map(_.path).toSet)
+    val newFiles = writeNonEmptyFiles(rewritten, snapId)
     Some(commit(lg, snapId,
       untouchedM.append(newFiles),
       newFiles,
       operation = "update", committedAt,
       extraSummary = Map(
         "rewritten-data-files" -> candidates.size.toString,
-        "updated-columns" -> assignments.keys.toSeq.sorted.mkString(","),
-        SummaryPendingDeletes ->
-          pendingJsonFull(degradePendingFor(pendFull, candidates)),
-        SummaryPositionalDeletes -> positionalJson(stillPositional),
-        SummaryEqualityDeletes ->
-          equalityJson(degradeEqualityFor(eqPend, candidates)))))
+        "updated-columns" -> assignments.keys.toSeq.sorted.mkString(",")) ++
+        state.afterRewrite(candidates).summary))
   }
 
   /** MERGE (upsert) by key, one atomic commit: rows of `source` replace
@@ -3620,16 +3307,12 @@ final class GraftTable private (
 
     // no forced broadcast: delta batches are usually tiny (AQE broadcasts
     // them), but a huge backfill source must be allowed to shuffle-join.
-    // Pending POSITIONAL, EQUALITY and PREDICATE-deferred deletes
-    // compose as in delete()/update().
-    val posPend = lg.current.map(parsePositional).getOrElse(Nil)
-    val eqPend = lg.current.map(parseEquality).getOrElse(Nil)
-    val pendFull = lg.current.map(parsePendingFull).getOrElse(Nil)
-    val pend = pendFull.map(e => (e._1, e._2))
+    // Pending merge-on-read state composes as in delete()/update().
+    val state = DeleteState.of(lg.current)
     val survivors =
       if (candidates.isEmpty) source
       else {
-        val carried = readVisibleCarry(spark, pend, posPend, candidates, eqPend)
+        val carried = readVisibleCarry(spark, state, candidates)
         val kept = carried
           .join(source.select(col(keyCol).as("__mk")).distinct(),
             col(keyCol) === col("__mk"), "left_anti")
@@ -3654,20 +3337,14 @@ final class GraftTable private (
         }
       }
     val newFiles = writeNonEmptyFiles(survivors, snapId)
-    val stillPositional =
-      stripPositional(posPend, candidates.map(_.path).toSet)
     commit(lg, snapId,
       untouchedM.append(newFiles),
       newFiles,
       operation = "merge", committedAt,
       extraSummary = Map(
         "rewritten-data-files" -> candidates.size.toString,
-        "merge-key" -> keyCol,
-        SummaryPendingDeletes ->
-          pendingJsonFull(degradePendingFor(pendFull, candidates)),
-        SummaryPositionalDeletes -> positionalJson(stillPositional),
-        SummaryEqualityDeletes ->
-          equalityJson(degradeEqualityFor(eqPend, candidates))))
+        "merge-key" -> keyCol) ++
+        state.afterRewrite(candidates).summary)
   }
 
   /** General conditional MERGE, copy-on-write: the full
@@ -3763,10 +3440,7 @@ final class GraftTable private (
         partitionPruned(manifest, resolved)
       }
 
-    val posPend = lg.current.map(parsePositional).getOrElse(Nil)
-    val eqPendMerge = lg.current.map(parseEquality).getOrElse(Nil)
-    val pendFullMerge = lg.current.map(parsePendingFull).getOrElse(Nil)
-    val pendMerge = pendFullMerge.map(e => (e._1, e._2))
+    val state = DeleteState.of(lg.current)
     val srcP = source.select(source.columns.map(c => col(c).as(P + c)) :+
       lit(true).as(P + "__matched"): _*)
 
@@ -3789,8 +3463,7 @@ final class GraftTable private (
     val rewrittenOpt: Option[DataFrame] =
       if (candidates.isEmpty || !rowModifying) None
       else {
-        val tgt = readVisibleCarry(spark, pendMerge, posPend, candidates,
-          eqPendMerge)
+        val tgt = readVisibleCarry(spark, state, candidates)
         val joinCond = keyPairs.map { case (tk, sk) =>
           tgt(tk) === srcP(P + sk) }.reduce(_ && _)
         val joined = tgt.join(srcP, joinCond, "left_outer")
@@ -3832,8 +3505,7 @@ final class GraftTable private (
             // every possibly-matching target key lives in a candidate
             // file (pruning is conservative over the source key range),
             // so the anti-join against candidate keys is exact
-            val tgtKeys = readVisible(spark, pendMerge, posPend, candidates,
-                eqPendMerge)
+            val tgtKeys = readVisible(spark, state, candidates)
               .select(keyPairs.map { case (tk, _) =>
                 col(tk).as(P + "__t_" + tk) }: _*)
               .distinct()
@@ -3869,31 +3541,24 @@ final class GraftTable private (
       .getOrElse(Nil)
     if (!rowModifying) {
       // insert-only: every existing file (candidates included) stays in
-      // place with its positional entries intact; only the inserted
+      // place and the delete state carries unchanged; only the inserted
       // files append
       if (newFiles.isEmpty) return None // no row inserted: no commit
       return Some(commit(lg, snapId, manifest.append(newFiles), newFiles,
         operation = "merge", committedAt,
         extraSummary = Map(
           "rewritten-data-files" -> "0",
-          "merge-key" -> keyPairs.map(_._1).mkString(","),
-          SummaryPositionalDeletes -> positionalJson(posPend))))
+          "merge-key" -> keyPairs.map(_._1).mkString(","))))
     }
     if (candidates.isEmpty && newFiles.isEmpty) return None // provable no-op
-    val stillPositional =
-      stripPositional(posPend, candidates.map(_.path).toSet)
     Some(commit(lg, snapId,
       untouchedM.append(newFiles),
       newFiles,
       operation = "merge", committedAt,
       extraSummary = Map(
         "rewritten-data-files" -> candidates.size.toString,
-        "merge-key" -> keyPairs.map(_._1).mkString(","),
-        SummaryPendingDeletes ->
-          pendingJsonFull(degradePendingFor(pendFullMerge, candidates)),
-        SummaryPositionalDeletes -> positionalJson(stillPositional),
-        SummaryEqualityDeletes ->
-          equalityJson(degradeEqualityFor(eqPendMerge, candidates)))))
+        "merge-key" -> keyPairs.map(_._1).mkString(",")) ++
+        state.afterRewrite(candidates).summary))
   }
 
   /** Conditional MERGE, merge-on-read: the CDC-apply action surface
@@ -3958,9 +3623,7 @@ final class GraftTable private (
     val flagged =
       if (candidates.isEmpty) source.withColumn(M, lit(false))
       else {
-        val eq = parseEquality(current)
-        val tgtKeys = readVisible(spark, parsePending(current),
-            parsePositional(current), candidates, eq)
+        val tgtKeys = readVisible(spark, DeleteState.of(current), candidates)
           .select(keyPairs.map { case (tk, _) =>
             col(tk).as(GraftTable.MergeSrcPrefix + tk) }: _*)
           .distinct()
@@ -4050,8 +3713,7 @@ final class GraftTable private (
     require(target.operation == "append",
       s"cherrypick supports append snapshots only; $snapshotId is " +
         s"'${target.operation}' — re-run the original statement instead")
-    require(parsePendingFull(current).isEmpty &&
-      parsePositional(current).isEmpty && parseEquality(current).isEmpty,
+    require(DeleteState.of(current).isEmpty,
       s"cherrypick refused while merge-on-read deletes pend on $dir — " +
         "compact() to materialize them first")
     val parentPaths: Set[String] = target.parentId match {
@@ -4225,8 +3887,7 @@ final class GraftTable private (
       .flatMap(seg => seg.ref.map(_ -> seg)).toMap
     Reachable(
       dataFiles = segs.values.flatMap(_.files.map(_.path)).toSet,
-      deleteFiles = snaps.flatMap(s => parsePositional(s).flatMap(_.files) ++
-        parseEquality(s).flatMap(_.files)).toSet,
+      deleteFiles = snaps.flatMap(s => DeleteState.of(s).files).toSet,
       segments = segs.keySet,
       lists = lists.toSet)
   }
@@ -4829,8 +4490,7 @@ final class GraftTable private (
           StructField(RowIdCol, LongType, nullable = true),
           StructField(LastUpdatedCol, LongType, nullable = true)))))
     val manifest = Manifest.read(s"$dir/${s.manifestList}")
-    readVisible(spark, parsePending(s), parsePositional(s), manifest.files,
-      parseEquality(s), lineage = true)
+    readVisible(spark, DeleteState.of(s), manifest.files, lineage = true)
   }
 
   /** Whether rewrites carry row lineage ([[GraftTable.PropRowLineage]]). */
@@ -4845,13 +4505,10 @@ final class GraftTable private (
     * `_gf_seq` for the changed ones. */
   private def readVisibleCarry(
       spark: SparkSession,
-      pend: Seq[(Long, String)],
-      posEntries: Seq[PositionalDeletes],
-      files: Seq[DataFileEntry],
-      eqEntries: Seq[EqualityDeletes]): DataFrame = {
-    if (!lineageOn) readVisible(spark, pend, posEntries, files, eqEntries)
-    else readVisible(spark, pend, posEntries, files, eqEntries,
-        lineage = true)
+      state: DeleteState,
+      files: Seq[DataFileEntry]): DataFrame = {
+    if (!lineageOn) readVisible(spark, state, files)
+    else readVisible(spark, state, files, lineage = true)
       .withColumnRenamed(RowIdCol, LineageRidCol)
       .withColumnRenamed(LastUpdatedCol, LineageSeqCol)
   }
@@ -5036,8 +4693,7 @@ final class GraftTable private (
         val removed = pf.filterNot(f => curPaths.contains(f.path))
         val removedVisible =
           if (removed.isEmpty) empty
-          else readVisible(spark, parsePending(p), parsePositional(p), removed,
-            parseEquality(p))
+          else readVisible(spark, DeleteState.of(p), removed)
         readOrEmpty(added).exceptAll(removedVisible)
       }
     val base = (readOrEmpty(appended) +: rewriteDiffs).reduce(_ union _)
@@ -5151,12 +4807,8 @@ final class GraftTable private (
     def readOrEmpty(fs: Seq[DataFileEntry]): DataFrame =
       if (fs.isEmpty) empty
       else readFiles(spark, fs, withMeta = false, withLineage = lineage)
-    def readVisibleL(
-        pend: Seq[(Long, String)],
-        posEntries: Seq[PositionalDeletes],
-        fs: Seq[DataFileEntry],
-        eqEntries: Seq[EqualityDeletes]): DataFrame =
-      readVisible(spark, pend, posEntries, fs, eqEntries, lineage = lineage)
+    def readVisibleL(state: DeleteState, fs: Seq[DataFileEntry]): DataFrame =
+      readVisible(spark, state, fs, lineage = lineage)
     def tag(df: DataFrame, tpe: String, s: Snapshot): DataFrame =
       df.withColumn("_change_type", lit(tpe))
         .withColumn(virtualColumn, lit(s.snapshotId))
@@ -5176,21 +4828,20 @@ final class GraftTable private (
           Seq(tag(readOrEmpty(added), "insert", s))
         case "replace" => Nil
         case "delete" if deferred =>
-          val p = parent(s)
-          val parentPend = parsePending(p)
-          val entries = parsePending(s).drop(parentPend.size)
-          entries.map { case (covered, predSql) =>
+          val parentState = DeleteState.of(parent(s))
+          val entries = DeleteState.of(s).predicates
+            .drop(parentState.predicates.size)
+          entries.map { e =>
             val coveredFiles = files(s).filter(f =>
-              fileSnapId(f.path).forall(_ <= covered))
+              fileSnapId(f.path).forall(_ <= e.covered))
             // survivors under the parent's WHOLE pending state (all
             // three forms): a row a positional vector or equality
             // tombstone already hides was retracted by ITS commit —
             // emitting it again here would double-retract
-            val survivors = readVisibleL(parentPend,
-              parsePositional(p), coveredFiles, parseEquality(p))
+            val survivors = readVisibleL(parentState, coveredFiles)
             // rows DELETED are those where the predicate is TRUE (NULL
             // keeps the row — same semantics as the read path)
-            tag(survivors.filter(expr(predSql) <=> true), "delete", s)
+            tag(survivors.filter(expr(e.sql) <=> true), "delete", s)
           }
         // EQUALITY delete / merge-on-read upsert: deletes = each new key
         // entry's matches among its covered files' visible-at-parent
@@ -5201,7 +4852,7 @@ final class GraftTable private (
         case "delete" | "merge"
             if s.summary.get("equality").contains("true") =>
           val p = parent(s)
-          val parentEq = parseEquality(p)
+          val parentState = DeleteState.of(p)
           val parentPaths = files(p).map(_.path).toSet
           val addedFs = files(s).filterNot(f => parentPaths.contains(f.path))
           val inserts =
@@ -5212,8 +4863,8 @@ final class GraftTable private (
           // set is not carried verbatim from the parent; its fresh keys
           // are the rows tagged with the parent snapshot (this commit's
           // covered scope)
-          val parentEqFiles = parentEq.flatMap(_.files).toSet
-          val newEntries = parseEquality(s)
+          val parentEqFiles = parentState.equality.flatMap(_.files).toSet
+          val newEntries = DeleteState.of(s).equality
             .filterNot(e => e.files.forall(parentEqFiles.contains))
           newEntries.map { e =>
             val newKeys = readEqKeysTagged(spark, e)
@@ -5221,8 +4872,7 @@ final class GraftTable private (
               .select(e.cols.map(col): _*)
             val covered = files(s).filter(f =>
               fileSnapId(f.path).forall(_ <= p.snapshotId))
-            val survivors = readVisibleL(parsePending(p),
-              parsePositional(p), covered, parentEq)
+            val survivors = readVisibleL(parentState, covered)
             tag(survivors.join(newKeys, e.cols, "left_semi"),
               "delete", s)
           } ++ inserts
@@ -5236,7 +4886,8 @@ final class GraftTable private (
         case "delete" | "update"
             if s.summary.get("positional").contains("true") =>
           val p = parent(s)
-          val pPos = parsePositional(p)
+          val parentState = DeleteState.of(p)
+          val pPos = parentState.positional
           val pf = files(p)
           val parentPaths = pf.map(_.path).toSet
           val curPaths = files(s).map(_.path).toSet
@@ -5247,13 +4898,12 @@ final class GraftTable private (
           // parent's full state is still applied for robustness
           val droppedDel =
             if (droppedFs.isEmpty) Nil
-            else Seq(tag(readVisibleL(parsePending(p), pPos,
-              droppedFs, parseEquality(p)), "delete", s))
+            else Seq(tag(readVisibleL(parentState, droppedFs), "delete", s))
           val inserts =
             if (addedFs.isEmpty) Nil
             else Seq(tag(readOrEmpty(addedFs), "insert", s))
           val parentEntryFiles = pPos.flatMap(_.files).toSet
-          val newEntries = parsePositional(s)
+          val newEntries = DeleteState.of(s).positional
             .filterNot(e => e.files.forall(parentEntryFiles.contains))
           val posDel = newEntries.map { e =>
             // the consolidated entry's delta is (this snapshot's vectors)
@@ -5294,8 +4944,7 @@ final class GraftTable private (
           val removed = pf.filterNot(f => curPaths.contains(f.path))
           val removedVisible =
             if (removed.isEmpty) empty
-            else readVisibleL(parsePending(p), parsePositional(p),
-              removed, parseEquality(p))
+            else readVisibleL(DeleteState.of(p), removed)
           Seq(
             tag(readOrEmpty(added).exceptAll(removedVisible), "insert", s),
             tag(removedVisible.exceptAll(readOrEmpty(added)), "delete", s))
@@ -5338,8 +4987,7 @@ final class GraftTable private (
       identityViaPathRecovery: Boolean = false): Option[Seq[DataFileEntry]] = {
     val s = log.byId(snapshotId).getOrElse(throw new IllegalStateException(
       s"no snapshot $snapshotId in $dir (expired?) — re-seed the consumer"))
-    if (parsePending(s).nonEmpty || parsePositional(s).nonEmpty ||
-        parseEquality(s).nonEmpty) return None
+    if (!DeleteState.of(s).isEmpty) return None
     rawFilesCore(s, identityViaPathRecovery)
   }
 
@@ -5392,9 +5040,10 @@ final class GraftTable private (
       : Option[(Seq[DataFileEntry], Map[String, String])] = {
     val s = log.byId(snapshotId).getOrElse(throw new IllegalStateException(
       s"no snapshot $snapshotId in $dir (expired?) — re-seed the consumer"))
-    if (parsePending(s).nonEmpty || parseEquality(s).nonEmpty) return None
+    val state = DeleteState.of(s)
+    if (state.predicates.nonEmpty || state.equality.nonEmpty) return None
     rawFilesCore(s, identityViaPathRecovery).map { fs =>
-      val dvByBn = parsePositional(s).flatMap(_.dvs).map { case (t, rel) =>
+      val dvByBn = state.positional.flatMap(_.dvs).map { case (t, rel) =>
         baseName(t) -> Paths.get(dir, rel).normalize().toString
       }.toMap
       (fs, dvByBn)
@@ -5560,8 +5209,8 @@ final class GraftTable private (
         current = entries.map(e => Paths.get(dir, e.path))
         // mirror commit()'s pending-positional basename guard (it only
         // runs there when newFiles is non-empty)
-        val pendingBns = lg.current.toSeq.flatMap(parsePositional)
-          .flatMap(_.targets.keys).map(baseName).toSet
+        val pendingBns = DeleteState.of(lg.current).positionalDead.keySet
+          .map(baseName)
         val clash = entries.map(e => baseName(e.path)).filter(pendingBns)
         require(clash.isEmpty,
           s"new data-file basename(s) ${clash.mkString(", ")} collide " +
@@ -5735,8 +5384,8 @@ final class GraftTable private (
         // runs there when newFiles is non-empty; these files hold the
         // only staged copy, so commit is handed Nil and cleanup stays
         // with this method's catch)
-        val pendingBns = lg.current.toSeq.flatMap(parsePositional)
-          .flatMap(_.targets.keys).map(baseName).toSet
+        val pendingBns = DeleteState.of(lg.current).positionalDead.keySet
+          .map(baseName)
         val clash = entries.map(e => baseName(e.path)).filter(pendingBns)
         require(clash.isEmpty,
           s"imported basename(s) ${clash.mkString(", ")} collide with " +
@@ -6009,14 +5658,15 @@ final class GraftTable private (
     *  - equality entries: `detail` = the key columns. */
   def deletesTable(spark: SparkSession, snapshotId: Option[Long] = None): DataFrame = {
     val rows = resolveSnapshot(snapshotId).toSeq.flatMap { s =>
-      parsePending(s).map { case (covered, predSql) =>
-        Row("predicate", predSql, Long.box(covered), 0L, null)
+      val state = DeleteState.of(s)
+      state.predicates.map { p =>
+        Row("predicate", p.sql, Long.box(p.covered), 0L, null)
       } ++
-      parsePositional(s).map { e =>
+      state.positional.map { e =>
         Row("positional", s"targets=${e.targets.size}", null,
           e.files.size.toLong, Long.box(e.deletedRows))
       } ++
-      parseEquality(s).map { e =>
+      state.equality.map { e =>
         Row("equality", e.cols.mkString(","), Long.box(e.covered),
           e.files.size.toLong, null)
       }
@@ -6216,6 +5866,26 @@ object GraftTable {
   val PropStatsNdvPrefix = "graft.stats.ndv."
   val PropStatsSketchPrefix = "graft.stats.sketch."
   val PropStatsSnapPrefix = "graft.stats.snapshot."
+
+  /** The snapshot that wrote a data file, parsed from its
+    * `part-<snap>-<token>-<seq>` name — the scope key for deferred
+    * deletes. Files OUTSIDE this table's own data dir — a branch's
+    * fork-inherited `../../data/…` entries, or a parent's published
+    * `branches/<name>/data/…` entries — carry snapshot ids from a
+    * DIFFERENT table's sequence, so their names mean nothing here:
+    * they resolve to None, which every consumer treats conservatively
+    * (always covered by a deferred delete, force-included in the
+    * compaction that materializes one). Correct in both directions:
+    * foreign-era files always predate any delete committed in THIS
+    * table's log. */
+  private[table] def fileSnapId(path: String): Option[Long] = {
+    if (path.startsWith("../") || path.startsWith("branches/") ||
+        path.contains("/branches/")) return None
+    val base = path.substring(path.lastIndexOf('/') + 1)
+    if (!base.startsWith("part-")) return None
+    val seg = base.drop(5).takeWhile(_ != '-')
+    if (seg.nonEmpty && seg.forall(_.isDigit)) Some(seg.toLong) else None
+  }
 
   val SummaryPendingDeletes = "pending-deletes"
   val SummaryPositionalDeletes = "positional-deletes"

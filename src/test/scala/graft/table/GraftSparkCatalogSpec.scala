@@ -326,6 +326,27 @@ class GraftSparkCatalogSpec extends SparkSpecBase {
     intercept[Exception] { spark.sql("INSERT INTO g2.db.ins VALUES (9, 'z')") }
   }
 
+  test("EXPLAIN of SQL DML names the routed operation and commits nothing") {
+    val t = GraftTable.create(s"$wh/db/expl", schema,
+      properties = Map("write.update.mode" -> "merge-on-read"))
+    t.append(mkDf(1L -> "a", 2L -> "b"), Some(1000L))
+    def explain(sql: String): String =
+      sqlS.sql(s"EXPLAIN $sql").collect().map(_.getString(0)).mkString("\n")
+    val plans = Seq(
+      "INSERT INTO g2.db.expl VALUES (3, 'c')" -> "INSERT INTO",
+      "UPDATE g2.db.expl SET data = 'z' WHERE id = 1" -> "UPDATE positional",
+      "UPDATE g2.db.expl SET data = data" -> "identity assignments only",
+      "MERGE INTO g2.db.expl t USING (SELECT 2L AS id, 'B' AS data) s " +
+        "ON t.id = s.id WHEN MATCHED THEN UPDATE SET *" ->
+        "MERGE copy-on-write actions")
+    plans.foreach { case (sql, what) =>
+      val p = explain(sql)
+      assert(p.contains("GraftDml") && p.contains(what), s"$sql:\n$p")
+    }
+    assert(GraftTable.load(t.dir).log.snapshots.size == 1,
+      "EXPLAIN ran a statement")
+  }
+
   test("CREATE TABLE AS SELECT creates and loads in one statement") {
     val t0 = GraftTable.create(s"$wh/db/ctassrc", schema)
     t0.append(mkDf(1L -> "a", 2L -> "b", 3L -> "c"), Some(1000L))
@@ -536,7 +557,7 @@ class GraftSparkCatalogSpec extends SparkSpecBase {
     assert(e2.getMessage.toLowerCase.contains("keyed upserts"), e2.getMessage)
 
     // deferred (predicate) MoR delete pending → the extensions session
-    // routes SQL DELETE through GraftDeleteCommand (the full matrix:
+    // routes SQL DELETE to the copy-on-write delete (the full matrix:
     // CoW composes with pending predicate entries)
     t.deleteDeferred(spark, org.apache.spark.sql.functions.col("id") === 1L,
       Some(2000L))

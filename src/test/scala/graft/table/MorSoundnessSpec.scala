@@ -16,8 +16,10 @@ import graft.SparkSpecBase
   * bucket(4) and truncate(2) hidden transforms (derived keys, footer
   * source columns). A separate equality-delete sequence runs per layout,
   * and a COMPOSED sequence interleaves positional, equality, upsert,
-  * predicate-deferred and copy-on-write commits on one table (the full
-  * MoR matrix — every form stacks).
+  * predicate-deferred and every copy-on-write commit path (delete,
+  * delete by keys, update, merge, conditional merge, predicate and
+  * dynamic-partition overwrite) on one table (the full MoR matrix —
+  * every form stacks, and every rewrite settles it).
   */
 class MorSoundnessSpec extends SparkSpecBase {
 
@@ -154,8 +156,15 @@ class MorSoundnessSpec extends SparkSpecBase {
       }
       val b0 = batch(40); t.append(df(b0)); model ++= b0
 
-      (1 to 16).foreach { step =>
-        rng.nextInt(10) match {
+      // every op kind runs at least once (shuffled), then random extras;
+      // dynamic-partition overwrite replaces identity partitions only
+      val kinds = (0 to 14).filter(k => k != 14 || name == "identity")
+      val schedule = rng.shuffle(kinds) ++ Seq.fill(8)(kinds(rng.nextInt(kinds.size)))
+      val ran = scala.collection.mutable.Set.empty[Int]
+      val P = GraftTable.MergeSrcPrefix
+      for ((kind, step) <- schedule.zipWithIndex) {
+        ran += kind
+        kind match {
           case 0 => // append
             val b = batch(5 + rng.nextInt(10))
             t.append(df(b)); model ++= b
@@ -209,10 +218,50 @@ class MorSoundnessSpec extends SparkSpecBase {
             val bound = rng.nextInt(40) + 5
             t.deleteDeferred(spark, col("score") >= bound)
             model = model.filterNot(_.score >= bound)
+          case 10 => // copy-on-write delete by keys
+            val victims = rng.shuffle(model).take(4).map(_.id).toSet
+            t.deleteByKeys(spark,
+              df(model.filter(m => victims(m.id))).select("id"), Seq("id"))
+            model = model.filterNot(m => victims(m.id))
+          case 11 => // copy-on-write upsert
+            val b = rng.shuffle(model).take(3).map(m =>
+              m.copy(score = m.score + 2000L)) ++ batch(2)
+            t.merge(spark, df(b), "id")
+            val keys = b.map(_.id).toSet
+            model = model.filterNot(m => keys(m.id)) ++ b
+          case 12 => // conditional copy-on-write merge with a DELETE action
+            val hits = rng.shuffle(model).take(4).zipWithIndex.map {
+              case (m, i) => m.copy(cat = if (i % 2 == 0) "del" else "upd",
+                score = m.score + 3000L)
+            }
+            val fresh = batch(2)
+            t.mergeActions(spark, df(hits ++ fresh), Seq("id" -> "id"),
+              matched = Seq(
+                MergeDelete(Some(col(P + "cat") === "del")),
+                MergeUpdate(None, Map("score" -> col(P + "score")))),
+              notMatched = Seq(MergeInsert(None,
+                Seq("id", "cat", "score").map(c => c -> col(P + c)).toMap)))
+            val byId = hits.map(h => h.id -> h).toMap
+            model = model.flatMap(m => byId.get(m.id) match {
+              case Some(h) if h.cat == "del" => None
+              case Some(h) => Some(m.copy(score = h.score))
+              case None => Some(m)
+            }) ++ fresh
+          case 13 => // predicate overwrite (whole-partition drops demote)
+            val c = cats(rng.nextInt(4))
+            val b = batch(3)
+            t.overwriteWhere(spark, col("cat") === c, df(b))
+            model = model.filterNot(_.cat == c) ++ b
+          case 14 => // dynamic-partition overwrite (identity layout)
+            val b = batch(3)
+            t.overwritePartitionsDynamic(spark, df(b))
+            val touched = b.map(_.cat).toSet
+            model = model.filterNot(m => touched(m.cat)) ++ b
         }
         assert(readSet(t) == modelSet(model),
-          s"[$name] composed diverged after step $step")
+          s"[$name] composed diverged after step $step (op $kind)")
       }
+      assert(ran == kinds.toSet, s"[$name] op kinds never run: ${kinds.toSet -- ran}")
       t.compact(spark, smallerThanBytes = Long.MaxValue)
       assert(t.positionalDeletes.isEmpty && t.equalityDeletes.isEmpty &&
         t.pendingDeletes.isEmpty)

@@ -44,9 +44,10 @@ class ReachabilityPropertySpec extends SparkSpecBase {
   private def named(t: GraftTable): Set[String] =
     t.log.snapshots.flatMap { s =>
       val m = Manifest.read(s"${t.dir}/${s.manifestList}")
+      val deletes = DeleteState.of(s)
       Seq(s.manifestList) ++ m.segmentRefs ++ m.files.map(_.path) ++
-        t.parsePositional(s).flatMap(_.files) ++
-        t.parseEquality(s).flatMap(_.files)
+        deletes.positional.flatMap(_.files) ++
+        deletes.equality.flatMap(_.files)
     }.filterNot(_.startsWith("../")).toSet
 
   private def stored(t: GraftTable): Set[String] =
