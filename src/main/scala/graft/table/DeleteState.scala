@@ -1,5 +1,7 @@
 package graft.table
 
+import scala.collection.immutable.TreeMap
+
 import GraftTable.{EqualityDeletes, PositionalDeletes, SummaryEqualityDeletes, SummaryPendingDeletes, SummaryPositionalDeletes}
 
 /** One PREDICATE-deferred delete entry: `sql` hides rows of data files
@@ -108,9 +110,10 @@ final case class DeleteState(
         p.dead.fold(base)(d => base + ("dead" -> d))
       }),
       SummaryPositionalDeletes -> write(positional.map { e =>
+        // maps written sorted by key: the same state is the same bytes
         Map[String, Any]("files" -> e.files,
-          "targets" -> e.targets.map { case (k, v) => k -> (v: Any) },
-          "dvs" -> e.dvs)
+          "targets" -> TreeMap.from(e.targets),
+          "dvs" -> TreeMap.from(e.dvs))
       }),
       SummaryEqualityDeletes -> write(equality.map { e =>
         val base = Map[String, Any]("files" -> e.files, "cols" -> e.cols,

@@ -6,8 +6,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * `TableResolverUtil.resolveTableFromConfiguration`
   * (TableResolverUtil.java:59-91), which supports path-addressed tables
   * (HadoopTables, :66-68) and warehouse-addressed `db.table` identifiers
-  * (HadoopCatalog, :69-85), plus `<name>__snapshots` metadata-table naming
-  * (:72-85,93-100).
+  * (HadoopCatalog, :69-85), plus the reference's suffixed metadata-table
+  * naming (:72-85,93-100), extended to the [[MetadataTables]] family.
   */
 final class GraftCatalog(warehouse: String) {
 
@@ -52,64 +52,28 @@ final class GraftCatalog(warehouse: String) {
   /** Explicit begin/commit form of [[transact]]. */
   def beginTransaction(): GraftTransaction = GraftTransaction.begin(warehouse)
 
-  /** Resolve `db.table` or `db.table__snapshots`. Returns either the data
-    * table or its snapshots system table as a DataFrame.
+  /** Resolve `db.table`, or a metadata-table name `db.table<suffix>`
+    * ([[MetadataTables]]), to the data table or that metadata table of
+    * the base table, as a DataFrame.
     *
-    * A data table whose real name ends in `__snapshots` wins over the
-    * system table when it exists on disk with `graft.snapshots.table=false`
-    * (reference edge case: TestReadSnapshotTable.java:114-136).
+    * A data table of the full suffixed name wins when it exists — for
+    * `__snapshots` only when it has also opted out with
+    * `graft.snapshots.table=false` (reference edge case:
+    * TestReadSnapshotTable.java:114-136).
     */
   def loadDataFrame(spark: SparkSession, identifier: String): DataFrame = {
-    if (identifier.endsWith(GraftTable.SnapshotsSuffix)) {
-      // a real table by that exact name takes precedence if it opted out
-      if (GraftTable.exists(tableDir(identifier))) {
-        val t = GraftTable.load(tableDir(identifier))
-        if (!t.snapshotsTableEnabled) return t.read(spark)
-      }
-      val base = identifier.dropRight(GraftTable.SnapshotsSuffix.length)
-      val t = GraftTable.load(tableDir(base))
-      require(t.snapshotsTableEnabled,
-        s"snapshots table disabled for $base (${GraftTable.PropSnapshotsTable}=false)")
-      t.snapshots(spark)
-    } else if (identifier.endsWith(GraftTable.FilesSuffix)) {
-      // same naming convention as __snapshots; a real table by that exact
-      // name takes precedence
-      if (GraftTable.exists(tableDir(identifier)))
-        return GraftTable.load(tableDir(identifier)).read(spark)
-      val base = identifier.dropRight(GraftTable.FilesSuffix.length)
-      GraftTable.load(tableDir(base)).filesTable(spark)
-    } else if (identifier.endsWith(GraftTable.PartitionsSuffix)) {
-      if (GraftTable.exists(tableDir(identifier)))
-        return GraftTable.load(tableDir(identifier)).read(spark)
-      val base = identifier.dropRight(GraftTable.PartitionsSuffix.length)
-      GraftTable.load(tableDir(base)).partitionsTable(spark)
-    } else if (identifier.endsWith(GraftTable.RefsSuffix)) {
-      if (GraftTable.exists(tableDir(identifier)))
-        return GraftTable.load(tableDir(identifier)).read(spark)
-      val base = identifier.dropRight(GraftTable.RefsSuffix.length)
-      GraftTable.load(tableDir(base)).refsTable(spark)
-    } else if (identifier.endsWith(GraftTable.HistorySuffix)) {
-      if (GraftTable.exists(tableDir(identifier)))
-        return GraftTable.load(tableDir(identifier)).read(spark)
-      val base = identifier.dropRight(GraftTable.HistorySuffix.length)
-      GraftTable.load(tableDir(base)).historyTable(spark)
-    } else if (identifier.endsWith(GraftTable.AllFilesSuffix)) {
-      if (GraftTable.exists(tableDir(identifier)))
-        return GraftTable.load(tableDir(identifier)).read(spark)
-      val base = identifier.dropRight(GraftTable.AllFilesSuffix.length)
-      GraftTable.load(tableDir(base)).allFilesTable(spark)
-    } else if (identifier.endsWith(GraftTable.DeletesSuffix)) {
-      if (GraftTable.exists(tableDir(identifier)))
-        return GraftTable.load(tableDir(identifier)).read(spark)
-      val base = identifier.dropRight(GraftTable.DeletesSuffix.length)
-      GraftTable.load(tableDir(base)).deletesTable(spark)
-    } else if (identifier.endsWith(GraftTable.SegmentsSuffix)) {
-      if (GraftTable.exists(tableDir(identifier)))
-        return GraftTable.load(tableDir(identifier)).read(spark)
-      val base = identifier.dropRight(GraftTable.SegmentsSuffix.length)
-      GraftTable.load(tableDir(base)).segmentsTable(spark)
-    } else {
-      GraftTable.load(tableDir(identifier)).read(spark)
+    val dir = tableDir(identifier)
+    MetadataTables.split(identifier).filterNot { case (m, _) =>
+      GraftTable.exists(dir) && (m != MetadataTables.Snapshots ||
+        !GraftTable.load(dir).snapshotsTableEnabled)
+    } match {
+      case Some((m, base)) =>
+        val t = GraftTable.load(tableDir(base))
+        // only __snapshots can be switched off
+        require(m.enabled(t),
+          s"snapshots table disabled for $base (${GraftTable.PropSnapshotsTable}=false)")
+        m.build(t, spark, None)
+      case None => GraftTable.load(dir).read(spark)
     }
   }
 
@@ -128,7 +92,7 @@ final class GraftCatalog(warehouse: String) {
       // deferred like the data view: the log is re-read per query, so the
       // two views stay consistent after later appends
       GraftSnapshotsRelation.dataFrame(spark, t).createOrReplaceTempView(
-        viewName + GraftTable.SnapshotsSuffix)
+        viewName + MetadataTables.Snapshots.suffix)
     }
   }
 }

@@ -5,6 +5,7 @@ import java.util
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.analysis.NoSuchTableException
 import org.apache.spark.sql.connector.catalog._
 import org.apache.spark.sql.connector.expressions.{Expressions, Transform}
 import org.apache.spark.sql.connector.read.ScanBuilder
@@ -131,175 +132,139 @@ class GraftSparkCatalog extends CatalogPlugin with TableCatalog
   override def tableExists(ident: Identifier): Boolean =
     GraftTable.exists(dirFor(ident))
 
-  /** Metadata-table suffixes served on the DSv2 path (the reference's
-    * `__snapshots` naming, V1, extended to the whole metadata family):
-    * each resolves against the BASE table and yields a tiny read-only
-    * table — a REAL table of the suffixed name always wins. The
-    * snapshot-scoped ones also honor `VERSION AS OF` (numeric id or
-    * tag). `__snapshots` respects the same `graft.snapshots.table`
-    * opt-out as the view path. */
-  private val metaTables: Map[String,
-      (GraftTable, SparkSession, Option[Long]) => org.apache.spark.sql.DataFrame] = Map(
-    "__snapshots" -> ((t, s, _) => t.snapshots(s)),
-    "__files" -> ((t, s, v) => t.filesTable(s, v)),
-    "__segments" -> ((t, s, v) => t.segmentsTable(s, v)),
-    "__partitions" -> ((t, s, v) => t.partitionsTable(s, v)),
-    "__deletes" -> ((t, s, v) => t.deletesTable(s, v)),
-    "__refs" -> ((t, s, _) => t.refsTable(s)),
-    "__history" -> ((t, s, _) => t.historyTable(s)),
-    "__all_files" -> ((t, s, _) => t.allFilesTable(s)))
+  /** The metadata table `ident` names ([[MetadataTables]], served on
+    * the DSv2 path too) with its base table, when that base exists. The
+    * caller has already let a REAL table of the full name win. */
+  private def metaBase(ident: Identifier): Option[(MetadataTable, Identifier)] =
+    MetadataTables.split(ident.name())
+      .map { case (m, b) => (m, Identifier.of(ident.namespace(), b)) }
+      .filter { case (_, base) => tableExists(base) }
 
-  /** The file-granular views keep their distributed lineage (V1Scan);
-    * the summary-driven rest stay driver-local row sets. */
-  private val distributedMeta = Set("__files", "__partitions", "__all_files")
+  /** `ident` as metadata table `m` of `t` at `snapshotId` (None:
+    * current). The row-count hint is LAZY: it is only priced when a
+    * scan is actually built — `__all_files`' hint walks every
+    * snapshot's manifest list, and loadTable alone must not pay that
+    * twice (the view build walks them again; the list LRU dedups parses
+    * either way). */
+  private def metaTable(ident: Identifier, m: MetadataTable, t: GraftTable,
+      snapshotId: Option[Long]): Table =
+    new GraftMetadataV2Table(identToName(ident),
+      m.build(t, SparkSession.active, snapshotId),
+      distributed = m.distributed,
+      rowCountHint = () => m.rowHint(t, snapshotId))
 
-  private def loadMeta(
-      ident: Identifier, snapshotId: Option[Long]): Option[Table] =
-    metaTables.collectFirst {
-      case (suffix, mk) if ident.name().endsWith(suffix) &&
-          ident.name().length > suffix.length &&
-          !tableExists(ident) =>
-        val base = Identifier.of(
-          ident.namespace(), ident.name().stripSuffix(suffix))
-        if (!tableExists(base)) return None
-        val t = loadGraft(base)
-        if (suffix == "__snapshots" && !t.snapshotsTableEnabled) return None
-        // row-count hint from the manifest LIST totals (no segment
-        // parse): sizes the distributed views so broadcast decisions
-        // against them stay sane ('__partitions' rows ≤ file totals —
-        // an upper bound is the safe direction)
-        // LAZY: the hint is only priced when a scan is actually built —
-        // __all_files' hint walks every snapshot's manifest list, and
-        // loadTable alone must not pay that twice (the view build walks
-        // them again; the list LRU dedups parses either way)
-        def hint: Option[Long] =
-          if (!distributedMeta(suffix)) None
-          // __all_files spans ALL snapshots — the current list's totals
-          // would UNDERCOUNT (the unsafe direction for broadcast sizing)
-          else if (suffix == "__all_files") Some(t.allFilesRowHint)
-          else snapshotId.flatMap(id => t.log.byId(id))
-            .orElse(t.log.current)
-            .map(s => Manifest.read(s"${t.dir}/${s.manifestList}").totalFiles)
-        new GraftMetadataV2Table(identToName(ident),
-          mk(t, SparkSession.active, snapshotId),
-          distributed = distributedMeta(suffix),
-          rowCountHint = () => hint): Table
-    }
+  /** The shared rule of the `__changes`, `__txn_<name>` and
+    * `__branch_<name>` surfaces: split the name at the LAST `marker`
+    * into (base, rest), resolved only when the base is non-empty and a
+    * real table. The caller has already let a REAL table of the full
+    * name win (no silent shadowing). */
+  private def splitAt(
+      ident: Identifier, marker: String): Option[(Identifier, String)] = {
+    val n = ident.name()
+    val i = n.lastIndexOf(marker)
+    Option.when(i > 0)((Identifier.of(ident.namespace(), n.substring(0, i)),
+        n.substring(i + marker.length)))
+      .filter { case (base, _) => tableExists(base) }
+  }
 
   override def loadTable(ident: Identifier): Table = {
+    if (tableExists(ident)) return loadExisting(ident)
     // `<name>__changes` — the CDC changes table (Iceberg's `t.changes`
-    // analog, suffix-spelled like `__snapshots`): a MICRO_BATCH_READ-only
-    // surface streaming `changesCdc` retraction rows so continuous
-    // pipelines survive UPDATE/DELETE/MERGE. A REAL table of that name
-    // always wins (no silent shadowing).
-    if (!tableExists(ident) && ident.name().endsWith("__changes")) {
-      val base = Identifier.of(
-        ident.namespace(), ident.name().stripSuffix("__changes"))
-      if (base.name().nonEmpty && tableExists(base))
-        return new GraftCdcV2Table(identToName(ident), loadGraft(base))
+    // analog, suffix-spelled like the metadata tables): a
+    // MICRO_BATCH_READ-only surface streaming `changesCdc` retraction
+    // rows so continuous pipelines survive UPDATE/DELETE/MERGE.
+    def changes: Option[Table] = splitAt(ident, "__changes").collect {
+      case (base, "") =>
+        new GraftCdcV2Table(identToName(ident), GraftTable.load(dirFor(base)))
     }
     // `<name>__txn_<txn>` — the STAGED view of `<name>` inside the open
     // named transaction `<txn>` (CALL begin_transaction): reads see the
     // transaction's own commits, INSERT/DML stage into it, and nothing
     // is visible on `<name>` until CALL commit_transaction publishes
-    // every enlisted table atomically. Same suffix discipline as
-    // `__changes`: a REAL table of the full name always wins.
-    if (!tableExists(ident)) {
-      val n = ident.name()
-      val i = n.lastIndexOf("__txn_")
-      if (i > 0) {
-        val base = Identifier.of(ident.namespace(), n.substring(0, i))
-        val txnName = n.substring(i + "__txn_".length)
-        if (txnName.nonEmpty && tableExists(base)) {
-          val txn = GraftTransaction.findNamed(warehouse, txnName)
-            .getOrElse(throw new IllegalArgumentException(
-              s"no open transaction '$txnName' on this catalog — " +
-                s"CALL $name.system.begin_transaction('$txnName') first"))
-          return new GraftV2Table(identToName(ident),
-            txn.tableAt(dirFor(base)), None)
-        }
-      }
+    // every enlisted table atomically.
+    def txn: Option[Table] = splitAt(ident, "__txn_").collect {
+      case (base, txnName) if txnName.nonEmpty =>
+        val txn = GraftTransaction.findNamed(warehouse, txnName)
+          .getOrElse(throw new IllegalArgumentException(
+            s"no open transaction '$txnName' on this catalog — " +
+              s"CALL $name.system.begin_transaction('$txnName') first"))
+        new GraftV2Table(identToName(ident), txn.tableAt(dirFor(base)), None)
     }
     // `<name>__branch_<b>` — the WRITE handle of branch <b>: the
     // SQL-shop write–audit–publish spelling. INSERT/UPDATE/DELETE/MERGE
     // against it stage on the branch (a real GraftTable under
     // `branches/<b>`), `VERSION AS OF 'branch:b'` is the audit read,
     // and `CALL publish_branch` fast-forwards main — which stays
-    // untouched until then. Same suffix discipline as `__changes`: a
-    // REAL table of the full name always wins.
-    if (!tableExists(ident)) {
-      val n = ident.name()
-      val i = n.lastIndexOf("__branch_")
-      if (i > 0) {
-        val base = Identifier.of(ident.namespace(), n.substring(0, i))
-        val bName = n.substring(i + "__branch_".length)
-        if (bName.nonEmpty && tableExists(base)) {
-          val bt = loadGraft(base)
-          require(bt.branches.contains(bName),
-            s"no branch '$bName' on ${identToName(base)} — " +
-              s"CALL $name.system.create_branch first")
-          return new GraftV2Table(identToName(ident), bt.branch(bName), None)
-        }
-      }
+    // untouched until then.
+    def branch: Option[Table] = splitAt(ident, "__branch_").collect {
+      case (base, bName) if bName.nonEmpty =>
+        val bt = GraftTable.load(dirFor(base))
+        require(bt.branches.contains(bName),
+          s"no branch '$bName' on ${identToName(base)} — " +
+            s"CALL $name.system.create_branch first")
+        new GraftV2Table(identToName(ident), bt.branch(bName), None)
     }
-    // SESSION-scoped WAP routing (Iceberg's `write.wap.enabled` table
-    // property + `spark.wap.branch` session conf, graft-spelled): when
-    // the session sets `graft.wap.branch = <b>` and the table OPTS IN
-    // via `graft.wap.enabled = true`, the table name itself resolves to
-    // the branch handle — every read and write of the session lands on
-    // the audit branch until publish, with zero query rewrites. The
-    // property gate keeps a session-global conf from silently rerouting
-    // unrelated tables; a missing branch on an opted-in table refuses
-    // loudly (a typo must never quietly write to main).
-    if (tableExists(ident)) {
-      val wap = try org.apache.spark.sql.SparkSession.active.conf
-        .get("graft.wap.branch", "")
-      catch { case _: Exception => "" }
-      if (wap.nonEmpty) {
-        val t = loadGraft(ident)
-        if (t.properties.get("graft.wap.enabled").contains("true")) {
-          require(t.branches.contains(wap),
-            s"graft.wap.branch = '$wap' is set and ${identToName(ident)} " +
-              s"has graft.wap.enabled, but no branch '$wap' exists — " +
-              "CALL create_branch first (or unset the session conf)")
-          return new GraftV2Table(
-            s"${identToName(ident)}@branch:$wap", t.branch(wap), None)
-        }
-      }
-    }
-    loadMeta(ident, snapshotId = None)
-      .getOrElse(load(ident, snapshotId = None))
+    // metadata tables resolve against the BASE table; an opted-out
+    // `__snapshots` falls through to NoSuchTable
+    def meta: Option[Table] = metaBase(ident)
+      .map { case (m, base) => (m, GraftTable.load(dirFor(base))) }
+      .collect { case (m, t) if m.enabled(t) => metaTable(ident, m, t, None) }
+    changes.orElse(txn).orElse(branch).orElse(meta)
+      .getOrElse(throw new NoSuchTableException(ident))
   }
+
+  /** A table that exists under `ident`'s own name. SESSION-scoped WAP
+    * routing (Iceberg's `write.wap.enabled` table property +
+    * `spark.wap.branch` session conf, graft-spelled): when the session
+    * sets `graft.wap.branch = <b>` and the table OPTS IN via
+    * `graft.wap.enabled = true`, the table name itself resolves to the
+    * branch handle — every read and write of the session lands on the
+    * audit branch until publish, with zero query rewrites. The property
+    * gate keeps a session-global conf from silently rerouting unrelated
+    * tables; a missing branch on an opted-in table refuses loudly (a
+    * typo must never quietly write to main). */
+  private def loadExisting(ident: Identifier): Table = {
+    val t = GraftTable.load(dirFor(ident))
+    val wap = try SparkSession.active.conf.get("graft.wap.branch", "")
+    catch { case _: Exception => "" }
+    if (wap.nonEmpty && t.properties.get("graft.wap.enabled").contains("true")) {
+      require(t.branches.contains(wap),
+        s"graft.wap.branch = '$wap' is set and ${identToName(ident)} " +
+          s"has graft.wap.enabled, but no branch '$wap' exists — " +
+          "CALL create_branch first (or unset the session conf)")
+      new GraftV2Table(s"${identToName(ident)}@branch:$wap", t.branch(wap), None)
+    } else new GraftV2Table(identToName(ident), t, None)
+  }
+
+  /** VERSION AS OF / TIMESTAMP AS OF on a name that is no real table: a
+    * snapshot-scoped metadata table travels like its base table, to the
+    * snapshot `pick` chooses on it (given the base and its name);
+    * table-global ones refuse loudly. */
+  private def loadMetaAt(ident: Identifier)(
+      pick: (GraftTable, String) => Long): Table =
+    metaBase(ident).fold[Table](throw new NoSuchTableException(ident)) {
+      case (m, base) =>
+        require(m.snapshotScoped,
+          s"${m.suffix} is table-global — it has no per-snapshot form")
+        val t = GraftTable.load(dirFor(base))
+        metaTable(ident, m, t, Some(pick(t, identToName(base))))
+    }
 
   /** `VERSION AS OF <v>` — v is a snapshot id, a tag name, a branch
     * name (the branch's CURRENT snapshot — the SQL audit read of the
     * write–audit–publish flow), or the explicit `branch:<name>` /
     * `tag:<name>` prefix forms. A bare name naming BOTH a tag and a
     * branch is ambiguous and refused loudly (use a prefix form) —
-    * resolution order would otherwise silently pick one. */
+    * resolution order would otherwise silently pick one. Metadata
+    * tables take a numeric id or a tag of the base table. */
   override def loadTable(ident: Identifier, version: String): Table = {
-    // snapshot-scoped metadata tables honor VERSION AS OF (numeric id
-    // or tag on the BASE table); table-global ones refuse loudly
-    if (!tableExists(ident)) {
-      val hit = metaTables.keys.find(sfx =>
-        ident.name().endsWith(sfx) && ident.name().length > sfx.length)
-      hit.foreach { sfx =>
-        val base = Identifier.of(
-          ident.namespace(), ident.name().stripSuffix(sfx))
-        if (tableExists(base)) {
-          require(sfx != "__snapshots" && sfx != "__refs" &&
-              sfx != "__history" && sfx != "__all_files",
-            s"$sfx is table-global — it has no per-snapshot form")
-          val bt = loadGraft(base)
-          val id = version.toLongOption.orElse(bt.refs.get(version))
-            .getOrElse(throw new IllegalArgumentException(
-              s"metadata-table version must be a snapshot id or tag, " +
-                s"got '$version'"))
-          return loadMeta(ident, Some(id)).get
-        }
-      }
+    if (!tableExists(ident)) return loadMetaAt(ident) { (bt, _) =>
+      version.toLongOption.orElse(bt.refs.get(version))
+        .getOrElse(throw new IllegalArgumentException(
+          s"metadata-table version must be a snapshot id or tag, " +
+            s"got '$version'"))
     }
-    val t = loadGraft(ident)
+    val t = GraftTable.load(dirFor(ident))
     def branchTable(name: String): Table =
       new GraftV2Table(s"${identToName(ident)}@branch:$name", t.branch(name), None)
     if (version.startsWith("branch:"))
@@ -332,46 +297,25 @@ class GraftSparkCatalog extends CatalogPlugin with TableCatalog
     }
   }
 
-  /** `TIMESTAMP AS OF <t>` — Spark hands micros since epoch. */
+  /** `TIMESTAMP AS OF <t>` — Spark hands micros since epoch. Metadata
+    * tables travel like their base table. */
   override def loadTable(ident: Identifier, timestampMicros: Long): Table = {
-    // snapshot-scoped metadata tables travel like their base table
-    if (!tableExists(ident)) {
-      val hit = metaTables.keys.find(sfx =>
-        ident.name().endsWith(sfx) && ident.name().length > sfx.length)
-      hit.foreach { sfx =>
-        val base = Identifier.of(
-          ident.namespace(), ident.name().stripSuffix(sfx))
-        if (tableExists(base)) {
-          require(sfx != "__snapshots" && sfx != "__refs" &&
-              sfx != "__history" && sfx != "__all_files",
-            s"$sfx is table-global — it has no per-snapshot form")
-          val bt = loadGraft(base)
-          val id = bt.snapshotAsOfTime(timestampMicros / 1000L)
-            .map(_.snapshotId).getOrElse(
-              throw new IllegalArgumentException(
-                s"no snapshot at or before ${timestampMicros / 1000L}ms " +
-                  s"in ${identToName(base)}"))
-          return loadMeta(ident, Some(id)).get
-        }
-      }
+    val ms = timestampMicros / 1000L
+    if (!tableExists(ident)) return loadMetaAt(ident) { (bt, baseName) =>
+      bt.snapshotAsOfTime(ms).map(_.snapshotId).getOrElse(
+        throw new IllegalArgumentException(
+          s"no snapshot at or before ${ms}ms in $baseName"))
     }
-    val t = loadGraft(ident)
-    val snap = t.snapshotAsOfTime(timestampMicros / 1000L).map(_.snapshotId)
+    val t = GraftTable.load(dirFor(ident))
+    val snap = t.snapshotAsOfTime(ms).map(_.snapshotId)
       .getOrElse(throw new IllegalArgumentException(
-        s"no snapshot at or before timestamp ${timestampMicros / 1000L}ms " +
-          s"in ${identToName(ident)}"))
-    load(ident, snapshotId = Some(snap))
+        s"no snapshot at or before timestamp ${ms}ms in ${identToName(ident)}"))
+    new GraftV2Table(identToName(ident), t, Some(snap))
   }
 
   private def loadGraft(ident: Identifier): GraftTable = {
-    if (!tableExists(ident))
-      throw new org.apache.spark.sql.catalyst.analysis.NoSuchTableException(ident)
+    if (!tableExists(ident)) throw new NoSuchTableException(ident)
     GraftTable.load(dirFor(ident))
-  }
-
-  private def load(ident: Identifier, snapshotId: Option[Long]): Table = {
-    val t = loadGraft(ident)
-    new GraftV2Table(identToName(ident), t, snapshotId)
   }
 
   override def createTable(
@@ -1302,31 +1246,30 @@ private[table] object GraftStreamStart {
   }
 }
 
-/** Read-only DSv2 metadata table (`<name>__snapshots` / `__files` /
-  * `__segments` / `__partitions` / `__deletes` / `__refs` on the
-  * standard catalog path — the reference's system-table naming, V1,
-  * extended to the whole family). Stateless: every query re-resolves
-  * through `loadTable`, so a new commit is visible to the very next
-  * query (the V3 discipline).
+/** Read-only DSv2 metadata table: one [[MetadataTables]] entry of a
+  * base table on the standard catalog path — the reference's
+  * system-table naming, V1, extended to the whole family. Stateless:
+  * every query re-resolves through `loadTable`, so a new commit is
+  * visible to the very next query (the V3 discipline).
   *
-  * Two scan shapes, by the view's SCALE:
-  *  - summary-driven views (`__snapshots`/`__segments`/`__deletes`/
-  *    `__refs` — O(commits)/O(segments)/O(entries), bounded at any data
-  *    scale) collapse to a driver-local row set (LocalScan → a
-  *    LocalTableScan; downstream operators still parallelize);
-  *  - file-granular views (`__files`/`__partitions` — O(data files),
-  *    ~1 M rows on a big table) keep their DISTRIBUTED lineage through
-  *    a [[org.apache.spark.sql.connector.read.V1Scan]]: the segment
-  *    shards parse in executor tasks ([[GraftTable.filesTable]]'s
-  *    `entriesRdd`), never as one driver row set on one task.
-  *    `rowCountHint` (manifest-list file totals — no parse) sizes the
-  *    relation so joins against genuinely small metadata still
-  *    broadcast. */
+  * Two scan shapes, by the entry's `distributed` flag (its SCALE):
+  *  - summary-driven views (`__snapshots`, `__segments`, `__deletes`,
+  *    `__refs`, `__history` — O(commits)/O(segments)/O(entries),
+  *    bounded at any data scale) collapse to a driver-local row set
+  *    (LocalScan → a LocalTableScan; downstream operators still
+  *    parallelize);
+  *  - file-granular views (`__files`, `__partitions`, `__all_files` —
+  *    O(data files), ~1 M rows on a big table) keep their DISTRIBUTED
+  *    lineage through a [[org.apache.spark.sql.connector.read.V1Scan]]:
+  *    the segment shards parse in executor tasks, never as one driver
+  *    row set on one task. `rowCountHint` (the entry's manifest-list
+  *    upper bound — no segment parse) sizes the relation so joins
+  *    against genuinely small metadata still broadcast. */
 final class GraftMetadataV2Table(
     tableName: String,
     df: org.apache.spark.sql.DataFrame,
-    distributed: Boolean = false,
-    rowCountHint: () => Option[Long] = () => None)
+    distributed: Boolean,
+    rowCountHint: () => Option[Long])
     extends Table with SupportsRead {
 
   override def name(): String = tableName

@@ -5484,21 +5484,13 @@ final class GraftTable private (
   def allFilesTable(spark: SparkSession): DataFrame = {
     val lg = log
     val td = dir
-    // distinct segment ref -> referencing snapshot ids; inline entries
-    // (small, driver-held) keyed per snapshot directly
+    // distinct segment ref -> referencing snapshot ids
     val bySeg = scala.collection.mutable.LinkedHashMap
       .empty[String, scala.collection.mutable.ArrayBuffer[Long]]
-    val inline = scala.collection.mutable.ArrayBuffer
-      .empty[(DataFileEntry, Long)]
     lg.snapshots.foreach { s =>
-      val m = Manifest.read(s"$dir/${s.manifestList}")
-      m.segments.foreach { seg =>
-        seg.ref match {
-          case Some(r) =>
-            bySeg.getOrElseUpdate(r,
-              scala.collection.mutable.ArrayBuffer.empty) += s.snapshotId
-          case None => seg.files.foreach(f => inline += ((f, s.snapshotId)))
-        }
+      Manifest.read(s"$dir/${s.manifestList}").segmentRefs.foreach { r =>
+        bySeg.getOrElseUpdate(r,
+          scala.collection.mutable.ArrayBuffer.empty) += s.snapshotId
       }
     }
     // referencing-snapshot lists resolve AFTER the reduce through a
@@ -5508,8 +5500,7 @@ final class GraftTable private (
     // sets are O(files × segments-per-file) ints
     val segSeq = bySeg.toSeq
     val idTable: Array[Array[Long]] =
-      (segSeq.map(_._2.distinct.sorted.toArray) ++
-        inline.map { case (_, id) => Array(id) }).toArray
+      segSeq.map(_._2.distinct.sorted.toArray).toArray
     val bc = spark.sparkContext.broadcast(idTable)
     val refRdd =
       if (segSeq.isEmpty)
@@ -5521,15 +5512,7 @@ final class GraftTable private (
         .flatMap { case (rel, i) =>
           Manifest.readSegmentFiles(s"$td/$rel").map(f => (f, Set(i)))
         }
-    val inlineRdd =
-      if (inline.isEmpty)
-        spark.sparkContext.emptyRDD[(DataFileEntry, Set[Int])]
-      else spark.sparkContext.parallelize(
-        inline.toSeq.zipWithIndex.map { case ((f, _), j) =>
-          (f, Set(segSeq.size + j)) },
-        math.min(inline.size,
-          math.max(1, spark.sparkContext.defaultParallelism)))
-    val rows = refRdd.union(inlineRdd)
+    val rows = refRdd
       .map { case (f, idxs) => (f.path, (f, idxs)) }
       // deterministic entry choice: entries for one path are identical
       // today, but nothing enforces it — order the tie-break explicitly
@@ -5551,9 +5534,8 @@ final class GraftTable private (
   }
 
   /** Upper-bound row count for [[allFilesTable]] without a segment
-    * parse: distinct segment fileCounts + inline entries across all
-    * snapshots. A file retained into a fresh segment counts once per
-    * holding segment — an UPPER bound, the safe direction for the
+    * parse: distinct segment fileCounts across all snapshots. A file
+    * retained into a fresh segment counts once per holding segment — an UPPER bound, the safe direction for the
     * V1Scan's broadcast sizing (the current-snapshot totals the other
     * file-granular views use would UNDERCOUNT this all-snapshots view). */
   private[table] def allFilesRowHint: Long = {
@@ -5561,10 +5543,7 @@ final class GraftTable private (
     var n = 0L
     log.snapshots.foreach { s =>
       Manifest.read(s"$dir/${s.manifestList}").segments.foreach { seg =>
-        seg.ref match {
-          case Some(r) => if (seen.add(r)) n += seg.fileCount
-          case None => n += seg.files.size
-        }
+        if (seen.add(seg.ref.get)) n += seg.fileCount
       }
     }
     n
@@ -5606,7 +5585,7 @@ final class GraftTable private (
   def segmentsTable(spark: SparkSession, snapshotId: Option[Long] = None): DataFrame = {
     val rows = resolveSnapshot(snapshotId).toSeq.flatMap { s =>
       Manifest.read(s"$dir/${s.manifestList}").segments.map { seg =>
-        Row(seg.ref.getOrElse(""), seg.fileCount, seg.recordCount,
+        Row(seg.ref.get, seg.fileCount, seg.recordCount,
           seg.sizeBytes)
       }
     }
@@ -6055,14 +6034,6 @@ object GraftTable {
         s" prefix (shredded-variant manifest stat keys) in $dir")
   }
   val PropBloomNdv = "graft.bloom.ndv"
-  val SnapshotsSuffix = "__snapshots"
-  val FilesSuffix = "__files"
-  val PartitionsSuffix = "__partitions"
-  val RefsSuffix = "__refs"
-  val HistorySuffix = "__history"
-  val AllFilesSuffix = "__all_files"
-  val DeletesSuffix = "__deletes"
-  val SegmentsSuffix = "__segments"
 
   /** Deletes system-table schema (pending merge-on-read entries). */
   val DeletesSchema: StructType = StructType(Seq(

@@ -50,6 +50,26 @@ class DeleteStateSpec extends SparkSpecBase {
     assert(DeleteState.of(Map.empty[String, String]).isEmpty)
   }
 
+  test("summary bytes do not depend on the order positional entries were added") {
+    for (n <- Seq(3, 6, 9)) {
+      val targets = (1 to n).map(i =>
+        f"data/part-$i%05d-${i * 7919 % 4096}%03x-0.parquet")
+      def stateOf(order: Seq[String]) = DeleteState(Nil,
+        Seq(GraftTable.PositionalDeletes(
+          order.map(t => t -> t.length.toLong).toMap,
+          order.map(t => t -> t.replace("data/part", "deletes/dv")).toMap)),
+        Nil)
+      val (a, b) = (stateOf(targets), stateOf(targets.reverse))
+      assert(a == b)
+      assert(a.summary == b.summary, s"$n targets")
+      assert(DeleteState.of(a.summary).summary == a.summary)
+      // targets come first and sorted by key
+      val json = a.summary(GraftTable.SummaryPositionalDeletes)
+      val at = targets.sorted.map(t => json.indexOf("\"" + t + "\":"))
+      assert(at.forall(_ >= 0) && at == at.sorted, s"$n targets: $json")
+    }
+  }
+
   test("demote turns covered whole-file drops into rewrites") {
     val old = file("data/part-00003-aa-0.parquet") // ≤ snap 3: covered
     val young = file("data/part-00009-bb-0.parquet") // after every entry
