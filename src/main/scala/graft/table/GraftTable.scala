@@ -1409,8 +1409,10 @@ final class GraftTable private (
     // and the manifest list), and the claim once held
     var claimed = false
     def abandon(written: Seq[String]): Unit = {
-      (newFiles.map(_.path) ++ written)
-        .foreach(r => Files.deleteIfExists(Paths.get(dir, r)))
+      (newFiles.map(_.path) ++ written).foreach { r =>
+        Files.deleteIfExists(Paths.get(dir, r))
+        Manifest.forget(s"$dir/$r")
+      }
       if (claimed) Files.deleteIfExists(marker)
     }
     if (!txnStaged) {
@@ -1480,7 +1482,7 @@ final class GraftTable private (
     // schema types the segment envelopes (derived partition-key stats
     // included), so later predicate-scoped planning can skip whole
     // segments from the list alone.
-    val createdSegs = manifestAssigned.write(s"$dir/$manifestRel",
+    val (written, createdSegs) = manifestAssigned.write(s"$dir/$manifestRel",
       Some(PartitionField.augmentedSchema(schema, partitionFields)))
 
     // carried-summary inheritance (pending-deletes, stream cursors): an
@@ -1512,9 +1514,13 @@ final class GraftTable private (
         SummaryNextRowId -> ridCursor.toString))
     // append to the RE-READ log: a concurrent expireSnapshots may have
     // removed a prefix since `lg` was captured — writing the stale list
-    // would resurrect expired snapshots whose files are already deleted
-    try SnapshotLog(lg2.snapshots :+ snap).write(s"$dir/$logName")
-    catch { case e: Throwable =>
+    // would resurrect expired snapshots whose files are already deleted.
+    // `lg2` is the memo's log for this path when no one else rewrote the
+    // file, so the append extends its bytes instead of re-serializing
+    try {
+      commitCrashAt("log")
+      lg2.append(s"$dir/$logName", snap)
+    } catch { case e: Throwable =>
       abandon(createdSegs :+ manifestRel)
       throw e
     }
@@ -1522,6 +1528,10 @@ final class GraftTable private (
     // pass the nextId re-check) — delete it rather than accumulate one
     // zero-byte marker per commit forever
     if (claimed) Files.deleteIfExists(marker)
+    // only now, with the snapshot published, may the next reader be
+    // handed the written list (an abandoned one is deleted, and a
+    // same-id retry can rewrite its path within the same mtime tick)
+    Manifest.seed(s"$dir/$manifestRel", written)
     snap
   }
 
@@ -3869,7 +3879,10 @@ final class GraftTable private (
         // bytes and must not reclaim them
         (reachable(expired) -- reachable(kept)).all
           .filterNot(_.startsWith("../"))
-          .foreach(p => Files.deleteIfExists(Paths.get(dir, p)))
+          .foreach { p =>
+            Files.deleteIfExists(Paths.get(dir, p))
+            Manifest.forget(s"$dir/$p")
+          }
         expired.map(_.snapshotId)
     }
   }
@@ -3950,7 +3963,10 @@ final class GraftTable private (
           Seq("seg-", "snap-").exists(p.getFileName.toString.startsWith)))
       .filter(p => Files.getLastModifiedTime(p).toMillis < cutoff)
       .filterNot(p => live(p.normalize().toString))
-    orphans.foreach(Files.deleteIfExists(_))
+    orphans.foreach { p =>
+      Files.deleteIfExists(p)
+      Manifest.forget(p.toString)
+    }
     val staged = scala.util.Using.resource(Files.list(Paths.get(dir))) { st =>
       st.iterator().asScala
         .filter { p =>
@@ -6225,6 +6241,10 @@ object GraftTable {
 
   /** Test hook: crash injection at named RTAS publish steps. */
   private[table] var replaceCrashAt: String => Unit = _ => ()
+
+  /** Test hook: failure injection in [[commit]] ("log": the log write,
+    * after the manifest list and its segments are written). */
+  private[table] var commitCrashAt: String => Unit = _ => ()
 
   /** ATOMIC table replacement (`CREATE OR REPLACE TABLE … AS SELECT`):
     * swap the table at `dir` — schema, partitioning, properties AND

@@ -1,6 +1,7 @@
 package graft.table
 
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 import graft.util.Json
 
 /** One data file tracked by a snapshot's manifest.
@@ -173,12 +174,14 @@ final class Manifest private[table] (val segments: Vector[ManifestSegment]) {
     * amortized cost — see [[Manifest.coalesceThreshold]]) so list length
     * stays O(table/segment-target), not O(commits).
     *
-    * Returns the table-root-relative paths of segment files this call
-    * CREATED (for crash-cleanup by the committer). */
+    * Returns the list as written — what a [[Manifest.read]] of
+    * `absPath` would parse, its carried segments the very objects of
+    * this manifest — and the table-root-relative paths of the segment
+    * files this call CREATED (for crash-cleanup by the committer). */
   def write(
       absPath: String,
       envSchema: Option[org.apache.spark.sql.types.StructType] = None)
-      : Seq[String] = {
+      : (Manifest, Seq[String]) = {
     val p = Paths.get(absPath)
     val manifestsDir = p.getParent
     val tableDir = manifestsDir.getParent
@@ -224,7 +227,7 @@ final class Manifest private[table] (val segments: Vector[ManifestSegment]) {
       }
     })
     Json.writeFileAtomic(absPath, Json.write(listObj))
-    created.result()
+    (new Manifest(withRefs), created.result())
   }
 }
 
@@ -256,65 +259,102 @@ object Manifest {
     else big ++ Vector(ManifestSegment.fresh(small.flatMap(_.files)))
   }
 
+  /** A bounded LRU of parsed write-once files, one entry per
+    * (normalized) path, stamped with the file's (size, mtime) when it was
+    * cached: an entry serves only a file with that stamp, so a table
+    * DROPPED AND RECREATED at the same path (tests do this; prod can)
+    * never serves the old table's content. Entries are immutable, safe to
+    * share across threads. */
+  private final class FileCache[A <: AnyRef](cap: Int) {
+    private val map =
+      new java.util.LinkedHashMap[String, (Long, Long, A)](16, 0.75f, true) {
+        override def removeEldestEntry(
+            e: java.util.Map.Entry[String, (Long, Long, A)]): Boolean =
+          size() > cap
+      }
+    /** The entry for `absPath` if it serves the file's current stamp,
+      * else `parse`'s result, cached under that stamp. */
+    def apply(absPath: String)(parse: => A): A = {
+      val key = norm(absPath)
+      val st = stamp(absPath)
+      synchronized(Option(map.get(key))).collect {
+        case (size, mtime, v) if (size, mtime) == st => v
+      }.getOrElse {
+        val v = parse
+        synchronized(map.put(key, (st._1, st._2, v)))
+        v
+      }
+    }
+    def put(absPath: String, v: A): Unit = {
+      val (size, mtime) = stamp(absPath)
+      synchronized(map.put(norm(absPath), (size, mtime, v)): Unit)
+    }
+    def remove(absPath: String): Unit =
+      synchronized(map.remove(norm(absPath)): Unit)
+    def paths: Set[String] = synchronized(map.keySet.asScala.toSet)
+  }
+
+  private def norm(absPath: String): String =
+    Paths.get(absPath).normalize().toString
+
+  private def stamp(absPath: String): (Long, Long) = {
+    val attrs = Files.readAttributes(Paths.get(absPath),
+      classOf[java.nio.file.attribute.BasicFileAttributes])
+    (attrs.size(), attrs.lastModifiedTime().toMillis)
+  }
+
   /** Parsed-segment cache. Segment files are write-once (named by the
     * claimed snapshot id + a random token; losers clean up), so a repeat
     * scan skips the O(files) JSON parse on the driver — at 100 TB that
-    * parse is the per-query planning floor. The key carries (size,
-    * mtime) so a table DROPPED AND RECREATED at the same path (tests do
-    * this; prod can) never serves the old table's file list. Bounded
-    * LRU; entries are immutable, safe to share across threads. */
+    * parse is the per-query planning floor. Never seeded by a write: a
+    * fresh segment is parsed on its first read. */
   private val CacheCap = 256
-  private val cache =
-    new java.util.LinkedHashMap[(String, Long, Long), Vector[DataFileEntry]](
-      16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, Long, Long), Vector[DataFileEntry]])
-          : Boolean = size() > CacheCap
-    }
-
-  private def cacheKey(absPath: String): (String, Long, Long) = {
-    val attrs = Files.readAttributes(Paths.get(absPath),
-      classOf[java.nio.file.attribute.BasicFileAttributes])
-    (absPath, attrs.size(), attrs.lastModifiedTime().toMillis)
-  }
-
-  private def cachedFiles(absPath: String)(
-      parse: String => Vector[DataFileEntry]): Vector[DataFileEntry] = {
-    val key = cacheKey(absPath)
-    val hit = cache.synchronized(Option(cache.get(key)))
-    hit.getOrElse {
-      val v = parse(Files.readString(Paths.get(absPath)))
-      cache.synchronized(cache.put(key, v))
-      v
-    }
-  }
+  private val cache = new FileCache[Vector[DataFileEntry]](CacheCap)
 
   /** Parsed manifest-LIST cache. Lists are write-once like segments
     * (`snap-<id>.json`, atomic publish), and the hot paths — loadTable
-    * per SQL query, scan planning, stream pacing — all start with a
-    * `Manifest.read` of the current list; the (size, mtime)-keyed hit
-    * skips the O(segments) JSON parse. A cached [[Manifest]] is
-    * immutable and its lazy segment thunks are themselves backed by the
-    * segment cache, so sharing one object across readers only improves
-    * locality. */
-  private val listCache =
-    new java.util.LinkedHashMap[(String, Long, Long), Manifest](
-      16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, Long, Long), Manifest]): Boolean =
-        size() > CacheCap
-    }
+    * per SQL query, scan planning, stream pacing, the next commit's
+    * parent — all start with a `Manifest.read` of the current list; a
+    * hit skips the O(segments) JSON parse. A commit [[seed]]s the list it
+    * wrote once its snapshot is published, so the lists one writer
+    * commits share their carried segments (descriptors and envelopes)
+    * instead of each parse holding its own copies. A cached [[Manifest]]
+    * is immutable and its lazy segment thunks are themselves backed by
+    * the segment cache, so sharing one object across readers only
+    * improves locality. */
+  private val listCache = new FileCache[Manifest](CacheCap)
+
+  /** Hand the list a commit wrote at `absPath` to the next reader. Call
+    * only after the snapshot naming it is published: an unpublished list
+    * can be deleted and rewritten at the same path and stamp. */
+  private[table] def seed(absPath: String, written: Manifest): Unit =
+    listCache.put(absPath, written)
+
+  /** Drop every cached parse of `absPath` — called for each file a
+    * commit abandons, expire reclaims or the orphan sweep deletes, so no
+    * cache entry outlives its file. */
+  private[table] def forget(absPath: String): Unit = {
+    listCache.remove(absPath)
+    cache.remove(absPath)
+  }
+
+  /** Normalized paths of every cached list and segment (tests). */
+  private[table] def cachedPaths: Set[String] = listCache.paths ++ cache.paths
 
   /** Read a snapshot's manifest list: lazy segments, so a caller that
     * never touches `.files` (an append commit, expire's ref counting)
     * reads only the list. */
-  def read(absPath: String): Manifest = {
+  def read(absPath: String): Manifest =
+    listCache(absPath) {
+      listParses.incrementAndGet()
+      parseList(absPath)
+    }
+
+  /** Parse the list at `absPath` from disk, bypassing the cache. */
+  private[table] def parseList(absPath: String): Manifest = {
     val tableDir = Paths.get(absPath).getParent.getParent.toString
-    val key = cacheKey(absPath)
-    listCache.synchronized(Option(listCache.get(key))).foreach(m => return m)
-    listParses.incrementAndGet()
     val obj = Json.parseObject(Files.readString(Paths.get(absPath)))
-    val parsed = new Manifest(obj("segments").asInstanceOf[Seq[Any]].map { s =>
+    new Manifest(obj("segments").asInstanceOf[Seq[Any]].map { s =>
       val m = s.asInstanceOf[Map[String, Any]]
       val env = m.get("stats").map(_.asInstanceOf[Map[String, Any]]
         .map { case (c, raw) =>
@@ -335,8 +375,6 @@ object Manifest {
         m("size_bytes").asInstanceOf[Long],
         env)
     }.toVector)
-    listCache.synchronized(listCache.put(key, parsed): Unit)
-    parsed
   }
 
   /** Manifest-LIST parse counter (cache misses only) — observable by
@@ -353,10 +391,10 @@ object Manifest {
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
   private[table] def readSegmentFiles(absPath: String): Vector[DataFileEntry] =
-    cachedFiles(absPath) { s =>
+    cache(absPath) {
       if (parsedSegmentPaths.size > 4096) parsedSegmentPaths.clear()
       parsedSegmentPaths.add(absPath)
-      parseEntries(Json.parseObject(s))
+      parseEntries(Json.parseObject(Files.readString(Paths.get(absPath))))
     }
 
   private def parseEntries(obj: Map[String, Any]): Vector[DataFileEntry] =

@@ -18,12 +18,14 @@ final case class Snapshot(
     summary: Map[String, String])
 
 /** The append-only snapshot log (`snapshots.json` at the table root),
-  * one entry per commit — data volume lives in parquet, not here. Each
-  * commit rewrites the whole file and parses it back: O(history) bytes,
-  * about 2–3 ms per commit at 300 snapshots (91 KB). Reads skip the
-  * parse when the bytes equal the ones last parsed for that path
-  * ([[SnapshotLog.read]]), so a re-read of an unchanged log costs one
-  * file read and a byte compare.
+  * one entry per commit — data volume lives in parquet, not here. The
+  * file is one JSON array. A commit whose base is the log this JVM last
+  * read or wrote at the path extends those bytes by its one entry
+  * ([[append]]: O(entry) serialization, no parse); other rewrites
+  * (expire, transaction and RTAS publishes, a base another writer
+  * changed) serialize every entry. Every write leaves its bytes and its
+  * log in the read memo, so the next [[SnapshotLog.read]] of an
+  * unchanged log costs one file read and a byte compare.
   */
 final case class SnapshotLog(snapshots: Seq[Snapshot]) {
 
@@ -33,29 +35,40 @@ final case class SnapshotLog(snapshots: Seq[Snapshot]) {
 
   def nextId: Long = snapshots.map(_.snapshotId).maxOption.getOrElse(0L) + 1
 
-  def write(absPath: String): Unit = {
-    val arr = snapshots.map { s =>
-      Map(
-        "snapshot_id" -> s.snapshotId,
-        "parent_id" -> s.parentId.map(Long.box).orNull,
-        "committed_at" -> s.committedAt,
-        "operation" -> s.operation,
-        "manifest_list" -> s.manifestList,
-        "summary" -> s.summary)
+  def write(absPath: String): Unit =
+    SnapshotLog.publish(absPath, Json.write(snapshots.map(SnapshotLog.toJson))
+      .getBytes(StandardCharsets.UTF_8), this)
+
+  /** Publish this log plus `snap` at `absPath` and return the new log.
+    * When the memo's entry for the path is this very log, its bytes are
+    * the file's last-seen bytes: the new file is them with `snap`'s entry
+    * spliced in before the closing `]`. Otherwise a full [[write]]. */
+  def append(absPath: String, snap: Snapshot): SnapshotLog = {
+    val next = SnapshotLog(snapshots.toVector :+ snap)
+    SnapshotLog.memoOf(absPath).filter(_.log eq this).map(_.bytes) match {
+      case Some(prior) if snapshots.nonEmpty && prior.last == ']' =>
+        val entry = Json.write(SnapshotLog.toJson(snap))
+          .getBytes(StandardCharsets.UTF_8)
+        val out = java.util.Arrays.copyOf(prior, prior.length + entry.length + 1)
+        out(prior.length - 1) = ','
+        System.arraycopy(entry, 0, out, prior.length, entry.length)
+        out(out.length - 1) = ']'
+        SnapshotLog.publish(absPath, out, next)
+      case _ => next.write(absPath)
     }
-    Json.writeFileAtomic(absPath, Json.write(arr))
+    next
   }
 }
 
 object SnapshotLog {
   val empty: SnapshotLog = SnapshotLog(Seq.empty)
 
-  /** Last parse per log path: the bytes it was parsed from and the
-    * result. Keyed on CONTENT, not (size, mtime) like [[Manifest]]'s
-    * caches: `snapshots.json` is rewritten in place, and a rewrite
-    * within the filesystem's mtime granularity can keep both the size
-    * and the mtime. Bounded LRU; entries are immutable, safe to share
-    * across threads. */
+  /** Last parse or write per log path: the file's bytes and their log.
+    * Keyed on CONTENT, not (size, mtime) like [[Manifest]]'s caches:
+    * `snapshots.json` is rewritten in place, and a rewrite within the
+    * filesystem's mtime granularity can keep both the size and the
+    * mtime. Bounded LRU; entries are immutable, safe to share across
+    * threads. */
   private final case class Parsed(bytes: Array[Byte], log: SnapshotLog)
   private val MemoCap = 64
   private val memo =
@@ -65,30 +78,41 @@ object SnapshotLog {
         size() > MemoCap
     }
 
+  private def memoOf(absPath: String): Option[Parsed] =
+    memo.synchronized(Option(memo.get(absPath)))
+
+  /** Write `bytes` (the serialization of `log`) at `absPath`, then seed
+    * the memo: the writer's next read is a byte compare, not a parse. */
+  private def publish(absPath: String, bytes: Array[Byte], log: SnapshotLog): Unit = {
+    Json.writeFileAtomic(absPath, bytes)
+    memo.synchronized(memo.put(absPath, Parsed(bytes, log)))
+  }
+
   /** Log parse counter (memo misses only) — observable by specs
-    * asserting a commit parses the log at most once per attempt. */
+    * asserting a same-handle commit never parses the log it wrote. */
   private[table] val parses = new java.util.concurrent.atomic.AtomicLong
 
   /** Read the log at `absPath`. Always reads the file's bytes; parses
-    * them only when they differ from those last parsed for the path. */
+    * them only when they differ from those last parsed or written for
+    * the path. */
   def read(absPath: String): SnapshotLog = {
     val p = Paths.get(absPath)
     val bytes =
       try Files.readAllBytes(p)
       catch { case _: java.nio.file.NoSuchFileException => return empty }
-    val hit = memo.synchronized(Option(memo.get(absPath)))
-    hit.filter(h => java.util.Arrays.equals(h.bytes, bytes)) match {
+    memoOf(absPath).filter(h => java.util.Arrays.equals(h.bytes, bytes)) match {
       case Some(h) => h.log
       case None =>
         parses.incrementAndGet()
-        val parsed = parse(new String(bytes, StandardCharsets.UTF_8))
+        val parsed = parse(bytes)
         memo.synchronized(memo.put(absPath, Parsed(bytes, parsed)))
         parsed
     }
   }
 
-  private def parse(text: String): SnapshotLog = {
-    val arr = Json.parse(text).asInstanceOf[Seq[Any]]
+  private[table] def parse(bytes: Array[Byte]): SnapshotLog = {
+    val arr = Json.parse(new String(bytes, StandardCharsets.UTF_8))
+      .asInstanceOf[Seq[Any]]
     SnapshotLog(arr.map { e =>
       val m = e.asInstanceOf[Map[String, Any]]
       Snapshot(
@@ -100,6 +124,14 @@ object SnapshotLog {
         m.getOrElse("summary", Map.empty[String, Any])
           .asInstanceOf[Map[String, Any]]
           .map { case (k, v) => k -> v.toString })
-    })
+    }.toVector)
   }
+
+  private def toJson(s: Snapshot): Map[String, Any] = Map(
+    "snapshot_id" -> s.snapshotId,
+    "parent_id" -> s.parentId.map(Long.box).orNull,
+    "committed_at" -> s.committedAt,
+    "operation" -> s.operation,
+    "manifest_list" -> s.manifestList,
+    "summary" -> s.summary)
 }

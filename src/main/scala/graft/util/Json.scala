@@ -20,13 +20,17 @@ object Json {
     * truncated half-write, and concurrent writers cannot install each
     * other's partial temp files. Metadata files (snapshot log, manifests,
     * feed cursors) are replaced through this. */
-  def writeFileAtomic(absPath: String, content: String): Unit = {
+  def writeFileAtomic(absPath: String, content: String): Unit =
+    writeFileAtomic(absPath,
+      content.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+
+  def writeFileAtomic(absPath: String, bytes: Array[Byte]): Unit = {
     val target = java.nio.file.Paths.get(absPath)
     if (target.getParent != null) java.nio.file.Files.createDirectories(target.getParent)
     val tmp = java.nio.file.Files.createTempFile(
       target.getParent, target.getFileName.toString + ".", ".tmp")
     try {
-      java.nio.file.Files.writeString(tmp, content)
+      java.nio.file.Files.write(tmp, bytes)
       java.nio.file.Files.move(tmp, target,
         java.nio.file.StandardCopyOption.REPLACE_EXISTING,
         java.nio.file.StandardCopyOption.ATOMIC_MOVE)

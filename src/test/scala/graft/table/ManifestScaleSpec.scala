@@ -234,7 +234,7 @@ class ManifestScaleSpec extends SparkSpecBase {
         Some(0L), Some(100L))))
     val n = 20000
     // snapshot 1: the unavoidable one-time full write
-    val created1 = Manifest((1 to n).map(entry))
+    val (_, created1) = Manifest((1 to n).map(entry))
       .write(s"$dir/manifests/snap-00001.json")
     def bytes(rels: Seq[String], list: String): Long =
       rels.map(r => java.nio.file.Files.size(
@@ -246,7 +246,7 @@ class ManifestScaleSpec extends SparkSpecBase {
     val t0 = System.nanoTime()
     val m2 = Manifest.read(s"$dir/manifests/snap-00001.json")
       .append(Seq(entry(n + 1)))
-    val created2 = m2.write(s"$dir/manifests/snap-00002.json")
+    val (_, created2) = m2.write(s"$dir/manifests/snap-00002.json")
     val commitMs = (System.nanoTime() - t0) / 1e6
     val appendBytes = bytes(created2, s"$dir/manifests/snap-00002.json")
 

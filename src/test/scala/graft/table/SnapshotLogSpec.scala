@@ -15,8 +15,8 @@ import graft.SparkSpecBase
 
 /** [[SnapshotLog.read]] parses only when the log's bytes change: every
   * rewrite — same-length, shrinking, rolled back, or a racing handle's —
-  * must read back as the new log, and a commit parses the log at most
-  * once per attempt. */
+  * must read back as the new log, and a handle's commit never parses the
+  * log it wrote itself. */
 class SnapshotLogSpec extends SparkSpecBase {
 
   private val schema = StructType(Seq(
@@ -117,20 +117,20 @@ class SnapshotLogSpec extends SparkSpecBase {
     }
     (0L until 3L).foreach(i =>
       t.commitStreamFiles(Seq(staged(i)), "sink", i, Some(1000L + i)))
-    // one attempt: the log changed since the last commit read it, so
-    // one parse; commit()'s post-claim re-read is a byte compare
+    // the last commit left its bytes and log in the memo: both of this
+    // attempt's reads are byte compares
     val rel = staged(3L)
     val before = SnapshotLog.parses.get()
     assert(t.commitStreamFiles(Seq(rel), "sink", 3L).isDefined)
-    assert(SnapshotLog.parses.get() - before <= 1)
+    assert(SnapshotLog.parses.get() == before)
     // a replayed batch reads the log once and commits nothing
     val dup = staged(3L)
     val beforeReplay = SnapshotLog.parses.get()
     assert(t.commitStreamFiles(Seq(dup), "sink", 3L).isEmpty)
-    assert(SnapshotLog.parses.get() - beforeReplay <= 1)
+    assert(SnapshotLog.parses.get() == beforeReplay)
     assert(!Files.exists(Paths.get(t.dir, dup)))
     // a claim held elsewhere fails all six attempts; the log never
-    // changes, so none of them parses it again
+    // changes, so none of them parses it
     val nextId = t.log.nextId
     val marker = Paths.get(t.dir, "manifests", f".commit-$nextId%05d")
     Files.createFile(marker)
@@ -139,7 +139,7 @@ class SnapshotLogSpec extends SparkSpecBase {
     intercept[ConcurrentModificationException] {
       t.commitStreamFiles(Seq(held), "sink", 4L)
     }
-    assert(SnapshotLog.parses.get() - beforeHeld <= 1)
+    assert(SnapshotLog.parses.get() == beforeHeld)
     assert(!Files.exists(Paths.get(t.dir, held)))
     Files.delete(marker)
     assert(t.commitStreamFiles(Seq(staged(4L)), "sink", 4L).isDefined)
